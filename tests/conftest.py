@@ -49,3 +49,27 @@ def duck():
         )
     yield con
     con.close()
+
+
+def job_names(spark, action) -> list[str]:
+    """Run ``action()`` under a job group of its own and return the name
+    of every Spark job it ran (the call site of the job's first stage,
+    e.g. ``parquet at …`` for a listing or schema-inference job)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store is fed by the async listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    names = []
+    for job_id in sorted(tracker.getJobIdsForGroup(group)):
+        stage = tracker.getStageInfo(min(tracker.getJobInfo(job_id).stageIds))
+        names.append(stage.name if stage else "")
+    return names

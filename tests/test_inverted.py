@@ -529,3 +529,80 @@ def test_partial_append_visibility_contract(spark, tmp_path):
     got = bm25_search_inverted(spark, compacted, ["spark", "plans"], k=10).collect()
     want = bm25_search_inverted(spark, clean, ["spark", "plans"], k=10).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
+
+
+def _bucket_dirs(path) -> set[int]:
+    import os
+
+    return {int(n.split("=")[1]) for n in os.listdir(path) if n.startswith("bucket=")}
+
+
+def test_keyword_search_runs_no_parquet_job(spark, tmp_path):
+    """A keyword question lists only its terms' buckets and reads the
+    stats row with its declared schema: with more bucket directories
+    than Spark's parallel-discovery threshold (32), neither a listing
+    job nor a footer schema-inference job (both named ``parquet at …``)
+    runs per question."""
+    from tests.conftest import job_names
+
+    from vector_db_example_spark.index.inverted import bm25_search_inverted_batch
+
+    # 300 distinct letter-only words, so the postings fill > 32 buckets
+    words = [a + b + c for a in "abc" for b in "defghijklm" for c in "nopqrstuvw"]
+    docs = spark.createDataFrame(
+        [(i, f"vector {w} stream " + "window " * (i % 3)) for i, w in enumerate(words)],
+        "doc_id long, text string",
+    )
+    idx = build_inverted_index(docs, str(tmp_path / "idx"), n_buckets=64)
+    assert len(_bucket_dirs(idx.postings_path)) > 32
+
+    rows = []
+    names = job_names(
+        spark,
+        lambda: rows.extend(
+            bm25_search_inverted(spark, idx, ("vector", "stream"), k=10).collect()
+        ),
+    )
+    assert rows
+    assert names and not [n for n in names if n.startswith("parquet")], names
+    names = job_names(
+        spark,
+        lambda: bm25_search_inverted_batch(
+            spark, idx, {1: ["vector"], 2: ["stream", "window"]}, k=5
+        ).collect(),
+    )
+    assert names and not [n for n in names if n.startswith("parquet")], names
+
+
+def test_search_over_absent_bucket_then_append(spark, tmp_path):
+    """A query term whose bucket has no directory returns no rows, with
+    the schema of a normal answer. No listing is cached on the handle:
+    an append that creates that bucket directory is visible to the next
+    search on the same handle, scored as a full build scores it."""
+    import zlib
+
+    from vector_db_example_spark.functions.text import extract_tokens
+
+    docs = load_table(spark, SF_SMOKE, "documents").filter(F.col("doc_id") < 50)
+    idx = build_inverted_index(
+        docs.filter(F.col("doc_id") == 0), str(tmp_path / "idx"), n_buckets=64
+    )
+    rest = docs.filter(F.col("doc_id") > 0)
+    terms = sorted(
+        r.t
+        for r in rest.select(F.explode(extract_tokens(F.col("text"))).alias("t"))
+        .distinct()
+        .collect()
+    )
+    present = _bucket_dirs(idx.postings_path)
+    term = next(t for t in terms if zlib.crc32(t.encode("utf-8")) % 64 not in present)
+    known = spark.read.parquet(idx.postings_path).head().term
+    ref = bm25_search_inverted(spark, idx, [known], k=10)
+    none = bm25_search_inverted(spark, idx, [term], k=10)
+    assert ref.collect() and none.collect() == [] and none.schema == ref.schema
+    assert sparse_dot_topk(spark, idx, {term: 1.0}, k=10).collect() == []
+
+    append_to_inverted_index(idx, rest)
+    got = bm25_search_inverted(spark, idx, [term], k=10).collect()
+    full = build_inverted_index(docs, str(tmp_path / "full"), n_buckets=64)
+    assert got and got == bm25_search_inverted(spark, full, [term], k=10).collect()

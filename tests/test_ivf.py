@@ -844,7 +844,7 @@ def test_batch_scaffold_dedupes_probe_partitions(spark, tmp_path):
 
     def run(probes_for):
         hits = batch_topk_over_layout(
-            layout,
+            lambda cells: layout.filter(F.col("cell_id").isin(cells)),
             partition_col="cell_id",
             id_col="vec_id",
             vector_col="embedding",
@@ -1019,3 +1019,93 @@ def test_pq_empty_raises_and_explicit_codebook_skips_training(spark, tmp_path):
     )
     assert cb is codebook
     assert idx.nlist == 1
+
+
+def _cell_dirs(path) -> set[int]:
+    import os
+
+    return {int(n.split("=")[1]) for n in os.listdir(path) if n.startswith("cell_id=")}
+
+
+def test_search_lists_only_probed_cells_in_one_job(spark, tmp_path):
+    """A question lists only the cells it probes. With more cell
+    directories than Spark's parallel-discovery threshold (32), reading
+    the layout root would run a 1-task-per-cell listing job per
+    question; ivf_search runs exactly one job (the pruned scan), and the
+    batch search runs no ``parquet`` (listing or schema) job at all."""
+    from conftest import job_names
+
+    from vector_db_example_spark.index.ivf import (
+        build_ivf_index,
+        ivf_search,
+        ivf_search_batch,
+    )
+    from vector_db_example_spark.sources.tables import load_table
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    index = build_ivf_index(emb, path=str(tmp_path / "ivf48"), nlist=48)
+    assert len(_cell_dirs(tmp_path / "ivf48")) > 32
+    q = _qvec(spark, 11)
+
+    # the search is built inside the job group: the layout is listed
+    # when the frame is made, not when it is collected
+    rows = []
+    names = job_names(
+        spark,
+        lambda: rows.extend(ivf_search(spark, index, q, k=10, nprobe=4).collect()),
+    )
+    assert len(names) == 1, names
+    assert len(rows) == 10
+
+    queries = [(1, q), (2, _qvec(spark, 42))]
+    names = job_names(
+        spark, lambda: ivf_search_batch(spark, index, queries, k=5, nprobe=4).collect()
+    )
+    assert names and not [n for n in names if n.startswith("parquet")], names
+
+
+def test_search_over_emptied_cell_then_append(spark, tmp_path):
+    """A probe list that hits a cell ivf_delete emptied (its directory is
+    removed) answers over the cells that remain; one that hits only that
+    cell returns no rows, with the schema of a normal answer. No listing
+    is cached on the handle: an ivf_append that recreates the directory
+    is visible to the next search on the same handle."""
+    from vector_db_example_spark.index.ivf import (
+        build_ivf_index,
+        ivf_append,
+        ivf_delete,
+        ivf_search,
+        ivf_search_batch,
+        nearest_cells,
+    )
+    from vector_db_example_spark.operators.knn import knn_exact
+    from vector_db_example_spark.sources.tables import load_table
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    index = build_ivf_index(emb, path=str(tmp_path / "ivf"), nlist=8)
+    layout = spark.read.parquet(index.path)
+    cell = layout.filter(F.col("vec_id") == 7).head().cell_id
+    victims = [r.vec_id for r in layout.filter(F.col("cell_id") == cell).collect()]
+    assert ivf_delete(spark, index, victims) == len(victims)
+    assert cell not in _cell_dirs(tmp_path / "ivf")
+
+    q = _qvec(spark, 7)
+    got = ivf_search(spark, index, q, k=10, nprobe=8)
+    want = knn_exact(
+        emb.filter(~F.col("vec_id").isin(victims)), q, k=10, score_threshold=None
+    )
+    assert [(r.vec_id, round(r.distance, 9)) for r in got.collect()] == [
+        (r.vec_id, round(r.distance, 9)) for r in want.collect()
+    ]
+
+    centroid = index.centroids[cell].tolist()
+    assert nearest_cells(index, centroid, 1) == [cell]
+    none = ivf_search(spark, index, centroid, k=10, nprobe=1)
+    assert none.collect() == [] and none.schema == got.schema
+    batch = ivf_search_batch(spark, index, [(1, centroid)], k=5, nprobe=1)
+    assert batch.collect() == []
+
+    ivf_append(index, emb.filter(F.col("vec_id") == 7))
+    assert cell in _cell_dirs(tmp_path / "ivf")
+    hit = ivf_search(spark, index, q, k=1, nprobe=8).head()
+    assert (hit.vec_id, hit.distance) == (7, 0.0)

@@ -1,8 +1,8 @@
 """Shared scaffolding for batched layout search (IVF cells, LSH buckets).
 
-Both batch paths have the same shape — derive the output schema from the
-layout footer, guard empty/duplicate batches, prune ONE scan to the
-union of every query's probed partitions, run an Arrow distance kernel
+Both batch paths have the same shape — guard empty/duplicate batches,
+prune ONE scan to the union of every query's probed partitions (whose
+schema types the output), run an Arrow distance kernel
 grouped by partition value (each row scored only for the queries probing
 its partition), and keep k per query with a rank window. Only the probe
 computation and the distance fold differ, so they are injected; keeping
@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 
 def batch_topk_over_layout(
-    layout: DataFrame,
+    read_probed: Callable[[list[int]], DataFrame],
     *,
     partition_col: str,
     id_col: str,
@@ -36,16 +36,17 @@ def batch_topk_over_layout(
 ) -> DataFrame:
     """Batched top-k against a partition-pruned layout scan.
 
-    ``layout`` must be the ONE ``spark.read.parquet`` of the layout
-    (reused here for the footer-only schema probe and the pruned scan —
-    a second read would re-list the partition directories on the search
-    hot path). ``probes_for(vec)`` returns the partition values a query
-    probes; values are deduplicated here, so a probe list that names the
-    same partition twice still scores each row once. Partition values and
-    query ids must be int-castable (they are carried as int64 through the
-    Arrow kernel and the ``isin`` pruning filter) — a layout with a
-    string partition column needs its own scaffold. ``make_distance_block(Q)`` is called once with the stacked
-    (nq, dim) float64 query matrix and returns
+    ``read_probed(values)`` is called ONCE with the sorted union of every
+    query's probed partition values and returns the layout pruned to
+    them (sources/tables.py::read_layout: only those directories are
+    listed and read); its schema also types the output. ``probes_for(vec)``
+    returns the partition values a query probes; values are deduplicated
+    here, so a probe list that names the same partition twice still
+    scores each row once. Partition values and query ids must be
+    int-castable (they are carried as int64 through the Arrow kernel and
+    the ``isin`` pruning filter) — a layout with a string partition
+    column needs its own scaffold. ``make_distance_block(Q)`` is called
+    once with the stacked (nq, dim) float64 query matrix and returns
     ``block(Xp, qi) -> (rows, len(qi))`` distances for a partition's row
     block against the query subset at positions ``qi`` — its fold must
     be bit-identical to the caller's JVM expression form so exact-probe
@@ -55,25 +56,12 @@ def batch_topk_over_layout(
     """
     from ..functions.vector import score_from_distance
 
-    id_type = layout.schema[id_col].dataType.simpleString()
-    kernel_schema = f"query_id long, `{id_col}` {id_type}, distance double"
-    out_cols = ["query_id", id_col, "distance", "score", "rank"]
-    if not queries:
-        # np.vstack([]) below would raise; return an empty frame with
-        # the output schema instead (same contract as knn_batch).
-        return layout.sparkSession.createDataFrame(
-            [], kernel_schema + ", score double, rank int"
-        )
     qid_list = [int(qid) for qid, _ in queries]
     # deduplicate on the EMITTED (truncated-to-int) ids: two float qids
     # that collide after int() would otherwise pass a raw-value check
     # and silently merge their candidate sets under one query_id
     if len(set(qid_list)) != len(queries):
         raise ValueError("duplicate query ids in batch")
-    Q = np.vstack(
-        [np.asarray([float(x) for x in vec], dtype=np.float64) for _, vec in queries]
-    )
-    qids_arr = np.asarray(qid_list, dtype=np.int64)
     # partition value → positions of the queries probing it (tiny;
     # rides the UDF closure like the centroid/plane matrices do)
     probe_positions: dict[int, list[int]] = {}
@@ -83,10 +71,20 @@ def batch_topk_over_layout(
         # partition would be scored (and ranked) twice for the query.
         for part in {int(p) for p in probes_for(vec)}:
             probe_positions.setdefault(part, []).append(pos)
-
-    pruned = layout.filter(
-        F.col(partition_col).isin(sorted(probe_positions))
+    pruned = read_probed(sorted(probe_positions))
+    id_type = pruned.schema[id_col].dataType.simpleString()
+    kernel_schema = f"query_id long, `{id_col}` {id_type}, distance double"
+    out_cols = ["query_id", id_col, "distance", "score", "rank"]
+    if not queries:
+        # np.vstack([]) below would raise; return an empty frame with
+        # the output schema instead (same contract as knn_batch).
+        return pruned.sparkSession.createDataFrame(
+            [], kernel_schema + ", score double, rank int"
+        )
+    Q = np.vstack(
+        [np.asarray([float(x) for x in vec], dtype=np.float64) for _, vec in queries]
     )
+    qids_arr = np.asarray(qid_list, dtype=np.int64)
     if live is not None:
         pruned = live(pruned)
     block = make_distance_block(Q)

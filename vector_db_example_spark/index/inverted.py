@@ -9,7 +9,13 @@ the index inverts that: postings `(term, doc_id, tf)` are written
 partitioned by `bucket = crc32(term) % n_buckets`, so a query's reads
 are the partitions of ITS OWN terms — partition pruning at the parquet
 source (pinned in tests/test_plans.py), cost proportional to the query
-terms' posting lists, not the corpus.
+terms' posting lists, not the corpus. The file listing is query-scoped
+too: a question lists the postings root once on the driver and reads
+only its terms' ``bucket=`` directories, so its listing cost is
+proportional to the query's buckets, not ``n_buckets`` (Spark's own
+discovery of the root would list every bucket, as a parallel listing
+job above 32 of them), and the 1-row stats table is read with its
+declared schema instead of an inferred one.
 
 Alongside the postings the build stores the two scoring side-tables BM25
 needs: per-doc token lengths (`doclens/`, doc-partitioned like any other
@@ -53,7 +59,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .. import fsio
 from ..functions.text import extract_tokens
 from ..operators.bm25 import bm25_score_expr, bm25_score_expr_for
-from ..sources.tables import append_repartition
+from ..sources.tables import append_repartition, read_layout
+
+#: Declared schema of the 1-row ``stats/`` table: reads name it instead
+#: of inferring it, which would cost a footer-reading Spark job.
+_STATS_SCHEMA = "__n double, __tot double"
 
 
 @dataclass(frozen=True)
@@ -120,17 +130,21 @@ class InvertedIndex:
         return cls(path=path, **meta)
 
 
-def _read_postings(spark: SparkSession, index: InvertedIndex) -> DataFrame:
-    """Read the bucket-partitioned postings with the persisted schema:
-    identical plan while buckets exist (pruning untouched), well-typed
-    EMPTY frame when no posting was ever written (empty build) or when
-    compaction/merge folded every document away."""
-    if index.postings_schema:
-        from pyspark.sql.types import StructType
+def _read_postings(
+    spark: SparkSession, index: InvertedIndex, buckets: list[int] | None = None
+) -> DataFrame:
+    """The postings with their persisted schema (well typed after an
+    empty build, or a compaction/merge that folded every document away);
+    ``buckets`` lists and reads only those term buckets
+    (sources/tables.py::read_layout)."""
+    return read_layout(
+        spark, index.postings_path, index.postings_schema, "bucket", buckets
+    )
 
-        schema = StructType.fromJson(json.loads(index.postings_schema))
-        return spark.read.schema(schema).parquet(index.postings_path)
-    return spark.read.parquet(index.postings_path)
+
+def _query_buckets(index: InvertedIndex, terms) -> list[int]:
+    """The crc32 buckets holding ``terms``' posting lists."""
+    return sorted({zlib.crc32(t.encode("utf-8")) % index.n_buckets for t in terms})
 
 
 def _postings_carry_dl(index: InvertedIndex) -> bool:
@@ -239,11 +253,9 @@ def bm25_search_inverted(
         raise ValueError("query_terms must be non-empty")
     id_col = index.id_col
 
-    buckets = sorted({zlib.crc32(t.encode("utf-8")) % index.n_buckets for t in terms})
     posts = _live(
         index,
-        _read_postings(spark, index)
-        .filter(F.col("bucket").isin(buckets))  # partition pruning
+        _read_postings(spark, index, _query_buckets(index, terms))
         .filter(F.col("term").isin(terms)),  # within-bucket residual filter
     )
 
@@ -267,7 +279,7 @@ def bm25_search_inverted(
             for i, t in enumerate(terms)
         ]
     )
-    stats = spark.read.parquet(index.stats_path)
+    stats = spark.read.schema(_STATS_SCHEMA).parquet(index.stats_path)
 
     base = (
         tf
@@ -370,7 +382,7 @@ def append_to_inverted_index(index: InvertedIndex, docs: DataFrame) -> None:
             .cast("double")
             .alias("_inc_tot"),
         )
-        .crossJoin(spark.read.parquet(index.stats_path))
+        .crossJoin(spark.read.schema(_STATS_SCHEMA).parquet(index.stats_path))
         .select(
             (F.col("_inc_n") + F.col("__n")).alias("__n"),
             (F.col("_inc_tot") + F.col("__tot")).alias("__tot"),
@@ -399,11 +411,9 @@ def sparse_dot_topk(
         raise ValueError("query_weights must be non-empty")
     terms = list(query_weights)
     id_col = index.id_col
-    buckets = sorted({zlib.crc32(t.encode("utf-8")) % index.n_buckets for t in terms})
     posts = _live(
         index,
-        _read_postings(spark, index)
-        .filter(F.col("bucket").isin(buckets))
+        _read_postings(spark, index, _query_buckets(index, terms))
         .filter(F.col("term").isin(terms)),
     )
     tf = posts.groupBy(id_col).agg(
@@ -545,26 +555,23 @@ def delete_from_inverted_index(index: InvertedIndex, ids) -> int:
     victims.select(index.id_col).write.mode("append").parquet(
         f"{index.path}/tombstones"
     )
-    old = spark.read.parquet(index.stats_path).collect()[0]
+    old = spark.read.schema(_STATS_SCHEMA).parquet(index.stats_path).collect()[0]
     spark.createDataFrame(
         [(float(old["__n"]) - float(stats_delta["__n"]),
           float(old["__tot"]) - float(stats_delta["__tot"]))],
-        "__n double, __tot double",
+        _STATS_SCHEMA,
     ).write.mode("overwrite").parquet(index.stats_path)
     return int(stats_delta["__n"])
 
 
 def _live(index: InvertedIndex, df: DataFrame) -> DataFrame:
     """Apply deletion vectors: broadcast anti-join against the tombstone
-    table (absent ⇒ no-op)."""
-    from pyspark.sql.utils import AnalysisException
-
-    spark = df.sparkSession
-    try:
-        tombs = spark.read.parquet(f"{index.path}/tombstones")
-    except AnalysisException:  # no deletes yet
+    table (absent ⇒ no-op). Probed with ``fsio.exists`` like
+    ``ivf._ivf_live``: one Hadoop FS call, not a failed read per query."""
+    spark, tomb = df.sparkSession, f"{index.path}/tombstones"
+    if not fsio.exists(tomb, spark):
         return df
-    return df.join(F.broadcast(tombs), index.id_col, "left_anti")
+    return df.join(F.broadcast(spark.read.parquet(tomb)), index.id_col, "left_anti")
 
 
 def build_positional_index(
@@ -688,11 +695,9 @@ def phrase_search_positional(
         raise ValueError("phrase must be non-empty")
     id_col = index.id_col
     uniq = list(dict.fromkeys(terms))
-    buckets = sorted({zlib.crc32(t.encode("utf-8")) % index.n_buckets for t in uniq})
     posts = _live(
         index,
-        _read_postings(spark, index)
-        .filter(F.col("bucket").isin(buckets))
+        _read_postings(spark, index, _query_buckets(index, uniq))
         .filter(F.col("term").isin(uniq))
         # distinct: a replayed append (the at-least-once crash window)
         # lays down byte-identical (term, doc, positions) rows twice,
@@ -750,13 +755,9 @@ def bm25_search_inverted_batch(
     tcol = {t: i for i, t in enumerate(all_terms)}
     id_col = index.id_col
 
-    buckets = sorted(
-        {zlib.crc32(t.encode("utf-8")) % index.n_buckets for t in all_terms}
-    )
     posts = _live(
         index,
-        _read_postings(spark, index)
-        .filter(F.col("bucket").isin(buckets))
+        _read_postings(spark, index, _query_buckets(index, all_terms))
         .filter(F.col("term").isin(all_terms)),
     )
     carry_dl = _postings_carry_dl(index)
@@ -784,7 +785,9 @@ def bm25_search_inverted_batch(
             else tf.join(spark.read.parquet(index.doclens_path), id_col)
         )
         .crossJoin(F.broadcast(dfs))
-        .crossJoin(F.broadcast(spark.read.parquet(index.stats_path)))
+        .crossJoin(
+            F.broadcast(spark.read.schema(_STATS_SCHEMA).parquet(index.stats_path))
+        )
     )
     scored = base.select(
         F.col(id_col),

@@ -22,9 +22,13 @@ server-side index:
 
 At 100 TB: the corpus shuffle happens ONCE at build (partitionBy write);
 every query then touches nprobe/nlist of the data with zero shuffle —
-scan + TakeOrderedAndProject only. Skewed cells (hot regions of the
-embedding space) can be split by re-running KMeans within a cell;
-AQE handles moderate skew at read time.
+scan + TakeOrderedAndProject only. The file listing follows the probes
+too: a question lists the layout root once on the driver and reads only
+its probed ``cell_id=`` directories, so its listing cost is proportional
+to nprobe, not nlist (Spark's own discovery of the root would list every
+cell, as a parallel listing job above 32 of them). Skewed cells (hot
+regions of the embedding space) can be split by re-running KMeans within
+a cell; AQE handles moderate skew at read time.
 """
 
 from __future__ import annotations
@@ -40,7 +44,7 @@ from pyspark.sql import functions as F
 
 from .. import fsio
 from ..operators.knn import knn_exact
-from ..sources.tables import append_repartition
+from ..sources.tables import append_repartition, read_layout
 
 
 @dataclass
@@ -84,17 +88,13 @@ class IVFIndex:
         )
 
 
-def _read_layout(spark: SparkSession, index: IVFIndex) -> DataFrame:
-    """Read the layout root with the schema persisted at build time:
-    identical plan while cells exist (partition discovery and pruning
-    untouched — pinned in tests/test_plans.py), and a well-typed EMPTY
-    frame when a delete has emptied every ``cell_id=`` directory."""
-    if index.schema_json:
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(json.loads(index.schema_json))
-        return spark.read.schema(schema).parquet(index.path)
-    return spark.read.parquet(index.path)
+def _read_layout(
+    spark: SparkSession, index: IVFIndex, cells: list[int] | None = None
+) -> DataFrame:
+    """The layout with its persisted schema (well typed after a delete
+    empties every cell); ``cells`` lists and reads only those probed
+    cells (sources/tables.py::read_layout)."""
+    return read_layout(spark, index.path, index.schema_json, "cell_id", cells)
 
 
 def _train_centroids(
@@ -330,9 +330,7 @@ def ivf_search(
     Catalyst pushes it into the parquet reader alongside the partition
     filter — filtering never widens the scan."""
     probe = nearest_cells(index, query_vec, nprobe)
-    corpus = _ivf_live(
-        index, _read_layout(spark, index).filter(F.col("cell_id").isin(probe))
-    )
+    corpus = _ivf_live(index, _read_layout(spark, index, probe))
     if where is not None:
         corpus = corpus.filter(where)
     return knn_exact(
@@ -619,7 +617,7 @@ def ivf_search_batch(
         return block
 
     return batch_topk_over_layout(
-        _read_layout(spark, index),
+        lambda cells: _read_layout(spark, index, cells),
         partition_col="cell_id",
         id_col=index.id_col,
         vector_col=index.vector_col,

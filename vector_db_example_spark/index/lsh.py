@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from .. import fsio
 from ..operators.knn import knn_exact
-from ..sources.tables import append_repartition
+from ..sources.tables import append_repartition, read_layout
 
 
 def hyperplanes(dim: int, n_planes: int = 8, seed: int = 42) -> np.ndarray:
@@ -157,16 +157,13 @@ class LSHIndex:
         )
 
 
-def _read_layout(spark: SparkSession, index: LSHIndex):
-    """Read the bucket-partitioned root with the persisted schema:
-    identical plan while buckets exist (pruning untouched), well-typed
-    EMPTY frame when ``lsh_delete`` has removed every bucket."""
-    if index.schema_json:
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(json.loads(index.schema_json))
-        return spark.read.schema(schema).parquet(index.path)
-    return spark.read.parquet(index.path)
+def _read_layout(
+    spark: SparkSession, index: LSHIndex, buckets: list[int] | None = None
+) -> DataFrame:
+    """The layout with its persisted schema (well typed after
+    ``lsh_delete`` removes every bucket); ``buckets`` lists and reads
+    only those probed buckets (sources/tables.py::read_layout)."""
+    return read_layout(spark, index.path, index.schema_json, "bucket", buckets)
 
 
 def bucket_assigner(planes: np.ndarray):
@@ -255,7 +252,7 @@ def lsh_layout_search(
     probes = probe_buckets(
         bucket_of(query_vec, index.planes), index.n_planes, probe_radius
     )
-    pruned = _read_layout(spark, index).filter(F.col("bucket").isin(probes))
+    pruned = _read_layout(spark, index, probes)
     return knn_exact(
         pruned,
         query_vec,
@@ -397,7 +394,7 @@ def lsh_layout_search_batch(
         return block
 
     return batch_topk_over_layout(
-        _read_layout(spark, index),
+        lambda buckets: _read_layout(spark, index, buckets),
         partition_col="bucket",
         id_col=index.id_col,
         vector_col=index.vector_col,

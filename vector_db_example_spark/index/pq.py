@@ -215,9 +215,7 @@ def ivf_pq_search(
     from .ivf import _ivf_live, _read_layout, nearest_cells
 
     probe = nearest_cells(index, query_vec, nprobe)
-    pruned = _ivf_live(
-        index, _read_layout(spark, index).filter(F.col("cell_id").isin(probe))
-    )
+    pruned = _ivf_live(index, _read_layout(spark, index, probe))
     approx = (
         pruned.select(index.id_col, "pq_codes")
         .withColumn(

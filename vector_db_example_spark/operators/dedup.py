@@ -25,6 +25,9 @@ from __future__ import annotations
 
 import hashlib
 import re
+from collections import Counter
+
+import numpy as np
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -421,6 +424,10 @@ def simhash64(text_expr: str) -> Column:
     return F.expr(_SIMHASH_FROM_HASHES_SQL.format(hashes=hashes))
 
 
+#: Bit positions of the 60-bit SimHash vote, shared by every call.
+_SIMHASH_SHIFTS = np.arange(60, dtype=np.int64)
+
+
 def _py_simhash(text, memo: dict) -> int | None:
     """Pure-Python twin of ``simhash64``: 60-bit fingerprint from the
     per-token md5-prefix hashes, with the bit votes weighted by token
@@ -432,14 +439,9 @@ def _py_simhash(text, memo: dict) -> int | None:
     array makes every per-bit vote NULL, ``IF(NULL > 0, …, 0)`` takes
     the zero branch, and the bit sum folds to **0** (pinned in
     tests/test_operators.py::test_py_simhash_matches_expression)."""
-    import numpy as np
-
     if not isinstance(text, str):
         return 0
     votes = np.zeros(60, dtype=np.int64)
-    shifts = np.arange(60, dtype=np.int64)
-    from collections import Counter
-
     for tok, cnt in Counter(_JAVA_WS_RE.split(text.strip(" "))).items():
         h = memo.get(tok)
         if h is None:
@@ -447,8 +449,8 @@ def _py_simhash(text, memo: dict) -> int | None:
             # conv(substring(md5(t), 1, 15), 16, 10) — a 60-bit value
             h = int(hashlib.md5(tok.encode("utf-8")).hexdigest()[:15], 16)
             memo[tok] = h
-        votes += cnt * (2 * ((h >> shifts) & 1) - 1)
-    return int(((votes > 0).astype(np.int64) << shifts).sum())
+        votes += cnt * (2 * ((h >> _SIMHASH_SHIFTS) & 1) - 1)
+    return int(((votes > 0).astype(np.int64) << _SIMHASH_SHIFTS).sum())
 
 
 def _simhash_kernel(id_col: str, text_col: str):

@@ -12,9 +12,12 @@ because we always go through ``spark.read.parquet``.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .. import fsio
 
 TABLES = (
     "region",
@@ -144,6 +147,57 @@ def append_repartition(df: DataFrame, partition_col: str) -> DataFrame:
     if est is not None and est <= APPEND_COLLAPSE_MAX_BYTES:
         return df.repartition(F.col(partition_col))
     return df
+
+
+def read_layout(
+    spark: SparkSession,
+    root: str,
+    schema_json: str | None,
+    part_col: str | None = None,
+    values=None,
+) -> DataFrame:
+    """Read a partitioned index layout (IVF ``cell_id=``, LSH and
+    inverted ``bucket=``) with the schema persisted at build time.
+
+    Without ``values`` this is the whole layout: the root read, well
+    typed even after a delete has emptied every partition directory
+    (schema inference over an empty partitioned root raises
+    UNABLE_TO_INFER_SCHEMA).
+
+    With ``values`` (the integer partition values a query probes) the
+    root is listed ONCE on the driver through the Hadoop FS, and only
+    the ``part_col=v`` directories that exist are read, under
+    ``basePath`` so ``part_col`` is still a discovered partition column.
+    Spark's own discovery of the root lists every partition directory —
+    a parallel listing job once they outnumber
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` — so a
+    question's listing cost follows its probes, not the layout's
+    partition count. The ``isin`` filter is still applied, so the scan
+    keeps its PartitionFilters (plan-pinned in tests/test_plans.py).
+    When no probed directory exists (a cell or bucket emptied by a
+    delete) the result is an empty frame of the layout schema. Nothing
+    is cached: each call lists afresh, so appends are visible at once.
+
+    Layout handles predating the persisted schema keep the inferred
+    root read (plus the filter)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    reader = spark.read
+    if schema_json:
+        reader = reader.schema(StructType.fromJson(json.loads(schema_json)))
+    if values is None:
+        return reader.parquet(root)
+    values = [int(v) for v in values]
+    if schema_json:
+        wanted = {f"{part_col}={v}" for v in values}
+        names = sorted(fsio.list_names(root, spark))
+        dirs = [f"{root}/{n}" for n in names if n in wanted]
+        # no probed directory: zero paths read as an empty frame of the schema
+        df = reader.option("basePath", root).parquet(*dirs)
+    else:
+        df = reader.parquet(root)
+    return df.filter(F.col(part_col).isin(values))
 
 
 def restore_event_ts(df: DataFrame) -> DataFrame:
