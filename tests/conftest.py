@@ -73,3 +73,26 @@ def job_names(spark, action) -> list[str]:
         stage = tracker.getStageInfo(min(tracker.getJobInfo(job_id).stageIds))
         names.append(stage.name if stage else "")
     return names
+
+
+def checkpointed_plans(spark, action) -> list[str]:
+    """Run ``action()`` and return the executed physical plan of every
+    frame it materialized with ``localCheckpoint``, in call order (the
+    final plan only; the top-level AQE "Initial Plan" section is cut
+    off, subqueries keep theirs)."""
+    cls = type(spark.range(1))  # the concrete classic DataFrame class
+    orig = cls.localCheckpoint
+    plans: list[str] = []
+
+    def spy(self, *args, **kwargs):
+        out = orig(self, *args, **kwargs)
+        plan = self._jdf.queryExecution().executedPlan().toString()
+        plans.append(plan.split("\n+- == Initial Plan ==")[0])
+        return out
+
+    cls.localCheckpoint = spy
+    try:
+        action()
+    finally:
+        cls.localCheckpoint = orig
+    return plans

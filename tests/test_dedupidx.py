@@ -7,12 +7,11 @@ from __future__ import annotations
 
 import hashlib
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from vector_db_example_spark.index.dedupidx import (
-    dedup_index_filter_verified,
     DedupIndex,
     build_dedup_index,
     dedup_index_append,
@@ -28,13 +27,16 @@ PROP = settings(
 words = st.sampled_from(
     ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta"]
 )
-texts = st.lists(words, min_size=0, max_size=10).map(" ".join)
+# None is a null text: an all-NULL signature whose band keys are all md5("")
+texts = st.none() | st.lists(words, min_size=0, max_size=10).map(" ".join)
 
 
 # --- pure-Python model of the layout's documented semantics -------------
 
 
-def model_sig(text: str, k: int = 3, n_hashes: int = 16):
+def model_sig(text: str | None, k: int = 3, n_hashes: int = 16):
+    if text is None:
+        return [None] * n_hashes
     toks = text.strip().split(" ") if text.strip() else [""]
     if len(toks) - (k - 1) >= 1:
         sh = {" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)}
@@ -46,11 +48,20 @@ def model_sig(text: str, k: int = 3, n_hashes: int = 16):
     ]
 
 
-def model_bands(text: str, k: int = 3, n_hashes: int = 16, bands: int = 8):
+def model_bands(
+    text: str | None, k: int = 3, n_hashes: int = 16, bands: int = 8
+):
+    """md5 of each signature slice; ``array_join`` drops NULLs, so every
+    band of a null text hashes the empty string."""
     sig = model_sig(text, k, n_hashes)
     rpb = n_hashes // bands
     return {
-        (b, hashlib.md5("".join(sig[b * rpb : (b + 1) * rpb]).encode()).hexdigest())
+        (
+            b,
+            hashlib.md5(
+                "".join(x for x in sig[b * rpb : (b + 1) * rpb] if x is not None).encode()
+            ).hexdigest(),
+        )
         for b in range(bands)
     }
 
@@ -76,7 +87,7 @@ def model_filter(corpus_keys: set, batch: list[tuple[int, str]]):
 def _verdicts(spark, index, batch_df):
     return {
         r["doc_id"]: (r["corpus_dup"], r["within_dup"])
-        for r in dedup_index_filter(spark, index, batch_df).collect()
+        for r in dedup_index_filter(spark, index, batch_df)[0].collect()
     }
 
 
@@ -86,6 +97,7 @@ def _verdicts(spark, index, batch_df):
     batch1=st.lists(texts, min_size=1, max_size=6),
     batch2=st.lists(texts, min_size=1, max_size=4),
 )
+@example(corpus=["alpha beta"], batch1=[None, "alpha", None], batch2=[None, "beta"])
 def test_lifecycle_matches_model(spark, corpus, batch1, batch2, tmp_path_factory):
     """build → filter → append-survivors → re-filter equals the model at
     every stage, for any word-soup corpus (duplicate texts across and
@@ -161,11 +173,14 @@ def model_filter_verified(
     threshold: float,
     cap: int,
 ):
-    """dedup_index_filter_verified's documented semantics: band-collision
+    """The verified filter's documented semantics: band-collision
     candidates verified by the signature-equality fraction, with
-    count-first mega-key routing (over-cap keys flag unverified)."""
+    count-first mega-key routing (over-cap keys flag unverified). At
+    ``threshold <= 0`` every colliding key counts as over the cap."""
     from collections import defaultdict
 
+    if threshold <= 0:
+        cap = -1
     bb = {i: model_bands(t) for i, t in batch}
     bsig = {i: model_sig(t) for i, t in batch}
     csig = {i: model_sig(t) for i, t in corpus}
@@ -176,6 +191,9 @@ def model_filter_verified(
     over = {bk for bk, o in keyowners.items() if len(o) > cap}
 
     def sim(a, b):
+        # Spark's NULL algebra: a null text's estimate is NULL, never >= t
+        if None in a or None in b:
+            return float("-inf")
         return sum(x == y for x, y in zip(a, b)) / len(a)
 
     corpus_dup = set()
@@ -214,6 +232,8 @@ def model_filter_verified(
     threshold=st.sampled_from([0.0, 0.25, 0.5, 1.0]),
     cap=st.sampled_from([0, 1, 64]),
 )
+@example(corpus=[None, "alpha beta"], batch=[None, None, "alpha beta"], threshold=0.0, cap=64)
+@example(corpus=[None, "alpha beta"], batch=[None, None, "alpha beta"], threshold=0.5, cap=64)
 def test_verified_filter_matches_model(
     spark, corpus, batch, threshold, cap, tmp_path_factory
 ):
@@ -230,19 +250,16 @@ def test_verified_filter_matches_model(
     bdf = spark.createDataFrame(b, "doc_id long, text string")
     got = {
         r["doc_id"]: (r["corpus_dup"], r["within_dup"])
-        for r in dedup_index_filter_verified(
+        for r in dedup_index_filter(
             spark, index, bdf, threshold=threshold, candidate_cap=cap
-        ).collect()
+        )[0].collect()
     }
     assert got == model_filter_verified(cdocs, b, threshold, cap)
-    if cap == 0 or threshold == 0.0:
-        # collapses to the band-only semantics: cap=0 flags every
-        # collision unverified; threshold=0 passes every candidate.
-        band_only = {
-            r["doc_id"]: (r["corpus_dup"], r["within_dup"])
-            for r in dedup_index_filter(spark, index, bdf).collect()
-        }
-        assert got == band_only
+    if cap == 0 or threshold <= 0:
+        # collapses to the band-only semantics: cap=0 and threshold=0
+        # both flag every collision unverified, null texts included.
+        keys = set().union(*(model_bands(t) for _, t in cdocs)) if cdocs else set()
+        assert got == model_filter(keys, b)
 
 
 def test_post_append_filter_sees_appends_in_one_action(spark, tmp_path_factory):
@@ -260,12 +277,12 @@ def test_post_append_filter_sees_appends_in_one_action(spark, tmp_path_factory):
     batch1 = spark.createDataFrame(
         [(10, "one two three four five six seven")], "doc_id long, text string"
     )
-    v1 = dedup_index_filter(spark, index, batch1).localCheckpoint(eager=True)
+    v1 = dedup_index_filter(spark, index, batch1)[0].localCheckpoint(eager=True)
     dedup_index_append(index, batch1)  # 10 survived; accept it
     batch2 = spark.createDataFrame(
         [(20, "one two three four five six seven")], "doc_id long, text string"
     )
-    v2 = dedup_index_filter(spark, index, batch2)
+    v2 = dedup_index_filter(spark, index, batch2)[0]
     rows = {
         r["doc_id"]: (r["corpus_dup"], r["within_dup"])
         for r in v1.unionByName(v2).collect()  # ONE action over both stages
@@ -276,8 +293,10 @@ def test_post_append_filter_sees_appends_in_one_action(spark, tmp_path_factory):
 def test_filter_never_rereads_corpus_text(spark, tmp_path_factory):
     """The whole point of persisting band keys: checking a batch reads
     ONLY (band, key) from the layout — the accepted corpus's text is
-    never re-shingled. Every parquet scan in the filter plan must be
-    band/key-only."""
+    never re-shingled. Every parquet scan in the plans the filter runs
+    (its materialized frames and the verdicts) must be text-free."""
+    from tests.conftest import checkpointed_plans
+
     d = str(tmp_path_factory.mktemp("dedupidx_plan"))
     corpus = spark.createDataFrame(
         [(i, f"document number {i} alpha beta gamma") for i in range(20)],
@@ -287,17 +306,14 @@ def test_filter_never_rereads_corpus_text(spark, tmp_path_factory):
     batch = spark.createDataFrame(
         [(100, "document number 3 alpha beta gamma")], "doc_id long, text string"
     )
-    for frame in (
-        dedup_index_filter(spark, index, batch),
-        dedup_index_filter_verified(spark, index, batch, threshold=0.5),
-    ):
-        plan = frame._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        scans = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-        assert scans, "expected a parquet scan of the layout"
+    for threshold in (0.0, 0.5):
+        def run():
+            verdicts, _ = dedup_index_filter(spark, index, batch, threshold=threshold)
+            verdicts.localCheckpoint(eager=True)
+
+        plans = checkpointed_plans(spark, run)
+        scans = [ln for p in plans for ln in p.splitlines() if "ReadSchema" in ln]
+        assert any("key:string" in ln for ln in scans), "expected a layout scan"
         assert all("text" not in ln for ln in scans), scans
 
 
@@ -331,10 +347,8 @@ def test_delete_stops_suppressing_near_duplicates(spark, tmp_path_factory):
     )
 
     def verdict(idx, mode):
-        fn = dedup_index_filter if mode == "band" else (
-            lambda s, i, b: dedup_index_filter_verified(s, i, b, threshold=0.5)
-        )
-        [r] = fn(spark, idx, batch).collect()
+        threshold = 0.0 if mode == "band" else 0.5
+        [r] = dedup_index_filter(spark, idx, batch, threshold=threshold)[0].collect()
         return (r["corpus_dup"], r["within_dup"])
 
     assert verdict(index, "band") == (True, False)
@@ -358,7 +372,7 @@ def test_delete_stops_suppressing_near_duplicates(spark, tmp_path_factory):
             [(20, "entirely different corpus text about spark layouts")],
             "doc_id long, text string",
         ),
-    ).collect()
+    )[0].collect()
     assert (r["corpus_dup"], r["within_dup"]) == (True, False)
 
 
@@ -378,23 +392,23 @@ def test_delete_clears_stale_mega_key_counts(spark, tmp_path_factory):
     )
     index = build_dedup_index(corpus, f"{d}/idx")
     batch = spark.createDataFrame([(10, boiler)], "doc_id long, text string")
-    [r] = dedup_index_filter_verified(
+    [r] = dedup_index_filter(
         spark, index, batch, threshold=0.5, candidate_cap=3
-    ).collect()
+    )[0].collect()
     assert r["corpus_dup"]  # 5 copies > cap=3: auto-flagged via mega-key
     # delete 3 of the 5 boilerplate copies: the key drops to 2 ≤ cap, so
     # candidates now route through verification — an exact copy still
     # clears the estimate (sim=1.0) ...
     assert dedup_index_delete(spark, index, [0, 1, 2]) == 3
-    [r] = dedup_index_filter_verified(
+    [r] = dedup_index_filter(
         spark, index, batch, threshold=0.5, candidate_cap=3
-    ).collect()
+    )[0].collect()
     assert r["corpus_dup"]
     # ... and deleting ALL copies frees the batch doc entirely
     assert dedup_index_delete(spark, index, [3, 4]) == 2
-    [r] = dedup_index_filter_verified(
+    [r] = dedup_index_filter(
         spark, index, batch, threshold=0.5, candidate_cap=3
-    ).collect()
+    )[0].collect()
     assert not r["corpus_dup"]
 
 
@@ -434,7 +448,7 @@ def test_compact_heals_replay_duplicates_and_collapses_files(
                 [(20, "one two three four five"), (21, "six seven eight")],
                 "doc_id long, text string",
             ),
-        ).collect()
+        )[0].collect()
     }
     assert got == {20: (True, False), 21: (False, False)}
 
@@ -473,6 +487,7 @@ def test_compact_delete_to_empty(spark, tmp_path_factory):
     batch=st.lists(texts, min_size=1, max_size=6),
     n_del=st.integers(min_value=0, max_value=6),
 )
+@example(corpus=[None, "alpha beta gamma", None], batch=[None, "alpha beta gamma"], n_del=1)
 def test_delete_compact_match_model(
     spark, corpus, batch, n_del, tmp_path_factory
 ):
@@ -505,23 +520,50 @@ def test_delete_compact_match_model(
         assert _verdicts(spark, idx, bdf) == expect
         got_v = {
             r["doc_id"]: (r["corpus_dup"], r["within_dup"])
-            for r in dedup_index_filter_verified(
+            for r in dedup_index_filter(
                 spark, idx, bdf, threshold=0.5
-            ).collect()
+            )[0].collect()
         }
         assert got_v == expect_v
 
 
+def _layout_scan_to_join(plan: str) -> list[list[str]]:
+    """For every layout scan in an executed-plan tree string (a parquet
+    scan reading ``key``), the node lines from the scan up to its
+    nearest join ancestor, scan first."""
+    import re
+
+    lines = plan.splitlines()
+    col = [len(ln) - len(ln.lstrip(" :+-")) for ln in lines]
+    # node text without the tree drawing and the codegen stage marker
+    node = [re.sub(r"^\*\(\d+\) ", "", ln.lstrip(" :+-")) for ln in lines]
+    chains = []
+    for i, ln in enumerate(node):
+        if not ln.startswith("FileScan parquet") or "key:string" not in ln:
+            continue
+        chain, j = [ln], i
+        while not chain[-1].split(" ")[0].endswith("Join"):
+            j = max((k for k in range(j) if col[k] < col[j]), default=None)
+            if j is None:
+                break
+            chain.append(node[j])
+        chains.append(chain)
+    return chains
+
+
 def test_band_filter_never_shuffles_layout(spark, tmp_path_factory):
-    """The band-only filter's corpus test must evaluate as
-    ``layout ⋉ broadcast(batch keys)`` + a broadcast-back of the
-    surviving keys — explicit hints, so the layout is streamed map-side
-    and NEVER exchanged even when it is too big for auto-broadcast. We
-    pin that by disabling autoBroadcastJoinThreshold: the two
-    LeftSemi BroadcastHashJoins can then only come from the explicit
-    hints (the old plan degraded to a SortMergeJoin that re-shuffled
-    the whole corpus band table per batch once the layout crossed
-    ~10 MB)."""
+    """The filter's corpus test must stream the layout scan map-side
+    through ``layout ⋉ broadcast(batch keys)`` — an explicit hint, so
+    the layout is NEVER exchanged even when it is too big for
+    auto-broadcast. Pinned with autoBroadcastJoinThreshold disabled, in
+    band-only and verified mode: every layout scan in the frames the
+    filter materializes feeds a ``BroadcastHashJoin`` LeftSemi with no
+    Exchange between them (the layout is scanned inside the key-count
+    checkpoint, so the final verdict plan alone does not show it; an
+    unhinted plan degrades to a SortMergeJoin that re-shuffles the
+    whole corpus band table per batch)."""
+    from tests.conftest import checkpointed_plans
+
     d = str(tmp_path_factory.mktemp("dedupidx_noshuffle"))
     corpus = spark.createDataFrame(
         [(i, f"document number {i} alpha beta gamma") for i in range(30)],
@@ -538,18 +580,26 @@ def test_band_filter_never_shuffles_layout(spark, tmp_path_factory):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        frame = dedup_index_filter(spark, index, batch)
-        plan = frame._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        assert plan.count("BroadcastHashJoin LeftSemi") >= 2, plan
-        got = {
-            r["doc_id"]: (r["corpus_dup"], r["within_dup"])
-            for r in frame.collect()
-        }
-        assert got == {100: (True, False), 101: (False, False)}
+        for threshold in (0.0, 0.5):
+            out = {}
+
+            def run():
+                out["v"] = dedup_index_filter(
+                    spark, index, batch, threshold=threshold
+                )[0].localCheckpoint(eager=True)
+
+            plans = checkpointed_plans(spark, run)
+            chains = [c for p in plans for c in _layout_scan_to_join(p)]
+            assert chains, plans
+            for chain in chains:
+                assert chain[-1].startswith("BroadcastHashJoin"), chain
+                assert "LeftSemi" in chain[-1], chain
+                assert not any("Exchange" in n for n in chain), chain
+            got = {
+                r["doc_id"]: (r["corpus_dup"], r["within_dup"])
+                for r in out["v"].collect()
+            }
+            assert got == {100: (True, False), 101: (False, False)}
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
@@ -582,7 +632,7 @@ def test_sig_sidecar_bucketed_and_pruned(spark, tmp_path_factory):
     batch = spark.createDataFrame(
         [(100, "document number 3 alpha beta gamma")], "doc_id long, text string"
     )
-    frame = dedup_index_filter_verified(spark, index, batch, threshold=0.5)
+    frame = dedup_index_filter(spark, index, batch, threshold=0.5)[0]
     plan = frame._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
@@ -626,9 +676,9 @@ def test_legacy_unbucketed_layout_still_works(spark, tmp_path_factory):
     )
     got = {
         r["doc_id"]: (r["corpus_dup"], r["within_dup"])
-        for r in dedup_index_filter_verified(
+        for r in dedup_index_filter(
             spark, loaded, batch, threshold=0.5
-        ).collect()
+        )[0].collect()
     }
     assert got == {10: (True, False), 11: (False, False)}
 
@@ -665,9 +715,9 @@ def test_compact_migrates_sig_buckets(spark, tmp_path_factory):
     def verified(idx):
         return {
             r["doc_id"]: (r["corpus_dup"], r["within_dup"])
-            for r in dedup_index_filter_verified(
+            for r in dedup_index_filter(
                 spark, idx, batch, threshold=0.5
-            ).collect()
+            )[0].collect()
         }
 
     before = verified(legacy)
@@ -772,9 +822,9 @@ def test_verified_filter_checkpoints_only_batch_bounded_frames(
     )
     got = {
         r["doc_id"]: (r["corpus_dup"], r["within_dup"])
-        for r in dedup_index_filter_verified(
+        for r in dedup_index_filter(
             spark, index, batch, threshold=0.5, candidate_cap=2
-        ).collect()
+        )[0].collect()
     }
     assert got == {200: (True, False), 201: (False, False)}
     # bsigs (2 rows), key_counts (<= 16 batch keys), bucketed cand pairs
@@ -822,90 +872,41 @@ def test_delete_victim_scan_is_bucket_pruned(spark, tmp_path_factory):
     assert got == {100: (False, False)}
 
 
-def test_parse_byte_string_mirrors_spark_units(spark):
-    """The Python threshold parser must agree with Spark's JavaUtils
-    suffix table (the advisor's Spark-Connect-surface fix) and reject
-    garbage the JVM would reject."""
+def test_plan_size_bytes_error_discipline(spark):
+    """``sources/tables.py::plan_size_bytes`` — the package's one JVM
+    size probe: a real frame reports its optimizer estimate; an
+    unreachable estimate reports ``None`` (Spark Connect has no
+    ``_jdf``; a bare Py4JError is a gateway/protocol fault — the JVM
+    never answered); but an error the JVM raised while evaluating the
+    plan (Py4JJavaError ⊂ Py4JError) and any other exception SURFACE
+    rather than silently flipping a size-gated plan decision."""
     import pytest
-
-    from vector_db_example_spark.index.dedupidx import (
-        _fits_auto_broadcast,
-        _parse_byte_string,
-    )
-
-    assert _parse_byte_string("-1") == -1
-    assert _parse_byte_string("10485760b") == 10 * 1024 * 1024
-    assert _parse_byte_string("10MB") == 10 * 1024 * 1024
-    assert _parse_byte_string(" 2g ") == 2 * 1024**3
-    assert _parse_byte_string("1K") == 1024
-    # the conf layer (ConfigHelpers.byteFromString) strips ONE leading
-    # '-' and negates, so '-1k' is a valid disable value Spark itself
-    # accepts — it must parse negative, not raise (advisor, round 13)
-    assert _parse_byte_string("-1k") == -1024
-    assert _parse_byte_string("-10MB") == -10 * 1024 * 1024
-    # ConfigHelpers checks charAt(0) BEFORE any trim, so a space-led
-    # negative is garbage to Spark and must stay garbage here
-    for bad in ("", "10XB", "ten", "10 10", "--1k", " -1k"):
-        with pytest.raises(ValueError):
-            _parse_byte_string(bad)
-    # ...and a negative threshold takes the DISABLED path, not a crash
-    class _NeverAsked:
-        @property
-        def _jdf(self):  # pragma: no cover - must not be reached
-            raise AssertionError("disabled threshold must not touch the plan")
-
-    class _NegConf:
-        class conf:
-            @staticmethod
-            def get(k):
-                return "-1k"
-
-    assert _fits_auto_broadcast(_NegConf, _NeverAsked()) is False
-    # unavailable plan stats (Spark Connect has no _jdf -> an
-    # AttributeError subclass) must report not-fitting - the caller then
-    # takes the restriction path, which keeps the layout unshuffled
-    # either way
-    class _NoJdf:
-        @property
-        def _jdf(self):
-            raise AttributeError("no classic-session JVM handle")
-
-    assert _fits_auto_broadcast(spark, _NoJdf()) is False
-    # ...but a genuine plan/analysis failure must SURFACE, not silently
-    # flip the join strategy (the narrowed except - advisor, round 12)
-    class _BrokenPlan:
-        @property
-        def _jdf(self):
-            raise RuntimeError("analysis exploded")
-
-    with pytest.raises(RuntimeError):
-        _fits_auto_broadcast(spark, _BrokenPlan())
-    # JVM-side failures arrive as Py4JJavaError (⊂ Py4JError): the JVM
-    # evaluated the plan and threw, so they must surface too — only
-    # bare gateway/protocol faults map to not-fitting (advisor,
-    # round 13: the round-12 blanket Py4JError catch still swallowed
-    # Py4JJavaError)
     from py4j.protocol import Py4JError, Py4JJavaError
+
+    from vector_db_example_spark.sources.tables import plan_size_bytes
+
+    assert plan_size_bytes(spark.range(100)) > 0
+
+    def raising(exc):
+        class _Frame:
+            @property
+            def _jdf(self):
+                raise exc
+
+        return _Frame()
+
+    assert plan_size_bytes(raising(AttributeError("no classic JVM handle"))) is None
+    assert plan_size_bytes(raising(Py4JError("gateway connection refused"))) is None
 
     class _FakeJavaException:  # Py4JJavaError.__init__ reads _target_id
         _target_id = "o0"
 
-    class _JvmThrew:
-        @property
-        def _jdf(self):
-            raise Py4JJavaError(
-                "analysis exception from the JVM", _FakeJavaException()
-            )
-
     with pytest.raises(Py4JJavaError):
-        _fits_auto_broadcast(spark, _JvmThrew())
-
-    class _GatewayDown:
-        @property
-        def _jdf(self):
-            raise Py4JError("connection refused while talking to the gateway")
-
-    assert _fits_auto_broadcast(spark, _GatewayDown()) is False
+        plan_size_bytes(
+            raising(Py4JJavaError("analysis exception", _FakeJavaException()))
+        )
+    with pytest.raises(RuntimeError):
+        plan_size_bytes(raising(RuntimeError("analysis exploded")))
 
 
 def test_over_ceiling_fallback_matches_broadcast_path(
@@ -938,13 +939,13 @@ def test_over_ceiling_fallback_matches_broadcast_path(
     def run_both():
         band = {
             r["doc_id"]: (r["corpus_dup"], r["within_dup"])
-            for r in dedup_index_filter(spark, index, batch).collect()
+            for r in dedup_index_filter(spark, index, batch)[0].collect()
         }
         ver = {
             r["doc_id"]: (r["corpus_dup"], r["within_dup"])
-            for r in dedup_index_filter_verified(
+            for r in dedup_index_filter(
                 spark, index, batch, threshold=0.5, candidate_cap=2
-            ).collect()
+            )[0].collect()
         }
         return band, ver
 
@@ -965,8 +966,11 @@ def test_verified_filter_skips_sig_subtree_when_no_under_cap_key(
     at all — the candidate set is provably empty, so the filter must not
     touch the signature side-car: no ``_read_sigs`` call, hence no
     candidate checkpoint, bucket collect, or side-car scan jobs over
-    provably-empty frames (advisor finding, round 12). An under-cap
-    collider must still trigger the read."""
+    provably-empty frames (advisor finding, round 12). At
+    ``threshold=0`` every colliding key is routed unverified, so even an
+    under-cap collider and a within-batch pair must build neither the
+    side-car read nor the similarity estimator. At ``threshold > 0`` an
+    under-cap collider must still trigger the read."""
     import vector_db_example_spark.index.dedupidx as dd
 
     d = str(tmp_path_factory.mktemp("dedupidx_skip"))
@@ -995,21 +999,48 @@ def test_verified_filter_skips_sig_subtree_when_no_under_cap_key(
     )
     got = {
         r["doc_id"]: (r["corpus_dup"], r["within_dup"])
-        for r in dedup_index_filter_verified(
+        for r in dedup_index_filter(
             spark, index, hot, threshold=0.5, candidate_cap=2
-        ).collect()
+        )[0].collect()
     }
     assert got == {200: (True, False), 201: (False, False)}
     assert calls == [], "side-car read on a provably-empty candidate set"
+    # band-only mode: an under-cap corpus collider and an under-cap
+    # within-batch pair still flag, with no side-car read or estimator
+    est_calls: list[int] = []
+    orig_est = dd._est_sim
+
+    def est_spy(a, b, n):
+        est_calls.append(1)
+        return orig_est(a, b, n)
+
+    monkeypatch.setattr(dd, "_est_sim", est_spy)
+    mixed = spark.createDataFrame(
+        [
+            (400, "one two three four five six seven"),
+            (401, "alpha beta gamma delta epsilon"),
+            (402, "alpha beta gamma delta epsilon"),
+        ],
+        "doc_id long, text string",
+    )
+    got = {
+        r["doc_id"]: (r["corpus_dup"], r["within_dup"])
+        for r in dedup_index_filter(
+            spark, index, mixed, threshold=0.0, candidate_cap=2
+        )[0].collect()
+    }
+    assert got == {400: (True, False), 401: (False, False), 402: (False, True)}
+    assert calls == [], "side-car read at threshold 0"
+    assert est_calls == [], "estimator built into a threshold-0 plan"
     # an under-cap collider (the singleton corpus doc) re-arms the read
     probe = spark.createDataFrame(
         [(300, "one two three four five six seven")], "doc_id long, text string"
     )
     got = {
         r["doc_id"]: (r["corpus_dup"], r["within_dup"])
-        for r in dedup_index_filter_verified(
+        for r in dedup_index_filter(
             spark, index, probe, threshold=0.5, candidate_cap=2
-        ).collect()
+        )[0].collect()
     }
     assert got == {300: (True, False)}
     assert calls, "under-cap collider must reach the verification join"
@@ -1048,9 +1079,9 @@ def test_verified_filter_fresh_batch_plan_collapses(
         ],
         "doc_id long, text string",
     )
-    v = dedup_index_filter_verified(
+    v = dedup_index_filter(
         spark, index, fresh, threshold=0.5, candidate_cap=2
-    )
+    )[0]
     plan = v._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
@@ -1070,9 +1101,9 @@ def test_verified_filter_fresh_batch_plan_collapses(
     )
     got = {
         r["doc_id"]: (r["corpus_dup"], r["within_dup"])
-        for r in dedup_index_filter_verified(
+        for r in dedup_index_filter(
             spark, index, wb, threshold=0.5, candidate_cap=2
-        ).collect()
+        )[0].collect()
     }
     assert got == {
         300: (False, False),
@@ -1141,7 +1172,7 @@ def test_append_rows_equals_recompute_append(spark, tmp_path_factory):
         _read_bands,
         _read_sigs,
         dedup_index_append_rows,
-        dedup_index_filter_with_rows,
+        dedup_index_filter,
     )
 
     base = str(tmp_path_factory.mktemp("dedupidx_rows"))
@@ -1162,7 +1193,7 @@ def test_append_rows_equals_recompute_append(spark, tmp_path_factory):
     layouts = {}
     for mode in ("docs", "rows"):
         idx = build_dedup_index(corpus, f"{base}/{mode}", sig_buckets=8)
-        verdicts, rows = dedup_index_filter_with_rows(spark, idx, batch)
+        verdicts, rows = dedup_index_filter(spark, idx, batch)
         verdicts = verdicts.localCheckpoint(eager=True)
         surv = verdicts.filter("NOT corpus_dup AND NOT within_dup").select(
             "doc_id"
@@ -1180,7 +1211,7 @@ def test_append_rows_equals_recompute_append(spark, tmp_path_factory):
             sorted(
                 map(
                     tuple,
-                    dedup_index_filter_with_rows(spark, idx, probe)[0].collect(),
+                    dedup_index_filter(spark, idx, probe)[0].collect(),
                 )
             ),
         )

@@ -288,7 +288,7 @@ def test_dedup_index_lifecycle_on_uri_path(spark, uri_root):
 
     def verdict(idx, doc_id, text):
         batch = spark.createDataFrame([(doc_id, text)], "doc_id long, text string")
-        [r] = dedup_index_filter(spark, idx, batch).collect()
+        [r] = dedup_index_filter(spark, idx, batch)[0].collect()
         return (r["corpus_dup"], r["within_dup"])
 
     copy = "the quick brown fox jumps over the lazy dog"

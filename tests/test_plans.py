@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, checkpointed_plans
 
 from vector_db_example_spark.queries import QUERIES
 
@@ -493,10 +493,13 @@ def test_fingerprint_overlap_kernel_runs_once(spark):
 
 def test_dedup_index_tombstone_path_plan_contract(spark, tmp_path):
     """The dedup layout's deletion vectors honor the IVF plan contract:
-    BEFORE any delete the filter plan is identity — no scan of the
-    tombstone sibling at all — and AFTER a delete the corpus side
+    BEFORE any delete the filter's layout reads are identity — no scan
+    of the tombstone sibling at all — and AFTER a delete the corpus side
     anti-joins the tombstones as a BROADCAST join (takedown lists are
-    tiny; a shuffle there would tax every future batch)."""
+    tiny; a shuffle there would tax every future batch). The layout is
+    read inside the frames the filter materializes (the key counts, and
+    the candidate pairs in verified mode), so those are the plans
+    pinned, in band-only and verified mode."""
     from vector_db_example_spark.index.dedupidx import (
         build_dedup_index,
         dedup_index_delete,
@@ -512,8 +515,9 @@ def test_dedup_index_tombstone_path_plan_contract(spark, tmp_path):
         [(100, "corpus document number 3 alpha beta")], "doc_id long, text string"
     )
     # The tombstone scan is the only parquet read of a lone doc_id
-    # column (the layout scan reads (band, key); plan paths truncate, so
-    # match by ReadSchema, not directory name).
+    # column in a plan that reads the layout (the layout scan reads
+    # (band, key); plan paths truncate, so match by ReadSchema, not
+    # directory name).
     def tomb_scans(plan: str) -> list[str]:
         return [
             ln
@@ -528,15 +532,29 @@ def test_dedup_index_tombstone_path_plan_contract(spark, tmp_path):
             if "BroadcastHashJoin" in ln and "LeftAnti" in ln
         )
 
-    before = _plan(dedup_index_filter(spark, index, batch), execute=True)
-    assert not tomb_scans(before), "identity fast path lost"
+    def layout_plans(threshold: float) -> list[str]:
+        def run():
+            verdicts, _ = dedup_index_filter(spark, index, batch, threshold=threshold)
+            verdicts.localCheckpoint(eager=True)
+
+        plans = checkpointed_plans(spark, run)
+        return [p for p in plans if "key:string>" in p]
+
+    thresholds = (0.0, 0.5)
+    before = {t: layout_plans(t) for t in thresholds}
+    for t in thresholds:
+        assert before[t], "expected the filter to read the layout"
+        assert not any(tomb_scans(p) for p in before[t]), "identity fast path lost"
 
     assert dedup_index_delete(spark, index, [3]) == 1
-    after = _plan(dedup_index_filter(spark, index, batch), execute=True)
-    assert tomb_scans(after), "tombstones not applied"
-    assert bcast_anti(after) == bcast_anti(before) + 1, (
-        "tombstone anti-join must be the one NEW broadcast anti-join\n" + after
-    )
+    for t in thresholds:
+        after = layout_plans(t)
+        assert all(tomb_scans(p) for p in after), "tombstones not applied"
+        # the first layout read is the key-count checkpoint
+        assert bcast_anti(after[0]) == bcast_anti(before[t][0]) + 1, (
+            "tombstone anti-join must be the one NEW broadcast anti-join\n"
+            + after[0]
+        )
 
 
 def test_knn_batch_arrow_two_phase_narrow_scan_broadcast_joinback(spark):

@@ -11,11 +11,12 @@ Setup (no planted replicas anywhere):
 - corpus  = documents with doc_id % 3 < 2  (all distinct synthetic texts)
 - batch   = documents with doc_id % 3 == 2 (all distinct, none in corpus)
 
-Modes measured, same persisted index:
-- band-only  (index/dedupidx.py::dedup_index_filter) — one lucky band
-  key proposes AND disposes;
-- verified   (dedup_index_filter_verified, threshold 0.5, cap 64) —
-  band collision proposes, the MinHash estimate disposes.
+Modes measured, same persisted index, both through
+index/dedupidx.py::dedup_index_filter:
+- band-only  (threshold 0.0) — one lucky band key proposes AND
+  disposes;
+- verified   (threshold --threshold, default 0.5; cap --cap, default
+  64) — band collision proposes, the MinHash estimate disposes.
 
 Ground truth: a batch doc is a TRUE near-duplicate iff its exact
 3-shingle Jaccard against some corpus doc is >= 0.5. Exact Jaccard is
@@ -56,7 +57,6 @@ def main() -> int:
     from vector_db_example_spark.index.dedupidx import (
         build_dedup_index,
         dedup_index_filter,
-        dedup_index_filter_verified,
     )
 
     spark = get_spark()
@@ -73,16 +73,11 @@ def main() -> int:
         index = build_dedup_index(corpus, f"{work}/idx")
 
         results = {}
-        for mode in ("band-only", "verified"):
+        for mode, threshold in (("band-only", 0.0), ("verified", args.threshold)):
             t0 = time.monotonic()
-            if mode == "band-only":
-                v = dedup_index_filter(spark, index, batch)
-            else:
-                v = dedup_index_filter_verified(
-                    spark, index, batch, threshold=args.threshold,
-                    candidate_cap=args.cap,
-                )
-            v = v.localCheckpoint(eager=True)
+            v = dedup_index_filter(
+                spark, index, batch, threshold=threshold, candidate_cap=args.cap
+            )[0].localCheckpoint(eager=True)
             wall = time.monotonic() - t0
             results[mode] = {
                 "verdicts": v,

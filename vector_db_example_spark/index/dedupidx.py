@@ -11,41 +11,55 @@ same shape: an accumulating store that new inserts extend and later
 queries are checked against — create_collection src/app.py:81, batched
 insert src/app.py:230, single insert src/app.py:409).
 
-The layout persists ONLY the corpus's LSH band keys — ``(id, band,
-key)``, 16 md5 strings per document via the same
+The layout persists the corpus's LSH band keys — ``(id, band, key)``,
+one md5 string per band (8 by default) per document via the same
 shingle → minhash → band pipeline as ``minhash_near_duplicates``
-(operators/dedup.py:84,99) — partitioned by ``band``. Checking a batch is
-then:
+(operators/dedup.py:84,99) — partitioned by ``band``, plus a signature
+side-car ``(id, sig)`` partitioned by ``sig_bucket``.
+``dedup_index_filter`` checks a batch with:
 
 1. one narrow scan of the layout reading just ``(band, key)`` (column
    pruning; the text/shingles of the accepted corpus are never touched
-   again),
-2. one shuffle join of the batch's bands against it on ``(band, key)``
-   — 16-byte keys, AQE-skew-splittable if a boilerplate band key goes
-   hot,
+   again), streamed through a broadcast semi-join against the batch's
+   own keys and counted per colliding key,
+2. at ``threshold > 0``, a MinHash similarity check of the under-cap
+   candidates against the bucket-pruned signature side-car,
 3. a groupBy-min within the batch for the intra-batch verdicts
    (map-side combine; never a collect).
 
 Appending accepted survivors is a blind partitioned parquet append of
-their band rows — O(batch), never a corpus rewrite.
+their band and signature rows — O(batch), never a corpus rewrite.
 
-Semantics (documented, deterministic, single-pass):
+Semantics (documented, deterministic, single-pass), for the filter's
+``threshold`` t and ``candidate_cap`` c:
 
-- ``corpus_dup``: the document shares ≥1 ``(band, key)`` with the
-  layout — the standard LSH candidate test. Exact duplicates always
-  collide (identical text ⇒ identical signature ⇒ all bands equal);
-  near-duplicates collide with the usual banding probability.
+- ``corpus_dup``: the document shares ≥1 ``(band, key)`` with the live
+  layout — the standard LSH candidate test — and either that key is
+  held by more than c corpus docs (a mega-key: flagged unverified) or
+  the MinHash estimate against one of its holders is ≥ t. Exact
+  duplicates always collide (identical text ⇒ identical signature ⇒
+  all bands equal); near-duplicates collide with the usual banding
+  probability.
 - ``within_dup`` (among non-corpus-dup batch docs only): the document
   shares ≥1 band key with a LOWER-id batch document that is itself not
-  a corpus dup. This is the pessimistic one-pass rule — a doc can be
-  suppressed by an earlier doc that was itself suppressed by a still
-  earlier one — chosen because it needs no iteration (greedy-sequential
-  semantics need a transitive closure; the batch CC operators,
-  operators/dedup.py:360, provide that when exactness of the survivor
-  set matters more than one extra shuffle). Over-suppression at band
-  level is the safe direction for dedup.
+  a corpus dup, under the same cap/estimate rule. This is the
+  pessimistic one-pass rule — a doc can be suppressed by an earlier
+  doc that was itself suppressed by a still earlier one — chosen
+  because it needs no iteration (greedy-sequential semantics need a
+  transitive closure; the batch CC operators, operators/dedup.py:360,
+  provide that when exactness of the survivor set matters more than
+  one extra shuffle). Over-suppression is the safe direction for
+  dedup.
+- ``t <= 0`` is band-only mode: every colliding key takes the
+  unverified route, so a shared band key alone flags, and the
+  signature side-car is never read.
+- Null texts: the signature is an array of NULLs and ``array_join``
+  skips NULLs, so every band key of a null text is ``md5("")`` — null
+  texts collide with each other in every band. Band-only mode flags
+  them like any collision; at ``t > 0`` their estimate is NULL and
+  never verifies, so they flag only through a mega-key.
 - survivors: neither flag set. ``dedup_index_append`` persists their
-  bands so the next batch sees them.
+  rows so the next batch sees them.
 
 Same lifecycle conventions as the IVF/LSH/inverted layouts: meta via
 fsio (any filesystem scheme), persisted layout schema so a declared
@@ -73,31 +87,20 @@ pipeline the stages are separate jobs and the hazard cannot arise.
 from __future__ import annotations
 
 import json
-import re
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-try:  # classic PySpark ships py4j; Spark Connect clients may not
-    from py4j.protocol import Py4JError as _Py4JError
-    from py4j.protocol import Py4JJavaError as _Py4JJavaError
-except ImportError:  # pragma: no cover - Connect-only environment
-    class _Py4JError(Exception):
-        pass
-
-    class _Py4JJavaError(_Py4JError):
-        pass
 from pyspark.sql import types as T
 
 from .. import fsio
 from ..operators.dedup import _py_minhash, _py_shingles, lsh_band_keys
 from ..sources.tables import append_repartition, widen_cpu_dense
 
-# Round-16 post-materialization narrow (sources/tables.py holds the
-# shared implementation + rationale; ``signature_rows`` widens the
-# kernel input, this un-widens the CHECKPOINT for the ~dozen downstream
-# probe/join jobs). Imported under a module-local name so the A/B
+# Post-materialization narrow (sources/tables.py holds the shared
+# implementation + rationale; ``signature_rows`` widens the kernel
+# input, this un-widens the CHECKPOINT for the ~dozen downstream
+# probe/join jobs). Imported under a module-local name so an A/B
 # harness can seam it per-module.
 from ..sources.tables import narrow_materialized as _narrow_ckpt
 
@@ -262,17 +265,14 @@ def band_rows(index: DedupIndex, docs: DataFrame) -> DataFrame:
 
 
 def _sig_band_rows(index: DedupIndex, docs: DataFrame) -> DataFrame:
-    """``(id, band, key, sig)`` in ONE kernel pass — the verified
-    filter's single batch-side materialization shape (round 14, closing
-    the fixed-floor gap vs band-only mode measured in SCALING.md
-    round 13). The signature rides ONLY on each doc's band-0 row
-    (``sig`` is null elsewhere), so checkpointing this frame costs the
-    band table band-only mode materializes anyway PLUS one sig array
-    per doc — not bands × sig — while every downstream subtree reads
-    bands DIRECTLY from the checkpoint (the round-13 shape checkpointed
-    sigs alone and re-derived explode + slice-md5 inside each consumer
-    job) and the verification joins recover ``(id, sig)`` with a narrow
-    ``band = 0`` filter: no shuffle, no second kernel run."""
+    """``(id, band, key, sig)`` in ONE kernel pass — the single
+    batch-side materialization shape of the filter and of the appends.
+    The signature rides ONLY on each doc's band-0 row (``sig`` is null
+    elsewhere), so checkpointing this frame costs the band table PLUS
+    one sig array per doc — not bands × sig — while every downstream
+    subtree reads bands DIRECTLY from the checkpoint and the
+    verification joins and the sig append recover ``(id, sig)`` with a
+    narrow ``band = 0`` filter: no shuffle, no second kernel run."""
     sigs = signature_rows(index, docs)
     return sigs.select(
         index.id_col,
@@ -350,77 +350,36 @@ def _live(spark: SparkSession, index: DedupIndex, df: DataFrame) -> DataFrame:
     return df.join(F.broadcast(spark.read.parquet(tomb)), index.id_col, "left_anti")
 
 
-def _persist(index: DedupIndex, docs: DataFrame, mode: str) -> None:
-    """One shingle+minhash pass total; the band table derives from the
-    signatures, never from a second pass over the text (the
-    fingerprint_overlap_stats lesson — the two consumers' subtrees can't
+def _persist(index: DedupIndex, docs: DataFrame) -> None:
+    """The build's writes: one shingle+minhash pass total. The sig
+    table is written first and the band table derives from a READ-BACK
+    of it — never a second pass over the text (the
+    fingerprint_overlap_stats lesson: the two consumers' subtrees can't
     ReusedExchange, so an unmaterialized sig frame would run the kernel
-    twice).
-
-    - build (overwrite): write sigs, then derive bands from a READ-BACK
-      of the sig table — streaming 512 B/doc back through the executors
-      scales to a corpus-sized build where no in-memory materialization
-      could.
-    - append: the batch is ingest-sized; localCheckpoint the batch sigs
-      once and feed both writes from the materialized rows (a read-back
-      can't isolate the new batch from the already-appended corpus).
+    twice), and streaming 512 B/doc back through the executors scales
+    to a corpus-sized build where no in-memory materialization could.
 
     Bucketed layouts (``sig_buckets`` > 0) shuffle the sig rows on the
-    bucket column before the partitioned write, so each write lands at
-    most one file per touched bucket instead of (tasks × buckets) shards
-    — an O(rows) shuffle of 512 B/doc rows, cheap at both build and
-    append scale.
+    bucket column before the partitioned write, so the build lands one
+    file set per bucket partition instead of (tasks × buckets) shards.
     """
-    spark = docs.sparkSession
-
-    def _write_sigs(sigs_df: DataFrame, m: str) -> None:
-        if index.sig_buckets:
-            bucketed = sigs_df.withColumn(
-                "sig_bucket", _sig_bucket_expr(index, F.col(index.id_col))
-            )
-            if m == "append":
-                # Size-gated collapse (round 16 — sources/tables.py::
-                # append_repartition): micro-batch appends land one
-                # file per touched bucket; an over-the-ceiling frame
-                # keeps full write parallelism instead of serializing
-                # onto ≤ sig_buckets tasks.
-                bucketed = append_repartition(bucketed, "sig_bucket")
-            else:
-                # Build keeps the unconditional bucket shuffle: one
-                # file set per bucket partition, full-size tasks.
-                bucketed = bucketed.repartition(F.col("sig_bucket"))
-            (
-                bucketed.write.partitionBy("sig_bucket")
-                .mode(m)
-                .parquet(_sigs_path(index))
-            )
-        else:
-            sigs_df.write.mode(m).parquet(_sigs_path(index))
-
-    if mode == "overwrite":
-        # Corpus-sized pass: over-partition 4× so one uneven scan split
-        # can't set the build's wall (signature_rows docstring; measured
-        # 18% off the sf25 sigs pass, SCALING.md round 8).
-        _write_sigs(signature_rows(index, docs, widen_factor=4), mode)
-        sigs = _read_sigs(spark, index)
-        bands = _bands_of_sigs(index, sigs)
+    # Corpus-sized pass: over-partition 4× so one uneven scan split
+    # can't set the build's wall (signature_rows docstring; measured
+    # 18% off the sf25 sigs pass, SCALING.md round 8).
+    sigs = signature_rows(index, docs, widen_factor=4)
+    if index.sig_buckets:
+        (
+            sigs.withColumn("sig_bucket", _sig_bucket_expr(index, F.col(index.id_col)))
+            .repartition(F.col("sig_bucket"))
+            .write.partitionBy("sig_bucket")
+            .mode("overwrite")
+            .parquet(_sigs_path(index))
+        )
     else:
-        sigs = signature_rows(index, docs).localCheckpoint(eager=True)
-        _write_sigs(sigs, mode)
-        # Append-path band rows shuffle onto the band column first —
-        # the same one-file-per-touched-partition discipline the sig
-        # write above has always had: without it every batch append
-        # lands (tasks × bands) shards (measured 256 files / 1.63 s for
-        # a 190-doc append; repartitioned: 8 files / 0.50 s — round
-        # 15). An O(batch·bands) shuffle of 25 B rows, and AQE
-        # coalesces it to a handful of tasks on small batches.
-        # Size-gated since round 16 (append_repartition): a frame over
-        # the collapse ceiling keeps full write parallelism — a
-        # corpus-sized shuffle onto 8 band values would serialize the
-        # write into 8 tasks; compaction owns big-append file hygiene,
-        # same as the BUILD path below.
-        bands = append_repartition(_bands_of_sigs(index, sigs), "band")
-    bands.write.partitionBy("band").mode(mode).parquet(index.path)
+        sigs.write.mode("overwrite").parquet(_sigs_path(index))
+    _bands_of_sigs(index, _read_sigs(docs.sparkSession, index)).write.partitionBy(
+        "band"
+    ).mode("overwrite").parquet(index.path)
 
 
 def build_dedup_index(
@@ -454,118 +413,9 @@ def build_dedup_index(
         text_col=text_col,
         sig_buckets=sig_buckets,
     )
-    _persist(index, docs, "overwrite")
+    _persist(index, docs)
     index.save_meta()
     return index
-
-
-def dedup_index_filter(
-    spark: SparkSession, index: DedupIndex, batch: DataFrame
-) -> DataFrame:
-    """Per-document verdicts for a new batch — see
-    ``dedup_index_filter_with_rows`` (this is its verdict-only view)."""
-    return dedup_index_filter_with_rows(spark, index, batch)[0]
-
-
-def dedup_index_filter_with_rows(
-    spark: SparkSession, index: DedupIndex, batch: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """Per-document verdicts for a new batch against the accepted
-    corpus: ``(id, corpus_dup, within_dup)`` (module docstring pins the
-    exact semantics). Survivors are the rows with neither flag.
-
-    Returns ``(verdicts, sig_band_rows)`` — the second element is the
-    batch's MATERIALIZED ``(id, band, key, sig)`` checkpoint
-    (``_sig_band_rows`` shape), so an ingest loop that appends the
-    survivors afterwards can feed ``dedup_index_append_rows`` instead
-    of re-running the shingle+minhash kernel over text it just
-    fingerprinted (round 15; the crawl intake was paying the kernel
-    twice per batch). Carrying the sig column costs the checkpoint one
-    ~512 B array per doc on top of the band rows it materialized
-    anyway — the round-14 ``_sig_band_rows`` accounting.
-
-    Plan shape: the layout side is read as ``(band, key)`` only — the
-    corpus text is never re-touched (ReadSchema pinned in
-    tests/test_dedupidx.py) — and the layout is NEVER shuffled,
-    whichever side of Spark's broadcast threshold it sits on. A layout
-    within ``autoBroadcastJoinThreshold`` takes the direct semi-join
-    (Spark broadcasts the layout side — already shuffle-free, and the
-    restriction below would only add barrier stages). A BIGGER layout
-    — where the direct join would degrade to a SortMergeJoin that
-    re-shuffles the ENTIRE corpus band table per batch, the same
-    ceiling the verified filter's hot-restriction removed in round 10
-    — evaluates the corpus test as ``layout ⋉ broadcast(batch keys)``
-    (a broadcast hash semi-join the layout scan streams through
-    map-side), and the surviving O(collisions) key set broadcasts back
-    against the batch's bands (plan-pinned in
-    tests/test_dedupidx.py::test_band_filter_never_shuffles_layout).
-    Batches whose key count exceeds ``_BROADCAST_KEYS_MAX`` fall back
-    to the plain shuffle join, same as verified mode. The crossover is
-    Spark's own auto-broadcast decision read from the layout's planner
-    size estimate (``_fits_auto_broadcast`` — driver-side metadata, no
-    job). The batch's band frame feeds two join subtrees
-    (the corpus semi-join and the within-batch anti-join base) whose
-    exchanges cannot be reused, so it is materialized once — without
-    this the shingle+minhash kernel runs twice per filter (the
-    fingerprint_overlap_stats lesson; measured 1.7× on the sf1.0
-    crawl-batch benchmark in SCALING.md)."""
-    id_col = index.id_col
-    sb = _sig_band_rows(index, batch).localCheckpoint(eager=True)
-    # One count over the materialized checkpoint serves the join-strategy
-    # decision AND the width decision (round 16 — _narrow_ckpt: the
-    # kernel runs wide, the dozen downstream jobs over a micro-batch
-    # checkpoint shouldn't).
-    n_rows = sb.count()
-    sb = _narrow_ckpt(sb, n_rows)
-    bands = sb.select(id_col, "band", "key")
-    layout = _live(spark, index, _read_bands(spark, index)).select("band", "key")
-    if (
-        not _fits_auto_broadcast(spark, layout)
-        and n_rows <= _BROADCAST_KEYS_MAX
-    ):
-        # Big layout: (keys that collide) = layout ⋉ broadcast(batch
-        # keys) — the layout scan streams through a map-side broadcast
-        # hash join, no corpus-side exchange — and the result is
-        # bounded by the batch's own key count, so it broadcasts back.
-        # No distinct on the probe side: a semi-join's output is
-        # unchanged by duplicate probe keys, and the dedup exchange
-        # cost more than the ≤ docs·bands extra broadcast rows
-        # (round 15 — one shuffle job per filter call removed).
-        batch_keys = bands.select("band", "key")
-        hot_keys = layout.join(
-            F.broadcast(batch_keys), ["band", "key"], "left_semi"
-        ).distinct()
-        corpus_hits = (
-            bands.join(F.broadcast(hot_keys), ["band", "key"], "left_semi")
-            .select(id_col)
-            .distinct()
-        )
-    else:
-        # Small layout (Spark auto-broadcasts it — already shuffle-free)
-        # or an over-the-ceiling catch-up batch (key set too big to
-        # hint): direct semi-join.
-        corpus_hits = (
-            bands.join(layout, ["band", "key"], "left_semi").select(id_col).distinct()
-        )
-    new_bands = bands.join(corpus_hits, id_col, "left_anti")
-    grp_min = new_bands.groupBy("band", "key").agg(F.min(id_col).alias("_min_id"))
-    within_hits = (
-        new_bands.join(grp_min, ["band", "key"])
-        .filter(F.col(id_col) > F.col("_min_id"))
-        .select(id_col)
-        .distinct()
-    )
-    verdicts = (
-        batch.select(F.col(id_col).cast("long").alias(id_col))
-        .join(corpus_hits.withColumn("_c", F.lit(True)), id_col, "left")
-        .join(within_hits.withColumn("_w", F.lit(True)), id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("_c", F.lit(False)).alias("corpus_dup"),
-            F.coalesce("_w", F.lit(False)).alias("within_dup"),
-        )
-    )
-    return verdicts, sb
 
 
 def _est_sim(a, b, n_hashes: int):
@@ -577,7 +427,7 @@ def _est_sim(a, b, n_hashes: int):
     )
 
 
-#: Above this many batch band keys, the verified filter's corpus
+#: Above this many batch band keys, the filter's corpus
 #: restriction switches from an explicit broadcast hint to a plain
 #: shuffle semi-join: the hint bypasses autoBroadcastJoinThreshold, and
 #: an unbounded catch-up batch (no max_files_per_trigger) could
@@ -586,182 +436,78 @@ def _est_sim(a, b, n_hashes: int):
 _BROADCAST_KEYS_MAX = 1_000_000
 
 
-
-#: Spark's byte-string suffixes (JavaUtils.byteStringAsBytes), parsed in
-#: Python so the threshold check needs no JVM round-trip.
-_BYTE_SUFFIXES = {
-    "": 1, "b": 1,
-    "k": 1024, "kb": 1024,
-    "m": 1024**2, "mb": 1024**2,
-    "g": 1024**3, "gb": 1024**3,
-    "t": 1024**4, "tb": 1024**4,
-    "p": 1024**5, "pb": 1024**5,
-}
-
-
-def _parse_byte_string(s: str) -> int:
-    """``"10MB"`` → 10485760, mirroring the conf layer's
-    ``ConfigHelpers.byteFromString`` (which strips ONE leading ``-`` and
-    negates before handing the rest to JavaUtils' case-insensitive
-    suffix table) — so ``"-1k"`` parses to -1024, a valid disable value
-    for ``spark.sql.autoBroadcastJoinThreshold``, exactly as Spark
-    itself accepts it (advisor finding, round 13; the round-12 shape
-    rejected it and crashed the filter on a conf Spark allows). Raises
-    ValueError on anything Spark's own parser would reject."""
-    sign, body = (-1, s[1:]) if s.startswith("-") else (1, s)
-    m = re.fullmatch(r"\s*(\d+)\s*([A-Za-z]*)\s*", body)
-    if not m or m.group(2).lower() not in _BYTE_SUFFIXES:
-        raise ValueError(f"unparseable byte string: {s!r}")
-    return sign * int(m.group(1)) * _BYTE_SUFFIXES[m.group(2).lower()]
-
-
-def _fits_auto_broadcast(spark: SparkSession, df: DataFrame) -> bool:
-    """True iff Spark's planner would auto-broadcast ``df`` — its
-    optimized-plan size estimate is within
-    ``spark.sql.autoBroadcastJoinThreshold`` (and the threshold isn't
-    disabled). Used as the crossover for the band-only filter's layout
-    restriction: below the threshold a direct semi-join is ALREADY
-    shuffle-free (BroadcastHashJoin on the layout side), so the
-    two-step restriction would only add barrier stages; above it the
-    direct join degrades to a corpus-wide SortMergeJoin shuffle and
-    restriction wins. Pass the PROJECTED frame actually joined (the
-    pruned/filtered layout, not the raw full-width scan) so the
-    estimate mirrors the planner's real decision (advisor finding,
-    round 11). The stats call is driver-side metadata (the file
-    listing already happened when the DataFrame was created); it rides
-    py4j internals unavailable under Spark Connect, so an unreachable
-    estimate reports not-fitting — the caller then takes the
-    restriction path, which keeps the layout unshuffled either way
-    (the scale-safe failure mode, never a silent wrong plan)."""
-    thresh = _parse_byte_string(
-        str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    )
-    if thresh <= 0:
-        return False
-    try:
-        size = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-    except AttributeError:
-        # Missing JVM surface: Spark Connect frames have no `_jdf`
-        # (PySparkAttributeError ⊂ AttributeError).
-        return False
-    except _Py4JError as e:
-        if isinstance(e, _Py4JJavaError):
-            # The JVM evaluated the plan and THREW — a genuine
-            # analysis/optimization error that must surface, not
-            # silently flip the join strategy (advisor findings,
-            # rounds 12 + 13: Py4JJavaError ⊂ Py4JError, so the
-            # round-12 blanket Py4JError catch still swallowed it).
-            raise
-        # Bare Py4JError shapes are gateway/protocol faults (the JVM
-        # never answered) — the stats are unreachable, same as Connect.
-        return False
-    return size <= thresh
-
-
-def dedup_index_filter_verified(
+def dedup_index_filter(
     spark: SparkSession,
     index: DedupIndex,
     batch: DataFrame,
-    threshold: float = 0.5,
-    candidate_cap: int = 64,
-) -> DataFrame:
-    """Verified per-document verdicts — see
-    ``dedup_index_filter_verified_with_rows`` (this is its verdict-only
-    view)."""
-    return dedup_index_filter_verified_with_rows(
-        spark, index, batch, threshold=threshold, candidate_cap=candidate_cap
-    )[0]
-
-
-def dedup_index_filter_verified_with_rows(
-    spark: SparkSession,
-    index: DedupIndex,
-    batch: DataFrame,
-    threshold: float = 0.5,
+    *,
+    threshold: float = 0.0,
     candidate_cap: int = 64,
 ) -> tuple[DataFrame, DataFrame]:
-    """Band-collision candidates VERIFIED by the MinHash similarity
-    estimate (fraction of equal signature positions ≥ ``threshold``) —
-    8×2 banding alone false-positives on a single lucky band; real
-    curation pipelines verify candidates before dropping documents. The
-    verification joins the persisted signature side-car, so the corpus
-    text is STILL never re-touched.
+    """Per-document verdicts ``(id, corpus_dup, within_dup)`` for a new
+    batch against the accepted corpus (module docstring pins the
+    semantics). Survivors are the rows with neither flag.
 
-    Same verdict columns and the same pessimistic one-pass within-batch
-    ordering rule as ``dedup_index_filter``, with "shares a band key"
-    replaced by "shares a band key AND estimate ≥ threshold".
+    A band collision proposes a drop; the MinHash similarity estimate
+    against the persisted signature side-car (fraction of equal
+    signature positions ≥ ``threshold``) disposes — 8×2 banding alone
+    false-positives on a single lucky band. The corpus text is never
+    re-touched either way.
 
     Mega-key routing (the count-first discipline of
     operators/dedup.py:148): a ``(band, key)`` held by more than
-    ``candidate_cap`` corpus docs — boilerplate — auto-flags its batch
-    colliders as corpus_dup WITHOUT pair enumeration (over-suppression
-    is the safe direction, and a key that common is a duplicate factory
-    by construction); only under-cap keys enumerate (batch × corpus)
-    candidate pairs, so the pair count is bounded by
-    cap · batch_bands. Within-batch keys over the cap likewise flag
-    everything above the group min unverified.
+    ``candidate_cap`` live corpus docs — boilerplate — auto-flags its
+    batch colliders as corpus_dup WITHOUT pair enumeration
+    (over-suppression is the safe direction); only under-cap keys
+    enumerate (batch × corpus) candidate pairs, so the pair count is
+    bounded by cap · batch_bands. Within-batch keys over the cap
+    likewise flag everything above the group min unverified.
 
-    Plan shape (the 100 TB path): every corpus-side computation is
-    restricted FIRST to layout rows whose (band, key) appears in the
-    batch — a broadcast semi-join against the batch's O(8·batch) key
-    set (falling back to a plain shuffle semi-join when the batch's key
-    count exceeds ``_BROADCAST_KEYS_MAX``, so an unbounded catch-up run
-    without max_files_per_trigger cannot OOM the driver on the hint) —
-    so the mega-key counts and the candidate enumeration group and join
-    only COLLIDING rows, never the whole layout. Without the
-    restriction the key counts were a corpus-wide shuffle per batch
-    (measured sf1.0→sf5: SCALING.md round 10); with it the layout scan
-    stays the same narrow pruned read as the band-only filter and the
-    shuffle is O(collisions). Count-first since round 12: the per-key
-    counts aggregate ON the streamed restricted scan (nothing
-    collision-proportional is materialized — the round-11 shape
-    checkpointed the full restricted frame first, so one boilerplate
-    key colliding with a large corpus could materialize near-corpus
-    rows before the cap routed it away), and a second pruned pass
-    restricted to the UNDER-cap keys feeds the enumeration — its input
-    is ≤ cap · batch_bands rows by construction. The two materialized
-    frames (key counts, candidate pairs) are both batch-bounded.
+    ``threshold <= 0`` is band-only mode: every colliding key takes the
+    unverified mega-key route (an effective cap of -1) on both the
+    corpus and the within-batch side. A shared band key alone flags,
+    null texts included, and the signature side-car and the estimator
+    never enter the plan.
 
-    The signature fetch prunes too (bucketed layouts): candidate corpus
-    ids are mapped to their ``sig_bucket`` partitions and the side-car
-    scan reads ONLY those directories — static partition pruning, so
-    the verified path's one remaining corpus-proportional per-batch
-    cost (the full (id, sig) side-car scan, flagged in SCALING.md
-    round 10) is gone. Legacy unpartitioned layouts (sig_buckets=0)
-    keep the full-scan read path.
+    Plan shape: every corpus-side computation is restricted FIRST to
+    layout rows whose (band, key) appears in the batch — the layout
+    scan, read as ``(band, key)`` only, streams through a broadcast
+    hash semi-join against the batch's O(8·batch) key set, so the
+    layout is never shuffled (falling back to a plain shuffle
+    semi-join when the batch's key count exceeds
+    ``_BROADCAST_KEYS_MAX``, so an unbounded catch-up run cannot OOM
+    the driver on the hint). The per-key collision counts aggregate
+    on that streamed scan and are the only thing materialized from it
+    — bounded by the batch's own key count, never by a hot key's
+    corpus frequency. A second pruned pass restricted to the UNDER-cap
+    keys feeds the enumeration (≤ cap · batch_bands rows by
+    construction). On bucketed layouts the signature fetch reads only
+    the ``sig_bucket`` partitions holding candidate ids (static
+    partition pruning); legacy unpartitioned layouts (sig_buckets=0)
+    keep the full-scan read.
 
-    Batch-side floor (round 14): ONE materialization shared by bands
-    and signatures (``_sig_band_rows`` — sig rides the band-0 rows), so
-    verified mode's checkpoint is band-only mode's band table plus one
-    sig array per doc, downstream subtrees never re-derive the
-    explode + slice-md5, and on the fresh path (``no_under``) two
-    further probes over already-materialized frames collapse the final
-    plan: an empty ``key_counts`` drops the over-cap semi-join, and a
-    batch with no repeated (band, key) drops the entire within-batch
-    groupBy/self-join/verification algebra (provably empty — group
-    sizes in ``new_bands`` only shrink vs ``bands``). Neither probe
-    adds a job on the collision-rich profile.
+    Batch side: ONE materialization shared by bands and signatures
+    (``_sig_band_rows`` — sig rides the band-0 rows), and two probes
+    over already-materialized frames collapse the final plan when no
+    under-cap key collides: an empty ``key_counts`` drops the over-cap
+    semi-join, and a batch with no repeated (band, key) drops the
+    entire within-batch groupBy/self-join algebra (provably empty —
+    group sizes in ``new_bands`` only shrink vs ``bands``).
 
-    Returns ``(verdicts, sig_band_rows)`` like
-    ``dedup_index_filter_with_rows`` — the second element is the
-    batch's materialized ``(id, band, key, sig)`` checkpoint, reusable
-    by ``dedup_index_append_rows`` so an ingest loop never runs the
-    kernel twice over one batch (round 15)."""
+    Returns ``(verdicts, sig_band_rows)`` — the second element is the
+    batch's MATERIALIZED ``(id, band, key, sig)`` checkpoint, which
+    ``dedup_index_append_rows`` takes restricted to the survivors, so
+    an ingest loop never runs the shingle+minhash kernel twice over
+    one batch."""
     id_col = index.id_col
-    # ONE batch-side materialization: bands AND signatures ride the same
-    # checkpoint (sig on band-0 rows only — _sig_band_rows docstring).
-    # The round-13 shape checkpointed sigs alone, so the key-counts job
-    # and every final-plan subtree re-derived explode + slice-md5 from
-    # the checkpoint, and the checkpoint itself was a DIFFERENT (purely
-    # additional) materialization than band-only mode's — the fixed
-    # batch-side floor the zero-collision A/B measured at 2.47 s vs
-    # band-only's 1.31 s (SCALING.md round 13, VERDICT r13 gap #3).
+    # Band-only mode routes every colliding key through the unverified
+    # leg: verifying at threshold <= 0 would still drop null texts,
+    # whose estimate is NULL.
+    cap = candidate_cap if threshold > 0 else -1
     sb = _sig_band_rows(index, batch).localCheckpoint(eager=True)
     # One count over the materialized checkpoint serves the broadcast
-    # decision below AND the checkpoint-width decision (round 16 —
-    # _narrow_ckpt docstring: wide kernel, narrow downstream).
+    # decision below AND the checkpoint-width decision (_narrow_ckpt:
+    # wide kernel, narrow downstream).
     n_rows = sb.count()
     sb = _narrow_ckpt(sb, n_rows)
     bands = sb.select(id_col, "band", "key")
@@ -772,10 +518,9 @@ def dedup_index_filter_verified_with_rows(
     # mega-key counts — a deleted boilerplate cluster must not keep its
     # band key over the cap and auto-suppress future batches.
     layout = _live(spark, index, _read_bands(spark, index))
-    # No distinct on the probe side (round 15): the key-counts semi-join
-    # and the under/over semi-joins are unchanged by duplicate probe
-    # keys, and the dedup exchange cost more than the ≤ docs·bands
-    # extra broadcast rows.
+    # No distinct on the probe side: the semi-joins are unchanged by
+    # duplicate probe keys, and the dedup exchange cost more than the
+    # ≤ docs·bands extra broadcast rows.
     batch_keys = bands.select("band", "key")
     # sb is materialized, so its count (= docs · bands) is a cheap upper
     # bound on the distinct key count — no extra shuffle to decide the
@@ -783,36 +528,24 @@ def dedup_index_filter_verified_with_rows(
     small_batch = n_rows <= _BROADCAST_KEYS_MAX
     if small_batch:
         batch_keys = F.broadcast(batch_keys)
-    # Count-first, end-to-end (the operators/dedup.py:148 discipline):
-    # the per-key collision counts aggregate directly on the STREAMED
-    # ``layout ⋉ batch_keys`` scan — map-side partial combine, and the
-    # ONLY thing materialized is the aggregated counts themselves,
-    # bounded by the batch's own key count. Nothing
-    # collision-proportional ever touches executor storage: a
-    # boilerplate-heavy batch whose one hot key collides with half a
-    # billion-doc corpus used to checkpoint every one of those rows
-    # before routing; now an over-cap key routes to the no-enumeration
-    # path having only ever existed as one count row (measured: the
-    # hot-key A/B in SCALING.md round 12).
+    # Count-first: the per-key collision counts aggregate directly on
+    # the STREAMED ``layout ⋉ batch_keys`` scan (map-side partial
+    # combine); an over-cap key routes to the no-enumeration path
+    # having only ever existed as one count row.
     key_counts = (
         layout.join(batch_keys, ["band", "key"], "left_semi")
         .groupBy("band", "key")
         .agg(F.count(F.lit(1)).alias("_n"))
         .localCheckpoint(eager=True)
     )
-    over = key_counts.filter(F.col("_n") > candidate_cap).select("band", "key")
-    under = key_counts.filter(F.col("_n") <= candidate_cap).select("band", "key")
-    # Emptiness probes on the SAME frame the enumeration would join (one
-    # predicate, no drift — advisor finding, round 12), taken before the
-    # broadcast hint: ONE aggregate over the already-materialized counts
-    # answers both "any under-cap key?" and "any collision at all?"
-    # (round 16 — the previous shape was two separate limit(1).count()
-    # jobs; the counts table is batch-bounded, so the full agg costs the
-    # same one tiny job and halves the probe round-trips), never a job
-    # against the layout.
+    over = key_counts.filter(F.col("_n") > cap).select("band", "key")
+    under = key_counts.filter(F.col("_n") <= cap).select("band", "key")
+    # ONE aggregate over the materialized counts answers both "any
+    # under-cap key?" and "any collision at all?" — never a job against
+    # the layout.
     kc_probe = key_counts.agg(
         F.count(F.lit(1)).alias("_nk"),
-        F.count(F.when(F.col("_n") <= candidate_cap, True)).alias("_nu"),
+        F.count(F.when(F.col("_n") <= cap, True)).alias("_nu"),
     ).head()
     no_under = kc_probe["_nu"] == 0
     if small_batch:
@@ -820,29 +553,16 @@ def dedup_index_filter_verified_with_rows(
         # key_counts), so the small-batch guard covers it too.
         under = F.broadcast(under)
     # No inner distinct: corpus_hits' outer union-distinct below is the
-    # one load-bearing dedup — an inner one was a pure extra exchange
-    # over a batch-bounded frame (round 16; same for verified_hits and
-    # the within-batch hit legs).
+    # one load-bearing dedup.
     auto_hits = bands.join(over, ["band", "key"], "left_semi").select(id_col)
     if no_under:
         # No under-cap colliding key ⇒ the candidate set is provably
-        # empty, so skip the second layout pass AND the whole
-        # signature-verification subtree — the bucketed layouts'
-        # candidate checkpoint + bucket collect and the side-car read
-        # were still paid as jobs over a provably-empty frame before
-        # round 13 (advisor finding). This is the count-first dividend
-        # on the two batch shapes where the extra pass would hurt most:
-        # a fully FRESH batch (no collisions at all — the common
-        # diverse-crawl case) and a boilerplate-heavy batch whose every
-        # collision is over-cap (measured in the hot-key A/B,
-        # SCALING.md round 12).
+        # empty: skip the second layout pass AND the whole
+        # signature-verification subtree (always so at threshold <= 0).
         verified_hits = bands.select(id_col).limit(0)
         if kc_probe["_nk"] == 0:
             # Nothing collided at all (the fresh-batch common case):
-            # the corpus side is provably empty — drop the over-cap
-            # semi-join from the final plan too, not just the
-            # verification subtree. The answer rode the one probe
-            # aggregate above — no second job.
+            # drop the over-cap semi-join from the final plan too.
             auto_hits = verified_hits
     else:
         # Second pruned layout pass reads ONLY under-cap keys' colliding
@@ -892,12 +612,10 @@ def dedup_index_filter_verified_with_rows(
     corpus_hits = auto_hits.unionByName(verified_hits).distinct()
 
     # Within-batch short-circuit, fresh path only (when the corpus side
-    # already ran verification, the within joins are marginal — no new
-    # probe job on the collision-rich profile): if NO (band, key) is
-    # shared by two batch docs, every within-batch group has size 1 in
-    # ``bands`` and hence in its subset ``new_bands``, so wauto and
-    # wpairs are provably empty — skip the groupBy, self-join, and
-    # signature-verification exchanges entirely. The probe is one
+    # ran verification, the within joins are marginal — no new probe
+    # job on the collision-rich profile): if NO (band, key) is shared
+    # by two batch docs, every within-batch group has size 1 in
+    # ``bands`` and hence in its subset ``new_bands``. The probe is one
     # batch-bounded agg over the materialized checkpoint.
     no_within = no_under and (
         bands.groupBy("band", "key")
@@ -914,36 +632,43 @@ def dedup_index_filter_verified_with_rows(
         wcounts = new_bands.groupBy("band", "key").agg(
             F.count(F.lit(1)).alias("_n"), F.min(id_col).alias("_min_id")
         )
-        wover = wcounts.filter(F.col("_n") > candidate_cap)
-        wauto = (
+        wover = wcounts.filter(F.col("_n") > cap)
+        within_hits = (
             new_bands.join(wover.select("band", "key", "_min_id"), ["band", "key"])
             .filter(F.col(id_col) > F.col("_min_id"))
             .select(id_col)
         )
-        wunder = wcounts.filter(F.col("_n") <= candidate_cap).select("band", "key")
-        wpairs = (
-            new_bands.join(wunder, ["band", "key"], "left_semi")
-            .alias("l")
-            .join(
-                new_bands.join(wunder, ["band", "key"], "left_semi").alias("r"),
-                ["band", "key"],
+        if cap >= 0:
+            wunder = wcounts.filter(F.col("_n") <= cap).select("band", "key")
+            wpairs = (
+                new_bands.join(wunder, ["band", "key"], "left_semi")
+                .alias("l")
+                .join(
+                    new_bands.join(wunder, ["band", "key"], "left_semi").alias("r"),
+                    ["band", "key"],
+                )
+                .filter(F.col(f"l.{id_col}") > F.col(f"r.{id_col}"))
+                .select(
+                    F.col(f"l.{id_col}").alias(id_col),
+                    F.col(f"r.{id_col}").alias("_rid"),
+                )
+                .distinct()
             )
-            .filter(F.col(f"l.{id_col}") > F.col(f"r.{id_col}"))
-            .select(
-                F.col(f"l.{id_col}").alias(id_col), F.col(f"r.{id_col}").alias("_rid")
+            wverified = (
+                wpairs.join(bsigs.withColumnRenamed("sig", "_ls"), id_col)
+                .join(
+                    bsigs.select(
+                        F.col(id_col).alias("_rid"), F.col("sig").alias("_rs")
+                    ),
+                    "_rid",
+                )
+                .filter(
+                    _est_sim(F.col("_ls"), F.col("_rs"), index.n_hashes) >= threshold
+                )
+                .select(id_col)
             )
-            .distinct()
-        )
-        wverified = (
-            wpairs.join(bsigs.withColumnRenamed("sig", "_ls"), id_col)
-            .join(
-                bsigs.select(F.col(id_col).alias("_rid"), F.col("sig").alias("_rs")),
-                "_rid",
-            )
-            .filter(_est_sim(F.col("_ls"), F.col("_rs"), index.n_hashes) >= threshold)
-            .select(id_col)
-        )
-        within_hits = wauto.unionByName(wverified).distinct()
+            within_hits = within_hits.unionByName(wverified)
+        within_hits = within_hits.distinct()
     verdicts = (
         batch.select(F.col(id_col).cast("long").alias(id_col))
         .join(corpus_hits.withColumn("_c", F.lit(True)), id_col, "left")
@@ -960,20 +685,19 @@ def dedup_index_filter_verified_with_rows(
 def dedup_index_append_rows(index: DedupIndex, sig_band_rows: DataFrame) -> None:
     """Persist band rows AND signatures from an ALREADY-COMPUTED
     ``(id, band, key, sig)`` frame (the ``_sig_band_rows`` shape: one
-    row per (doc, band), the sig array riding each doc's band-0 row) —
-    the zero-recompute twin of ``dedup_index_append`` for ingest loops
-    that just filtered the same batch: the filter's materialized
-    checkpoint, restricted to the surviving ids, IS this frame, so the
+    row per (doc, band), the sig array riding each doc's band-0 row).
+    An ingest loop that just filtered the batch passes the filter's
+    materialized checkpoint restricted to the surviving ids, so the
     append runs no shingle+minhash kernel and no extra materialization
-    job at all (round 15; the crawl loop previously re-fingerprinted
-    every survivor's text on append). The caller must pass
-    MATERIALIZED rows (the ``_with_rows`` filters return a
-    localCheckpoint) — the writes below are two separate actions and an
-    unmaterialized frame would recompute between them.
+    job. The caller must pass MATERIALIZED rows — the writes below are
+    two separate actions and an unmaterialized frame would recompute
+    between them.
 
-    Writes are byte-identical to ``dedup_index_append``'s: the same
-    bucketed sig side-car shuffle-then-partitioned write, the same
-    band-partitioned append (``_persist`` docstring)."""
+    Both writes are size-gated collapses onto the partition column
+    (sources/tables.py::append_repartition): a micro-batch append lands
+    one file per touched ``sig_bucket`` / ``band`` partition instead of
+    (tasks × partitions) shards, and a frame over the collapse ceiling
+    keeps full write parallelism (compaction owns its file hygiene)."""
     id_col = index.id_col
     sigs = sig_band_rows.filter(F.col("band") == 0).select(id_col, "sig")
     if index.sig_buckets:
@@ -990,9 +714,6 @@ def dedup_index_append_rows(index: DedupIndex, sig_band_rows: DataFrame) -> None
         )
     else:
         sigs.write.mode("append").parquet(_sigs_path(index))
-    # Same size-gated band-column shuffle as _persist's append path: one
-    # file per touched band partition instead of (tasks × bands) shards
-    # on micro-batches; full parallelism above the collapse ceiling.
     append_repartition(
         sig_band_rows.select(id_col, "band", "key"), "band"
     ).write.partitionBy("band").mode("append").parquet(index.path)
@@ -1001,14 +722,17 @@ def dedup_index_append_rows(index: DedupIndex, sig_band_rows: DataFrame) -> None
 def dedup_index_append(index: DedupIndex, docs: DataFrame) -> None:
     """Persist the band rows AND signatures of newly accepted documents
     — blind appends, O(batch); the existing layout is never read or
-    rewritten.
+    rewritten. The batch is fingerprinted once and materialized, then
+    written by ``dedup_index_append_rows``.
 
     Doc ids are assumed unique for the layout's lifetime (the
     package-wide contract, same as IVF/LSH/inverted): appending a NEW
     document under a previously-DELETED id would be suppressed by that
     id's tombstone until the next compaction — standard deletion-vector
     semantics, so don't recycle ids."""
-    _persist(index, docs, "append")
+    dedup_index_append_rows(
+        index, _sig_band_rows(index, docs).localCheckpoint(eager=True)
+    )
 
 
 #: Above this many delete ids, ``dedup_index_delete`` switches from

@@ -898,13 +898,13 @@ def dedup_incremental_index_filter(spark: SparkSession, sf_dir: str) -> DataFram
         # action lets exchange reuse silently substitute the stale file
         # listing for the fresh one (index/dedupidx.py module docstring;
         # regression-pinned in tests/test_dedupidx.py).
-        v1 = dedup_index_filter(spark, index, b1).localCheckpoint(eager=True)
+        v1 = dedup_index_filter(spark, index, b1)[0].localCheckpoint(eager=True)
         surv1 = b1.join(
             v1.filter(~F.col("corpus_dup") & ~F.col("within_dup")).select("doc_id"),
             "doc_id",
         )
         dedup_index_append(index, surv1)
-        v2 = dedup_index_filter(spark, index, b2)
+        v2 = dedup_index_filter(spark, index, b2)[0]
         out = flags(v1, "b1").unionByName(flags(v2, "b2"))
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
@@ -939,7 +939,7 @@ _SIM_SQL = (
 def _verified_ctes(cap: int, threshold: float = 0.5) -> str:
     """The verified-filter algebra as a CTE-chain fragment over
     relations named ``corpus`` and ``batch`` (csig → wdup) — the exact
-    SQL mirror of index/dedupidx.py::dedup_index_filter_verified:
+    SQL mirror of index/dedupidx.py::dedup_index_filter at threshold > 0:
     mega-key counts and routing at ``cap``, signature-estimate
     verification at ``threshold``, and the pessimistic one-pass
     within-batch rule. Shared by the verified-filter oracle and the
@@ -1035,7 +1035,7 @@ FROM batch b
 )
 def dedup_incremental_verified_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The verified incremental-dedup filter
-    (index/dedupidx.py::dedup_index_filter_verified): band-collision
+    (index/dedupidx.py::dedup_index_filter, threshold 0.5): band-collision
     candidates must clear the MinHash similarity estimate (signature-
     equality fraction ≥ 0.5) before a document is dropped, with
     count-first mega-key routing — five exact copies of document 0
@@ -1047,7 +1047,7 @@ def dedup_incremental_verified_filter(spark: SparkSession, sf_dir: str) -> DataF
     import shutil
     import tempfile
 
-    from ..index.dedupidx import build_dedup_index, dedup_index_filter_verified
+    from ..index.dedupidx import build_dedup_index, dedup_index_filter
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     base = docs.filter(F.col("doc_id") % 3 < 2)
@@ -1079,9 +1079,9 @@ def dedup_incremental_verified_filter(spark: SparkSession, sf_dir: str) -> DataF
     work = tempfile.mkdtemp(prefix="dedup_incr_v_")
     try:
         index = build_dedup_index(corpus, f"{work}/idx")
-        out = dedup_index_filter_verified(
+        out = dedup_index_filter(
             spark, index, batch, threshold=0.5, candidate_cap=2
-        ).select(
+        )[0].select(
             "doc_id",
             F.col("corpus_dup").cast("int").alias("corpus_dup"),
             F.col("within_dup").cast("int").alias("within_dup"),
@@ -1152,7 +1152,7 @@ def dedup_incremental_verified_fresh_filter(
     import shutil
     import tempfile
 
-    from ..index.dedupidx import build_dedup_index, dedup_index_filter_verified
+    from ..index.dedupidx import build_dedup_index, dedup_index_filter
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     base = docs.filter(F.col("doc_id") % 3 < 2)
@@ -1189,9 +1189,9 @@ def dedup_incremental_verified_fresh_filter(
     work = tempfile.mkdtemp(prefix="dedup_incr_sc_")
     try:
         index = build_dedup_index(corpus, f"{work}/idx")
-        out = dedup_index_filter_verified(
+        out = dedup_index_filter(
             spark, index, batch, threshold=0.5, candidate_cap=2
-        ).select(
+        )[0].select(
             "doc_id",
             F.col("corpus_dup").cast("int").alias("corpus_dup"),
             F.col("within_dup").cast("int").alias("within_dup"),
@@ -1308,7 +1308,7 @@ def dedup_incremental_delete_compact(spark: SparkSession, sf_dir: str) -> DataFr
         index = build_dedup_index(corpus, f"{work}/idx")
         # Materialize each stage before the next mutation (the
         # exchange-reuse discipline from index/dedupidx.py's docstring).
-        v0 = dedup_index_filter(spark, index, batch).localCheckpoint(eager=True)
+        v0 = dedup_index_filter(spark, index, batch)[0].localCheckpoint(eager=True)
         victims = [
             r[0]
             for r in corpus.filter(F.col("doc_id") % 7 == 0)
@@ -1316,9 +1316,9 @@ def dedup_incremental_delete_compact(spark: SparkSession, sf_dir: str) -> DataFr
             .collect()
         ]
         assert dedup_index_delete(spark, index, victims) == len(victims)
-        v1 = dedup_index_filter(spark, index, batch).localCheckpoint(eager=True)
+        v1 = dedup_index_filter(spark, index, batch)[0].localCheckpoint(eager=True)
         compacted = dedup_index_compact(spark, index, f"{work}/idx_v2")
-        v2 = dedup_index_filter(spark, compacted, batch)
+        v2 = dedup_index_filter(spark, compacted, batch)[0]
         out = (
             flags(v0, "pre")
             .unionByName(flags(v1, "post"))
@@ -1417,7 +1417,7 @@ def dedup_incremental_batch_filter(spark: SparkSession, sf_dir: str) -> DataFram
         )
     )
     index = get_dedup_index(spark, sf_dir)
-    return dedup_index_filter(spark, index, b1).select(
+    return dedup_index_filter(spark, index, b1)[0].select(
         "doc_id",
         F.col("corpus_dup").cast("int").alias("corpus_dup"),
         F.col("within_dup").cast("int").alias("within_dup"),
@@ -1459,7 +1459,7 @@ def dedup_incremental_verified_batch_filter(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """The crawl-ingest cost line in PRODUCTION mode: the fixed replica-0
-    batch filtered through dedup_index_filter_verified (threshold 0.5,
+    batch filtered through dedup_index_filter (threshold 0.5,
     cap 64) against the prebuilt cached corpus index — the verified twin
     of dedup_incremental_batch_filter, sharing its corpus layout and
     batch bytes so the two lines isolate exactly the verification
@@ -1469,7 +1469,7 @@ def dedup_incremental_verified_batch_filter(
     restricted (band, key) scan, and since round 11 the signature
     side-car read prunes to candidate id buckets instead of scanning
     the full (id, sig) table per batch."""
-    from ..index.dedupidx import dedup_index_filter_verified
+    from ..index.dedupidx import dedup_index_filter
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     b1 = docs.filter(F.col("doc_id") < 5000).unionByName(
@@ -1478,9 +1478,9 @@ def dedup_incremental_verified_batch_filter(
         )
     )
     index = get_dedup_index(spark, sf_dir)
-    return dedup_index_filter_verified(
+    return dedup_index_filter(
         spark, index, b1, threshold=0.5, candidate_cap=64
-    ).select(
+    )[0].select(
         "doc_id",
         F.col("corpus_dup").cast("int").alias("corpus_dup"),
         F.col("within_dup").cast("int").alias("within_dup"),

@@ -1122,7 +1122,7 @@ def stream_crawl_verified_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup-gated intake loop with ``verified=True``
     (streaming/crawl.py): band collision proposes, the MinHash
     similarity estimate disposes (index/dedupidx.py::
-    dedup_index_filter_verified), so a single lucky band no longer
+    dedup_index_filter at threshold 0.5), so a single lucky band no longer
     drops a genuinely new document — the precision dial a diverse
     real crawl needs (the band-only gate suppressed 10,000/10,000 on a
     replica-saturated sf25 corpus; SCALING.md round 9/10). Two

@@ -83,9 +83,11 @@ APPEND_COLLAPSE_MAX_BYTES = int(
 def plan_size_bytes(df: DataFrame) -> int | None:
     """The optimizer's size estimate for ``df`` (driver-side metadata,
     no job), or ``None`` when the JVM surface is unreachable (Spark
-    Connect / gateway faults — mirroring the error discipline of
-    index/dedupidx.py::_fits_auto_broadcast: a genuine analysis error
-    raises, an unreachable estimate reports unknown)."""
+    Connect has no ``_jdf``; a bare Py4J error is a gateway/protocol
+    fault). An error the JVM raised while evaluating the plan
+    (``Py4JJavaError``) and any other exception propagate — a genuine
+    analysis error must surface, never silently change a size-gated
+    plan decision."""
     try:
         return int(
             str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())

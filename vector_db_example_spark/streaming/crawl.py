@@ -11,8 +11,9 @@ package's persisted layouts into that intake loop, per micro-batch:
 
 1. **filter** the batch against the persisted incremental-dedup layout
    (index/dedupidx.py::dedup_index_filter — one narrow (band, key)
-   corpus scan + one AQE-splittable shuffle join; the accepted corpus's
-   text is never re-read),
+   corpus scan restricted to the batch's keys by a broadcast
+   semi-join, plus the bucket-pruned signature check in verified
+   mode; the accepted corpus's text is never re-read),
 2. **report** the per-document verdicts to a partitioned verdict sink
    (the curation audit trail: every dropped doc_id is attributable to a
    corpus collision or a within-batch collision),
@@ -75,8 +76,7 @@ from ..functions.embedding import hashing_embedder
 from ..index.dedupidx import (
     DedupIndex,
     dedup_index_append_rows,
-    dedup_index_filter_verified_with_rows,
-    dedup_index_filter_with_rows,
+    dedup_index_filter,
 )
 from ..index.ivf import IVFIndex, assign_cells
 from ..sources.tables import append_repartition
@@ -138,10 +138,12 @@ def stream_crawl_ingest(
 
     ``verified`` is the admission PRECISION dial: band collision alone
     proposes a drop, the MinHash similarity estimate disposes
-    (index/dedupidx.py::dedup_index_filter_verified — signature-equality
-    fraction ≥ ``sim_threshold``, with ``candidate_cap`` mega-key
-    routing so boilerplate keys auto-flag without pair enumeration).
-    The default band-only filter is the cheap recall-biased mode — on a
+    (index/dedupidx.py::dedup_index_filter at ``threshold=sim_threshold``
+    — signature-equality fraction ≥ ``sim_threshold``, with
+    ``candidate_cap`` mega-key routing so boilerplate keys auto-flag
+    without pair enumeration). ``verified=False`` runs the same filter
+    at ``threshold=0.0``, where every colliding key flags unverified
+    and ``candidate_cap`` has no effect: the cheap recall-biased mode — on a
     replica-saturated corpus it suppressed 10,000/10,000 batch docs
     (SCALING.md round 9), the designed direction there, but a diverse
     real crawl false-drops genuinely new documents on single lucky
@@ -201,24 +203,17 @@ def stream_crawl_ingest(
             return
         # One evaluation of the filter's shingle+minhash kernel feeding
         # the verdict write, the survivor join, the counts, AND the
-        # closing dedup append (the filter's materialized (id, band,
-        # key, sig) checkpoint comes back via the _with_rows variants —
-        # round 15: the append used to re-fingerprint every survivor's
-        # text) — and a pre-append materialization, so no later read of
-        # the layout can be substituted for this one
-        # (index/dedupidx.py hazard note).
-        if verified:
-            verdicts, sig_rows = dedup_index_filter_verified_with_rows(
-                spark,
-                dedup_index,
-                batch,
-                threshold=sim_threshold,
-                candidate_cap=candidate_cap,
-            )
-        else:
-            verdicts, sig_rows = dedup_index_filter_with_rows(
-                spark, dedup_index, batch
-            )
+        # closing dedup append (the filter returns its materialized
+        # (id, band, key, sig) checkpoint) — and a pre-append
+        # materialization, so no later read of the layout can be
+        # substituted for this one (index/dedupidx.py hazard note).
+        verdicts, sig_rows = dedup_index_filter(
+            spark,
+            dedup_index,
+            batch,
+            threshold=sim_threshold if verified else 0.0,
+            candidate_cap=candidate_cap,
+        )
         if benchmark_fps is not None:
             from ..operators.dedup import contamination_fingerprint
 
