@@ -405,6 +405,73 @@ def test_marker_records_batch_counts(spark, tmp_path, crawl_env):
     assert reports == [{"seen": 2, "accepted": 1}, {"seen": 4, "accepted": 2}]
 
 
+def test_overlapped_writes_keep_the_callers_job_group(spark):
+    """A write submitted through ``sources/tables.py::overlapped`` runs
+    with the caller's local properties: its jobs land in the caller's
+    job group (so cancelling a streaming query's group cancels them),
+    where a bare pool thread starts from an empty JVM thread."""
+    import uuid
+    from concurrent.futures import ThreadPoolExecutor
+
+    from vector_db_example_spark.sources.tables import overlapped
+
+    sc = spark.sparkContext
+    group = f"overlap-{uuid.uuid4().hex}"
+    seen = {}
+
+    def job(tag):
+        def run():
+            seen[tag] = sc.getLocalProperty("spark.jobGroup.id")
+            spark.range(10).count()
+
+        return run
+
+    sc.setJobGroup(group, group)
+    try:
+        with overlapped(spark) as submit:
+            submit(job("overlapped"))
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            pool.submit(job("bare")).result()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert seen == {"overlapped": group, "bare": None}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 1
+
+
+def test_failing_inverted_append_surfaces_ivf_failure(
+    spark, tmp_path, crawl_env, monkeypatch
+):
+    """The postings append runs on the sink's own thread while the IVF
+    append overlaps it. When both fail, the postings failure is raised
+    and the IVF failure is attached to it, never dropped."""
+    from vector_db_example_spark.index import inverted
+    from vector_db_example_spark.index.inverted import build_inverted_index
+    from vector_db_example_spark.streaming import crawl
+
+    didx, vidx, src_dir = crawl_env
+    iidx = build_inverted_index(
+        spark.createDataFrame(CORPUS, DOC_SCHEMA), str(tmp_path / "inv")
+    )
+
+    def fail(what):
+        def raise_(*a, **k):
+            raise RuntimeError(f"{what} append failed")
+
+        return raise_
+
+    monkeypatch.setattr(inverted, "append_to_inverted_index", fail("postings"))
+    monkeypatch.setattr(crawl, "append_repartition", fail("ivf"))
+    with pytest.raises(Exception) as err:
+        stream_crawl_ingest(
+            spark, src_dir, didx, vidx, str(tmp_path / "ckpt"),
+            max_files_per_trigger=1, inverted_index=iidx,
+        )
+    assert "postings append failed" in str(err.value)
+    assert "ivf append failed" in str(err.value)
+
+
 def test_mismatched_id_cols_raise(spark, tmp_path, crawl_env):
     """An IVF handle whose id column differs from the dedup handle's
     must be rejected up front — the append would otherwise persist rows

@@ -313,7 +313,7 @@ def test_filter_never_rereads_corpus_text(spark, tmp_path_factory):
 
         plans = checkpointed_plans(spark, run)
         scans = [ln for p in plans for ln in p.splitlines() if "ReadSchema" in ln]
-        assert any("key:string" in ln for ln in scans), "expected a layout scan"
+        assert any("key:binary" in ln for ln in scans), "expected a layout scan"
         assert all("text" not in ln for ln in scans), scans
 
 
@@ -539,7 +539,7 @@ def _layout_scan_to_join(plan: str) -> list[list[str]]:
     node = [re.sub(r"^\*\(\d+\) ", "", ln.lstrip(" :+-")) for ln in lines]
     chains = []
     for i, ln in enumerate(node):
-        if not ln.startswith("FileScan parquet") or "key:string" not in ln:
+        if not ln.startswith("FileScan parquet") or "key:binary" not in ln:
             continue
         chain, j = [ln], i
         while not chain[-1].split(" ")[0].endswith("Join"):
@@ -738,6 +738,108 @@ def test_compact_migrates_sig_buckets(spark, tmp_path_factory):
         p.startswith("sig_bucket=") for p in os.listdir(_sigs_path(downgraded))
     )
     assert verified(downgraded) == before
+
+
+def _write_hex_layout(spark, docs, path: str, sig_buckets: int = 8) -> None:
+    """A layout as builds before binary digests wrote it: hex band keys
+    and hex signatures straight from the Catalyst expressions, and a
+    meta without ``hash_format``."""
+    import json
+
+    from vector_db_example_spark.operators.dedup import (
+        lsh_band_keys,
+        minhash_signature,
+        shingles,
+    )
+
+    sigs = docs.select(
+        "doc_id", minhash_signature(shingles(F.col("text"), k=3), n_hashes=16).alias("sig")
+    ).localCheckpoint(eager=True)
+    sigs.withColumn(
+        "sig_bucket", F.pmod(F.col("doc_id"), F.lit(sig_buckets)).cast("int")
+    ).write.partitionBy("sig_bucket").parquet(f"{path}_sigs")
+    sigs.select("doc_id", F.explode(lsh_band_keys(F.col("sig"), 8, 2)).alias("bk")).select(
+        "doc_id", F.col("bk.key").alias("key"), F.col("bk.band").alias("band")
+    ).write.partitionBy("band").parquet(path)
+    meta = {
+        "shingle_k": 3, "n_hashes": 16, "bands": 8, "id_col": "doc_id",
+        "text_col": "text", "sig_buckets": sig_buckets,
+    }
+    open(f"{path}/_dedup_meta.json", "w").write(json.dumps(meta))
+
+
+def test_legacy_hex_layout_filters_appends_and_migrates(spark, tmp_path_factory):
+    """A hex layout (meta without ``hash_format``) reads through
+    ``unhex``: after an append (which keeps writing hex), the filter at
+    thresholds 0 and 0.5 — mega-key route and null texts included —
+    gives the verdicts of a binary build of the same documents (the
+    model ``test_verified_filter_matches_model`` pins builds to). One
+    compaction migrates it to binary digests with every verdict and
+    every ``dedup_layout_stats`` row unchanged."""
+    from pyspark.sql import types as T
+
+    from vector_db_example_spark.index.dedupidx import (
+        _sigs_path,
+        dedup_index_compact,
+    )
+    from vector_db_example_spark.index.stats import dedup_layout_stats
+
+    d = str(tmp_path_factory.mktemp("dedupidx_hex"))
+    boiler = "shared boilerplate footer text for every page"
+    corpus = (
+        [(i, f"corpus doc {i} alpha beta gamma delta") for i in range(12)]
+        + [(20 + i, f"{boiler} {i}") for i in range(5)]
+        + [(30, None), (31, "the quick brown fox jumps over the lazy dog")]
+    )
+    extra = [(200, "appended later with its own words"), (201, None)]
+    batch = [
+            (100, "corpus doc 3 alpha beta gamma delta"),  # exact corpus dup
+            (101, "corpus doc 4 alpha beta gamma omega"),  # near dup
+            (102, f"{boiler} 99"),  # boilerplate collider
+            (103, None),
+            (104, "fresh words nobody has written before"),
+            (105, "fresh words nobody has written before"),
+            (106, "the quick brown fox jumps over the lazy cat"),
+            (107, "appended later with its own words"),  # dup of the append
+    ]
+    schema = "doc_id long, text string"
+
+    _write_hex_layout(spark, spark.createDataFrame(corpus, schema), f"{d}/hex")
+    hexidx = DedupIndex.load(f"{d}/hex")
+    assert hexidx.hash_format == "hex"
+    dedup_index_append(hexidx, spark.createDataFrame(extra, schema))
+    assert spark.read.parquet(f"{d}/hex").schema["key"].dataType == T.StringType()
+
+    batch_df = spark.createDataFrame(batch, schema)
+
+    def verdicts(idx):
+        return {
+            t: {
+                r["doc_id"]: (r["corpus_dup"], r["within_dup"])
+                for r in dedup_index_filter(
+                    spark, idx, batch_df, threshold=t, candidate_cap=3
+                )[0].collect()
+            }
+            for t in (0.0, 0.5)
+        }
+
+    def stats(idx):
+        return sorted(map(tuple, dedup_layout_stats(spark, idx, 3).collect()))
+
+    want = {t: model_filter_verified(corpus + extra, batch, t, 3) for t in (0.0, 0.5)}
+    assert want[0.0] != want[0.5]
+    assert want[0.5][107] == (True, False)
+    assert verdicts(hexidx) == want
+    hex_stats = stats(hexidx)
+
+    migrated = dedup_index_compact(spark, hexidx, f"{d}/hex_v2")
+    assert DedupIndex.load(migrated.path).hash_format == "binary"
+    assert spark.read.parquet(migrated.path).schema["key"].dataType == T.BinaryType()
+    assert spark.read.parquet(_sigs_path(migrated)).schema[
+        "sig"
+    ].dataType == T.ArrayType(T.BinaryType())
+    assert verdicts(migrated) == want
+    assert stats(migrated) == hex_stats
 
 
 def test_bucketed_append_compact_preserve_buckets(spark, tmp_path_factory):
@@ -1113,43 +1215,52 @@ def test_verified_filter_fresh_batch_plan_collapses(
     assert calls, "within-batch pair must reach the verification estimator"
 
 
+#: Adversarial texts for the kernel/expression equivalences: Java-vs-
+#: Python ``\\s`` class edges (tab, vertical tab, form feed, CR/LF, and the
+#: UNICODE spaces Java's ASCII class must NOT split on), space-only trim
+#: edges, short/empty texts, multi-byte UTF-8, and NULL.
+KERNEL_ROWS = [
+    (0, "plain three word text here"),
+    (1, "two words"),
+    (2, "one"),
+    (3, ""),
+    (4, "   "),
+    (5, " \t leading mixed\twhitespace\n and trailing \t "),
+    (6, "a\u00a0b c d"),          # NBSP: Java \s does NOT split it
+    (7, "a\u2003b c d"),          # EM space: same
+    (8, "tabs\tonly\there"),
+    (9, "cr\rand\nlf\x0band\x0cfeeds split like java"),
+    (10, "unicode \u4e00\u4e8c\u4e09 \u9fff tokens mixed in"),
+    (11, "dup dup dup dup dup"),
+    (12, None),
+]
+
+KERNEL_INDEX = DedupIndex(
+    path="/unused", shingle_k=3, n_hashes=16, bands=8,
+    id_col="doc_id", text_col="text", sig_buckets=0,
+)
+
+
 def test_python_sig_kernel_matches_catalyst_expression(spark):
     """The round-15 mapInPandas signature kernel must equal the original
     Catalyst ``minhash_signature(shingles(...))`` expression byte-for-byte
-    on adversarial inputs: Java-vs-Python ``\\s`` class edges (tab,
-    vertical tab, form feed, CR/LF, and the UNICODE spaces Java's ASCII
-    class must NOT split on), space-only trim edges, short/empty texts,
-    multi-byte UTF-8, and NULL (a length-n array of NULLs, not a null
-    array)."""
+    on adversarial inputs (``KERNEL_ROWS``; NULL is a length-n array of
+    NULLs, not a null array). The kernel emits 16-byte digests; their
+    hex is the expression's string."""
     from vector_db_example_spark.index.dedupidx import signature_rows
     from vector_db_example_spark.operators.dedup import (
         minhash_signature,
         shingles,
     )
 
-    rows = [
-        (0, "plain three word text here"),
-        (1, "two words"),
-        (2, "one"),
-        (3, ""),
-        (4, "   "),
-        (5, " \t leading mixed\twhitespace\n and trailing \t "),
-        (6, "a b c d"),          # NBSP: Java \s does NOT split it
-        (7, "a b c d"),          # EM space: same
-        (8, "tabs\tonly\there"),
-        (9, "cr\rand\nlf\x0band\x0cfeeds split like java"),
-        (10, "unicode 一二三 鿿 tokens mixed in"),
-        (11, "dup dup dup dup dup"),
-        (12, None),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    index = DedupIndex(
-        path="/unused", shingle_k=3, n_hashes=16, bands=8,
-        id_col="doc_id", text_col="text", sig_buckets=0,
-    )
+    docs = spark.createDataFrame(KERNEL_ROWS, "doc_id long, text string")
     got = {
-        r["doc_id"]: (list(r["sig"]) if r["sig"] is not None else None)
-        for r in signature_rows(index, docs).collect()
+        r["doc_id"]: (
+            [None if d is None else bytes(d).hex() for d in r["sig"]]
+            if r["sig"] is not None
+            else None
+        )
+        for r in signature_rows(KERNEL_INDEX, docs).collect()
     }
     want = {
         r["doc_id"]: (list(r["sig"]) if r["sig"] is not None else None)
@@ -1161,6 +1272,138 @@ def test_python_sig_kernel_matches_catalyst_expression(spark):
         ).collect()
     }
     assert got == want
+
+
+def test_kernel_band_keys_match_catalyst_expression(spark):
+    """The batch kernel's band keys (``_sig_band_rows``) and the build's
+    unrolled read-back derivation (``_bands_of_sigs``) both equal
+    ``unhex(lsh_band_keys(minhash_signature(shingles(text))))`` on the
+    adversarial rows, NULL included (every band ``md5("")``); the sig
+    rides only the band-0 row and equals the signature kernel's."""
+    from vector_db_example_spark.index.dedupidx import (
+        _bands_of_sigs,
+        _sig_band_rows,
+        signature_rows,
+    )
+    from vector_db_example_spark.operators.dedup import (
+        lsh_band_keys,
+        minhash_signature,
+        shingles,
+    )
+
+    docs = spark.createDataFrame(KERNEL_ROWS, "doc_id long, text string")
+    want = sorted(
+        (r["doc_id"], r["band"], bytes(r["key"]))
+        for r in docs.select(
+            "doc_id",
+            F.explode(
+                lsh_band_keys(
+                    minhash_signature(shingles(F.col("text"), k=3), n_hashes=16),
+                    8,
+                    2,
+                )
+            ).alias("bk"),
+        )
+        .select("doc_id", "bk.band", F.unhex("bk.key").alias("key"))
+        .collect()
+    )
+    assert len(want) == 8 * len(KERNEL_ROWS)
+    null_key = hashlib.md5(b"").digest()
+    assert {k for i, _, k in want if i == 12} == {null_key}
+
+    rows = _sig_band_rows(KERNEL_INDEX, docs).collect()
+    assert sorted((r["doc_id"], r["band"], bytes(r["key"])) for r in rows) == want
+    sigs = signature_rows(KERNEL_INDEX, docs)
+    assert {
+        r["doc_id"]: r["sig"] for r in rows if r["band"] == 0
+    } == {r["doc_id"]: r["sig"] for r in sigs.collect()}
+    assert all(r["sig"] is None for r in rows if r["band"] != 0)
+    derived = _bands_of_sigs(KERNEL_INDEX, sigs).collect()
+    assert sorted((r["doc_id"], r["band"], bytes(r["key"])) for r in derived) == want
+
+
+def test_persisted_schema_is_binary_digests(spark, tmp_path_factory):
+    """The layout stores each band key as a 16-byte binary digest and
+    each signature as an ``array<binary>`` of ``n_hashes`` 16-byte
+    digests — in the parquet files themselves, for the build and for
+    an append, and the meta records the format."""
+    import json
+
+    from pyspark.sql import types as T
+
+    from vector_db_example_spark.index.dedupidx import _sigs_path
+
+    d = str(tmp_path_factory.mktemp("dedupidx_schema"))
+    corpus = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, None)], "doc_id long, text string"
+    )
+    index = build_dedup_index(corpus, f"{d}/idx")
+    dedup_index_append(
+        index,
+        spark.createDataFrame([(3, "epsilon zeta eta theta")], "doc_id long, text string"),
+    )
+    assert json.load(open(f"{d}/idx/_dedup_meta.json"))["hash_format"] == "binary"
+    assert DedupIndex.load(index.path).hash_format == "binary"
+    bands = spark.read.parquet(index.path)
+    sigs = spark.read.parquet(_sigs_path(index))
+    assert bands.schema["key"].dataType == T.BinaryType()
+    assert sigs.schema["sig"].dataType == T.ArrayType(T.BinaryType())
+    assert {len(r["key"]) for r in bands.collect()} == {16}
+    got = {r["doc_id"]: r["sig"] for r in sigs.collect()}
+    assert sorted(got) == [1, 2, 3]
+    for i in (1, 3):
+        assert len(got[i]) == index.n_hashes
+        assert {len(x) for x in got[i]} == {16}
+    assert got[2] == [None] * index.n_hashes
+
+
+def test_unrolled_est_sim_matches_zip_with_form(spark):
+    """``_est_sim`` (one sum unrolled over the positions) equals the
+    former ``zip_with`` + ``aggregate`` lambda form on random digest
+    arrays with planted equal positions, and on arrays with NULL
+    elements, where both are NULL."""
+    import random
+
+    from pyspark.sql import types as T
+
+    from vector_db_example_spark.index.dedupidx import _est_sim
+
+    def old_form(a, b, n):
+        eq = F.zip_with(a, b, lambda x, y: (x == y).cast("int"))
+        return F.aggregate(eq, F.lit(0), lambda acc, x: acc + x).cast("double") / float(n)
+
+    rng = random.Random(7)
+    n = 16
+    rows = []
+    for i in range(60):
+        a = [rng.randbytes(16) for _ in range(n)]
+        b = [x if rng.random() < i / 60 else rng.randbytes(16) for x in a]
+        if i % 7 == 0:
+            b[rng.randrange(n)] = None
+        if i % 11 == 0:
+            a = [None] * n
+        rows.append((i, a, b))
+    df = spark.createDataFrame(
+        rows,
+        T.StructType(
+            [
+                T.StructField("i", T.LongType()),
+                T.StructField("a", T.ArrayType(T.BinaryType())),
+                T.StructField("b", T.ArrayType(T.BinaryType())),
+            ]
+        ),
+    )
+    out = df.select(
+        "i",
+        _est_sim(F.col("a"), F.col("b"), n).alias("new"),
+        old_form(F.col("a"), F.col("b"), n).alias("old"),
+    ).collect()
+    assert all(r["new"] == r["old"] for r in out if r["old"] is not None)
+    assert [r["i"] for r in out if r["new"] is None] == [
+        r["i"] for r in out if r["old"] is None
+    ]
+    assert any(r["new"] is None for r in out)
+    assert len({r["new"] for r in out}) > 5
 
 
 def test_append_rows_equals_recompute_append(spark, tmp_path_factory):

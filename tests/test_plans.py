@@ -538,7 +538,7 @@ def test_dedup_index_tombstone_path_plan_contract(spark, tmp_path):
             verdicts.localCheckpoint(eager=True)
 
         plans = checkpointed_plans(spark, run)
-        return [p for p in plans if "key:string>" in p]
+        return [p for p in plans if "key:binary>" in p]
 
     thresholds = (0.0, 0.5)
     before = {t: layout_plans(t) for t in thresholds}
@@ -555,6 +555,36 @@ def test_dedup_index_tombstone_path_plan_contract(spark, tmp_path):
             "tombstone anti-join must be the one NEW broadcast anti-join\n"
             + after[0]
         )
+
+
+def test_curation_loser_broadcast_is_count_gated(spark, monkeypatch):
+    """``pipeline_corpus_curation`` forces a broadcast of its loser ids
+    only while their materialized count is under
+    ``_LOSERS_BROADCAST_MAX``; above it the anti-join is left to the
+    planner (a sort-merge join with auto-broadcast off). Same rows
+    either way."""
+    from vector_db_example_spark.queries import dedup_q
+
+    def bcast_anti(plan: str) -> bool:
+        return any(
+            "BroadcastHashJoin" in ln and "LeftAnti" in ln for ln in plan.splitlines()
+        )
+
+    fn = QUERIES["pipeline_corpus_curation"].fn
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        hinted = fn(spark, SF_SMOKE)
+        plan_hinted = _plan(hinted, execute=True)
+        monkeypatch.setattr(dedup_q, "_LOSERS_BROADCAST_MAX", -1)
+        plain = fn(spark, SF_SMOKE)
+        plan_plain = _plan(plain, execute=True)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert bcast_anti(plan_hinted), plan_hinted
+    assert not bcast_anti(plan_plain), plan_plain
+    assert "LeftAnti" in plan_plain
+    assert sorted(map(tuple, hinted.collect())) == sorted(map(tuple, plain.collect()))
 
 
 def test_knn_batch_arrow_two_phase_narrow_scan_broadcast_joinback(spark):

@@ -12,10 +12,17 @@ queries are checked against — create_collection src/app.py:81, batched
 insert src/app.py:230, single insert src/app.py:409).
 
 The layout persists the corpus's LSH band keys — ``(id, band, key)``,
-one md5 string per band (8 by default) per document via the same
-shingle → minhash → band pipeline as ``minhash_near_duplicates``
+one 16-byte md5 digest per band (8 by default) per document via the
+same shingle → minhash → band pipeline as ``minhash_near_duplicates``
 (operators/dedup.py:84,99) — partitioned by ``band``, plus a signature
-side-car ``(id, sig)`` partitioned by ``sig_bucket``.
+side-car ``(id, sig)`` of ``n_hashes`` 16-byte digests, partitioned by
+``sig_bucket``. Every hash is the binary form of the hex string the
+batch operators and the SQL oracles compute (``key = unhex(
+lsh_band_keys(...).key)``, ``sig[i] = unhex(minhash_signature(...)[i])``
+— a bijection, so every equality the layout tests is the hex one), at
+half the bytes. Layouts whose meta predates ``hash_format`` store the
+hex strings; reads unhex them, appends keep writing hex, and
+``dedup_index_compact`` rewrites them binary.
 ``dedup_index_filter`` checks a batch with:
 
 1. one narrow scan of the layout reading just ``(band, key)`` (column
@@ -55,7 +62,8 @@ Semantics (documented, deterministic, single-pass), for the filter's
   signature side-car is never read.
 - Null texts: the signature is an array of NULLs and ``array_join``
   skips NULLs, so every band key of a null text is ``md5("")`` — null
-  texts collide with each other in every band. Band-only mode flags
+  texts collide with each other in every band (the kernel and the
+  build's key derivation skip NULLs the same way). Band-only mode flags
   them like any collision; at ``t > 0`` their estimate is NULL and
   never verifies, so they flag only through a mega-key.
 - survivors: neither flag set. ``dedup_index_append`` persists their
@@ -86,6 +94,7 @@ pipeline the stages are separate jobs and the hazard cannot arise.
 
 from __future__ import annotations
 
+import hashlib
 import json
 from dataclasses import dataclass
 
@@ -94,7 +103,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import fsio
-from ..operators.dedup import _py_minhash, _py_shingles, lsh_band_keys
+from ..operators.dedup import _py_minhash_digests, _py_shingles
 from ..sources.tables import append_repartition, widen_cpu_dense
 
 # Post-materialization narrow (sources/tables.py holds the shared
@@ -116,7 +125,11 @@ class DedupIndex:
     ids instead of a corpus-proportional full scan — the one per-batch
     cost in the intake loop that used to grow with corpus size. 0 is
     the legacy unpartitioned layout (metas written before the field
-    existed load as 0 and keep their read path)."""
+    existed load as 0 and keep their read path).
+
+    ``hash_format`` is how the hashes are stored: ``"binary"`` 16-byte
+    md5 digests, or ``"hex"`` 32-character strings — the format of
+    metas written before the field existed, which load as ``"hex"``."""
 
     path: str
     shingle_k: int
@@ -125,6 +138,7 @@ class DedupIndex:
     id_col: str
     text_col: str
     sig_buckets: int = 0
+    hash_format: str = "binary"
 
     @property
     def rows_per_band(self) -> int:
@@ -138,6 +152,7 @@ class DedupIndex:
             "id_col": self.id_col,
             "text_col": self.text_col,
             "sig_buckets": self.sig_buckets,
+            "hash_format": self.hash_format,
         }
         fsio.write_text(f"{self.path}/_dedup_meta.json", json.dumps(meta))
 
@@ -145,7 +160,12 @@ class DedupIndex:
     def load(cls, path: str) -> "DedupIndex":
         meta = json.loads(fsio.read_text(f"{path}/_dedup_meta.json"))
         meta.setdefault("sig_buckets", 0)  # pre-round-11 metas: unpartitioned
+        meta.setdefault("hash_format", "hex")  # metas before binary digests
         return cls(path=path, **meta)
+
+
+def _hash_type(index: DedupIndex) -> T.DataType:
+    return T.BinaryType() if index.hash_format == "binary" else T.StringType()
 
 
 def _band_schema(index: DedupIndex) -> T.StructType:
@@ -154,7 +174,7 @@ def _band_schema(index: DedupIndex) -> T.StructType:
     return T.StructType(
         [
             T.StructField(index.id_col, T.LongType(), True),
-            T.StructField("key", T.StringType(), True),
+            T.StructField("key", _hash_type(index), True),
             T.StructField("band", T.IntegerType(), True),
         ]
     )
@@ -162,62 +182,41 @@ def _band_schema(index: DedupIndex) -> T.StructType:
 
 def _minhash_sig_of_text(
     text, k: int, n_hashes: int, prefixes: list[bytes]
-) -> list | None:
-    """One text → its n_hashes md5-hex MinHash signature, EXACTLY the
-    value the Catalyst expression tree produces
-    (``minhash_signature(shingles(text, k))``) — built from the shared
-    pure-Python twins in operators/dedup.py (``_py_shingles`` /
-    ``_py_minhash``, which pin the Java-tokenization and byte-order
-    equivalences). Null text mirrors the expression tree's null
-    algebra: a length-n array of NULLs (not a null array)."""
+) -> list:
+    """One text → its n_hashes MinHash signature as 16-byte md5
+    digests, EXACTLY ``unhex`` of each element the Catalyst expression
+    tree produces (``minhash_signature(shingles(text, k))``) — built
+    from the shared pure-Python twins in operators/dedup.py
+    (``_py_shingles`` / ``_py_minhash_digests``, which pin the
+    Java-tokenization and byte-order equivalences). Null text mirrors
+    the expression tree's null algebra: a length-n array of NULLs (not
+    a null array)."""
     if not isinstance(text, str):
         return [None] * n_hashes
-    return _py_minhash(_py_shingles(text, k), prefixes)
+    return _py_minhash_digests(_py_shingles(text, k), prefixes)
 
 
-def _sig_kernel(id_col: str, text_col: str, k: int, n_hashes: int):
-    """mapInPandas body for ``signature_rows``: whole Arrow batches of
-    (id, text) → (id, sig) through the C-backed md5 kernel above."""
-    import pandas as pd
-
-    prefixes = [f"{s}|".encode() for s in range(1, n_hashes + 1)]
-
-    def kernel(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "sig": [
-                        _minhash_sig_of_text(t, k, n_hashes, prefixes)
-                        for t in pdf[text_col]
-                    ],
-                }
+def _band_keys_of_sig(sig: list, bands: int, rows_per_band: int) -> list[bytes]:
+    """The band keys of one signature: the md5 digest of each slice's
+    concatenated hex — ``unhex`` of ``lsh_band_keys``' keys. NULL
+    elements are skipped as ``array_join`` skips them, so every band of
+    a null text's all-NULL signature is ``md5("")``."""
+    return [
+        hashlib.md5(
+            b"".join(
+                d
+                for d in sig[b * rows_per_band : (b + 1) * rows_per_band]
+                if d is not None
             )
+            .hex()
+            .encode()
+        ).digest()
+        for b in range(bands)
+    ]
 
-    return kernel
 
-
-def signature_rows(
-    index: DedupIndex, docs: DataFrame, widen_factor: int = 1
-) -> DataFrame:
-    """``(id, sig)`` — the n_hashes-string MinHash signature per doc.
-    THE one expensive pass; everything else in this module derives from
-    signatures.
-
-    Since round 15 the kernel is an Arrow-batched ``mapInPandas`` over
-    (id, text) only, computing the identical md5 signatures through
-    C-backed ``hashlib`` (``_minhash_sig_of_text`` pins the
-    equivalences). The previous shape — the
-    ``minhash_signature(shingles(...))`` Catalyst expression — is
-    higher-order lambdas, which Spark INTERPRETS per element with boxed
-    values (the SCALING.md round-4 lesson): at 16 seeds × ~50 shingles
-    that interpretation overhead is the whole stage. Measured on the
-    6,000-doc bench batch: 2.1 s → 0.68 s wall for the signature pass
-    (noop sink, min-of-3), bit-identical output at sf0.01 and sf0.1 —
-    the guide-§4.2 move (vectorize opaque per-row work in native code
-    behind an Arrow boundary, projecting only the columns it reads).
-
-    The input is widened first (SCALING.md round-6 rule): text
+def _kernel_input(index: DedupIndex, docs: DataFrame, widen_factor: int) -> DataFrame:
+    """(id, text) only, widened first (SCALING.md round-6 rule): text
     compresses ~10×, so a batch read from parquet opens as a couple of
     scan splits and the md5 storm would run on a couple of cores —
     measured 2.2 s → 0.3 s for a 2.4k-doc batch on local[32]. A no-op
@@ -226,66 +225,130 @@ def signature_rows(
     (the full-build path) so one uneven scan split can't set the stage
     wall — SCALING.md round 8 measured an 18% straggler tail on the
     sf25 build at 1×."""
+    return widen_cpu_dense(docs, factor=widen_factor).select(
+        F.col(index.id_col).cast("long").alias(index.id_col),
+        F.col(index.text_col),
+    )
+
+
+def signature_rows(
+    index: DedupIndex, docs: DataFrame, widen_factor: int = 1
+) -> DataFrame:
+    """``(id, sig)`` — the n_hashes-digest MinHash signature per doc,
+    the build's one expensive pass.
+
+    Since round 15 the kernel is an Arrow-batched ``mapInPandas`` over
+    (id, text) only, computing the md5 signatures through C-backed
+    ``hashlib`` (``_minhash_sig_of_text`` pins the equivalences). The
+    previous shape — the ``minhash_signature(shingles(...))`` Catalyst
+    expression — is higher-order lambdas, which Spark INTERPRETS per
+    element with boxed values (the SCALING.md round-4 lesson): at 16
+    seeds × ~50 shingles that interpretation overhead is the whole
+    stage. Measured on the 6,000-doc bench batch: 2.1 s → 0.68 s wall
+    for the signature pass (noop sink, min-of-3), bit-identical output
+    at sf0.01 and sf0.1 — the guide-§4.2 move (vectorize opaque per-row
+    work in native code behind an Arrow boundary, projecting only the
+    columns it reads)."""
+    import pandas as pd
+
+    id_col, text_col, k, n = index.id_col, index.text_col, index.shingle_k, index.n_hashes
+    prefixes = [f"{s}|".encode() for s in range(1, n + 1)]
+
+    def kernel(batches):
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col],
+                    "sig": [
+                        _minhash_sig_of_text(t, k, n, prefixes) for t in pdf[text_col]
+                    ],
+                }
+            )
+
     out_schema = T.StructType(
         [
-            T.StructField(index.id_col, T.LongType(), True),
-            T.StructField("sig", T.ArrayType(T.StringType()), True),
+            T.StructField(id_col, T.LongType(), True),
+            T.StructField("sig", T.ArrayType(T.BinaryType()), True),
         ]
     )
-    return (
-        widen_cpu_dense(docs, factor=widen_factor)
-        .select(
-            F.col(index.id_col).cast("long").alias(index.id_col),
-            F.col(index.text_col),
-        )
-        .mapInPandas(
-            _sig_kernel(
-                index.id_col, index.text_col, index.shingle_k, index.n_hashes
-            ),
-            out_schema,
-        )
-    )
+    return _kernel_input(index, docs, widen_factor).mapInPandas(kernel, out_schema)
 
 
 def _bands_of_sigs(index: DedupIndex, sigs: DataFrame) -> DataFrame:
     """``(id, band, key)`` from an ``(id, sig)`` frame — md5 of signature
-    slices, an explode away; never re-touches text."""
+    slices, an ``inline`` away; never re-touches text. One expression
+    unrolled over the bands (no lambda to interpret per element):
+    ``concat_ws`` skips NULLs the way ``array_join`` does, so null
+    texts keep their ``md5("")`` keys."""
+    rpb, sig = index.rows_per_band, F.col("sig")
+
+    def key(b: int):
+        return F.unhex(
+            F.md5(
+                F.concat_ws(
+                    "", *[F.lower(F.hex(sig[i])) for i in range(b * rpb, (b + 1) * rpb)]
+                )
+            )
+        )
+
     return sigs.select(
         index.id_col,
-        F.explode(
-            lsh_band_keys(F.col("sig"), index.bands, index.rows_per_band)
-        ).alias("bk"),
-    ).select(index.id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-
-
-def band_rows(index: DedupIndex, docs: DataFrame) -> DataFrame:
-    """``(id, band, key)`` for a document frame (signature pass + slice
-    hashing fused in one plan)."""
-    return _bands_of_sigs(index, signature_rows(index, docs))
+        F.inline(
+            F.array(
+                *[
+                    F.struct(F.lit(b).alias("band"), key(b).alias("key"))
+                    for b in range(index.bands)
+                ]
+            )
+        ),
+    )
 
 
 def _sig_band_rows(index: DedupIndex, docs: DataFrame) -> DataFrame:
     """``(id, band, key, sig)`` in ONE kernel pass — the single
     batch-side materialization shape of the filter and of the appends.
-    The signature rides ONLY on each doc's band-0 row (``sig`` is null
+    The kernel emits these final rows itself (band keys hashed from the
+    digests in the same Python loop, ``_band_keys_of_sig``). The
+    signature rides ONLY on each doc's band-0 row (``sig`` is null
     elsewhere), so checkpointing this frame costs the band table PLUS
     one sig array per doc — not bands × sig — while every downstream
     subtree reads bands DIRECTLY from the checkpoint and the
     verification joins and the sig append recover ``(id, sig)`` with a
     narrow ``band = 0`` filter: no shuffle, no second kernel run."""
-    sigs = signature_rows(index, docs)
-    return sigs.select(
-        index.id_col,
-        F.explode(
-            lsh_band_keys(F.col("sig"), index.bands, index.rows_per_band)
-        ).alias("bk"),
-        "sig",
-    ).select(
-        index.id_col,
-        F.col("bk.band").alias("band"),
-        F.col("bk.key").alias("key"),
-        F.when(F.col("bk.band") == 0, F.col("sig")).alias("sig"),
+    import numpy as np
+    import pandas as pd
+
+    id_col, text_col, k, n = index.id_col, index.text_col, index.shingle_k, index.n_hashes
+    bands, rpb = index.bands, index.rows_per_band
+    prefixes = [f"{s}|".encode() for s in range(1, n + 1)]
+    no_sigs = [None] * (bands - 1)
+
+    def kernel(batches):
+        for pdf in batches:
+            keys, sigs = [], []
+            for t in pdf[text_col]:
+                sig = _minhash_sig_of_text(t, k, n, prefixes)
+                keys += _band_keys_of_sig(sig, bands, rpb)
+                sigs.append(sig)
+                sigs += no_sigs
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col].repeat(bands).reset_index(drop=True),
+                    "band": np.tile(np.arange(bands, dtype=np.int32), len(pdf)),
+                    "key": keys,
+                    "sig": sigs,
+                }
+            )
+
+    out_schema = T.StructType(
+        [
+            T.StructField(id_col, T.LongType(), True),
+            T.StructField("band", T.IntegerType(), True),
+            T.StructField("key", T.BinaryType(), True),
+            T.StructField("sig", T.ArrayType(T.BinaryType()), True),
+        ]
     )
+    return _kernel_input(index, docs, 1).mapInPandas(kernel, out_schema)
 
 
 def _sigs_path(index: DedupIndex) -> str:
@@ -299,7 +362,7 @@ def _sigs_path(index: DedupIndex) -> str:
 def _sig_schema(index: DedupIndex) -> T.StructType:
     fields = [
         T.StructField(index.id_col, T.LongType(), True),
-        T.StructField("sig", T.ArrayType(T.StringType()), True),
+        T.StructField("sig", T.ArrayType(_hash_type(index)), True),
     ]
     if index.sig_buckets:
         # Partition column (directory-encoded): declared in the schema so
@@ -316,18 +379,47 @@ def _sig_bucket_expr(index: DedupIndex, id_expr):
     return F.pmod(id_expr.cast("long"), F.lit(index.sig_buckets)).cast("int")
 
 
+def _sig_elements(index: DedupIndex, fn):
+    """``sig`` with ``fn`` applied to each of its n_hashes elements —
+    unrolled, so no lambda is interpreted per element."""
+    return F.array(*[fn(F.col("sig")[i]) for i in range(index.n_hashes)])
+
+
 def _read_bands(spark: SparkSession, index: DedupIndex) -> DataFrame:
     """Read the band-partitioned root with the meta-derived schema, so a
-    declared-empty layout (zero parquet footers) stays well-typed."""
-    return (
+    declared-empty layout (zero parquet footers) stays well-typed. Keys
+    always read as digests: a hex layout unhexes them here."""
+    bands = (
         spark.read.schema(_band_schema(index))
         .option("basePath", index.path)
         .parquet(index.path)
     )
+    if index.hash_format == "hex":
+        bands = bands.withColumn("key", F.unhex("key"))
+    return bands
 
 
 def _read_sigs(spark: SparkSession, index: DedupIndex) -> DataFrame:
-    return spark.read.schema(_sig_schema(index)).parquet(_sigs_path(index))
+    """The signature side-car, its elements always digests."""
+    sigs = spark.read.schema(_sig_schema(index)).parquet(_sigs_path(index))
+    if index.hash_format == "hex":
+        sigs = sigs.withColumn("sig", _sig_elements(index, F.unhex))
+    return sigs
+
+
+def _stored(index: DedupIndex, rows: DataFrame) -> DataFrame:
+    """Digest rows (``key`` and/or ``sig``) in the layout's stored
+    format: an append to a hex layout writes hex, so its files keep one
+    schema until compaction rewrites the layout binary."""
+    if index.hash_format == "binary":
+        return rows
+    if "key" in rows.columns:
+        rows = rows.withColumn("key", F.lower(F.hex("key")))
+    if "sig" in rows.columns:
+        rows = rows.withColumn(
+            "sig", _sig_elements(index, lambda d: F.lower(F.hex(d)))
+        )
+    return rows
 
 
 def _tombstone_path(index: DedupIndex) -> str:
@@ -356,7 +448,7 @@ def _persist(index: DedupIndex, docs: DataFrame) -> None:
     of it — never a second pass over the text (the
     fingerprint_overlap_stats lesson: the two consumers' subtrees can't
     ReusedExchange, so an unmaterialized sig frame would run the kernel
-    twice), and streaming 512 B/doc back through the executors scales
+    twice), and streaming 256 B/doc back through the executors scales
     to a corpus-sized build where no in-memory materialization could.
 
     Bucketed layouts (``sig_buckets`` > 0) shuffle the sig rows on the
@@ -364,7 +456,7 @@ def _persist(index: DedupIndex, docs: DataFrame) -> None:
     file set per bucket partition instead of (tasks × buckets) shards.
     """
     # Corpus-sized pass: over-partition 4× so one uneven scan split
-    # can't set the build's wall (signature_rows docstring; measured
+    # can't set the build's wall (_kernel_input docstring; measured
     # 18% off the sf25 sigs pass, SCALING.md round 8).
     sigs = signature_rows(index, docs, widen_factor=4)
     if index.sig_buckets:
@@ -420,11 +512,11 @@ def build_dedup_index(
 
 def _est_sim(a, b, n_hashes: int):
     """MinHash similarity estimate: the fraction of equal signature
-    positions — an unbiased Jaccard estimator, pure array expressions."""
-    eq = F.zip_with(a, b, lambda x, y: (x == y).cast("int"))
-    return F.aggregate(eq, F.lit(0), lambda acc, x: acc + x).cast("double") / float(
-        n_hashes
-    )
+    positions — an unbiased Jaccard estimator, one sum unrolled over the
+    positions (no lambda). A NULL element makes the estimate NULL, so a
+    null text never verifies."""
+    eq = [(a[i] == b[i]).cast("int") for i in range(n_hashes)]
+    return sum(eq, F.lit(0)).cast("double") / float(n_hashes)
 
 
 #: Above this many batch band keys, the filter's corpus
@@ -699,7 +791,7 @@ def dedup_index_append_rows(index: DedupIndex, sig_band_rows: DataFrame) -> None
     (tasks × partitions) shards, and a frame over the collapse ceiling
     keeps full write parallelism (compaction owns its file hygiene)."""
     id_col = index.id_col
-    sigs = sig_band_rows.filter(F.col("band") == 0).select(id_col, "sig")
+    sigs = _stored(index, sig_band_rows.filter(F.col("band") == 0).select(id_col, "sig"))
     if index.sig_buckets:
         (
             append_repartition(
@@ -715,7 +807,7 @@ def dedup_index_append_rows(index: DedupIndex, sig_band_rows: DataFrame) -> None
     else:
         sigs.write.mode("append").parquet(_sigs_path(index))
     append_repartition(
-        sig_band_rows.select(id_col, "band", "key"), "band"
+        _stored(index, sig_band_rows.select(id_col, "band", "key")), "band"
     ).write.partitionBy("band").mode("append").parquet(index.path)
 
 
@@ -838,7 +930,11 @@ def dedup_index_compact(
     the bucket-pruned verified read path without ever re-shingling the
     corpus text. Verdicts are unaffected: bucketing changes WHERE sig
     rows live, never their values (regression-pinned in
-    tests/test_dedupidx.py::test_compact_migrates_sig_buckets)."""
+    tests/test_dedupidx.py::test_compact_migrates_sig_buckets).
+
+    The new layout always stores binary digests, so compacting a hex
+    layout (a meta without ``hash_format``) is its migration too — the
+    reads unhex, the writes are the compact form, verdicts unchanged."""
     if sig_buckets is None:
         sig_buckets = index.sig_buckets
     if sig_buckets < 0:

@@ -59,7 +59,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .. import fsio
 from ..functions.text import extract_tokens
 from ..operators.bm25 import bm25_score_expr, bm25_score_expr_for
-from ..sources.tables import append_repartition, read_layout
+from ..sources.tables import append_repartition, overlapped, read_layout
 
 #: Declared schema of the 1-row ``stats/`` table: reads name it instead
 #: of inferring it, which would cost a footer-reading Spark job.
@@ -352,19 +352,16 @@ def append_to_inverted_index(index: InvertedIndex, docs: DataFrame) -> None:
 
     # Postings ∥ doclens (round 16, guide §2.6): the two appends target
     # independent sinks and both strictly precede the stats bump, so
-    # overlapping them from a 2-thread driver pool changes no replay
+    # overlapping them (sources/tables.py::overlapped) changes no replay
     # outcome — a crash leaving either (or both) behind re-appends
     # byte-identical rows on replay, healed by compaction's
     # max(tf)/max(__dl) rule exactly as before. Only the stats
     # read-modify-write must stay LAST (docstring above).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = pool.submit(_append_postings)
+    with overlapped(spark) as submit:
+        submit(_append_postings)
         docs.select(
             F.col(id_col), F.size(extract_tokens(F.col(text_col))).alias("__dl")
         ).write.mode("append").parquet(index.doclens_path)
-        fut.result()
 
     # The summed stats row is aggregated AND materialized (one job:
     # the increment aggregate cross-joined with the old 1-row table —
@@ -546,22 +543,33 @@ def delete_from_inverted_index(index: InvertedIndex, ids) -> int:
         return n
     doclens = _live(index, spark.read.parquet(index.doclens_path))
     victims = doclens.filter(F.col(index.id_col).isin(ids))
-    stats_delta = victims.select(
-        F.count(F.lit(1)).cast("double").alias("__n"),
-        F.coalesce(F.sum("__dl"), F.lit(0)).cast("double").alias("__tot"),
-    ).collect()[0]
-    if stats_delta["__n"] == 0:
+    # The decremented stats row is aggregated AND materialized (one job:
+    # the victims' decrement cross-joined with the old 1-row table, no
+    # driver collect of either) BEFORE the tombstones land and the
+    # overwrite is issued — the append path's shape, so a failure in the
+    # aggregate can never leave stats_path without a replacement. Same
+    # two double operands, same order, as the decrement always had.
+    new_stats = (
+        victims.select(
+            F.count(F.lit(1)).cast("double").alias("_dn"),
+            F.coalesce(F.sum("__dl"), F.lit(0)).cast("double").alias("_dtot"),
+        )
+        .crossJoin(spark.read.schema(_STATS_SCHEMA).parquet(index.stats_path))
+        .select(
+            (F.col("__n") - F.col("_dn")).alias("__n"),
+            (F.col("__tot") - F.col("_dtot")).alias("__tot"),
+            "_dn",
+        )
+        .localCheckpoint(eager=True)
+    )
+    n = int(new_stats.head()["_dn"])
+    if n == 0:
         return 0
     victims.select(index.id_col).write.mode("append").parquet(
         f"{index.path}/tombstones"
     )
-    old = spark.read.schema(_STATS_SCHEMA).parquet(index.stats_path).collect()[0]
-    spark.createDataFrame(
-        [(float(old["__n"]) - float(stats_delta["__n"]),
-          float(old["__tot"]) - float(stats_delta["__tot"]))],
-        _STATS_SCHEMA,
-    ).write.mode("overwrite").parquet(index.stats_path)
-    return int(stats_delta["__n"])
+    new_stats.drop("_dn").write.mode("overwrite").parquet(index.stats_path)
+    return n
 
 
 def _live(index: InvertedIndex, df: DataFrame) -> DataFrame:

@@ -138,17 +138,22 @@ def _py_shingles(text: str, k: int) -> list:
     return [" ".join(toks)]
 
 
-def _py_minhash(sh: list, prefixes: list) -> list:
-    """Pure-Python twin of ``minhash_signature`` over a shingle list:
-    per seed prefix, min over shingles of md5(seed || '|' || shingle).
-    The min is taken on digest BYTES (hex is byte-order-preserving, so
-    it equals the expression's lexicographic ``array_min`` over hex
-    strings) and hexed once per winner — C-backed hashlib instead of
-    per-element interpreted Catalyst lambdas (guide §4.2; measured 3×
-    on the dedup-index kernel, SCALING.md round 15)."""
+def _py_minhash_digests(sh: list, prefixes: list) -> list:
+    """Per seed prefix, the min over shingles of md5(seed || '|' ||
+    shingle) as a 16-byte digest. Hex is byte-order-preserving, so this
+    min is the expression's lexicographic ``array_min`` over hex
+    strings — C-backed hashlib instead of per-element interpreted
+    Catalyst lambdas (guide §4.2; measured 3× on the dedup-index
+    kernel, SCALING.md round 15)."""
     md5 = hashlib.md5
     shb = [x.encode("utf-8") for x in sh]
-    return [min(md5(p + b).digest() for b in shb).hex() for p in prefixes]
+    return [min(md5(p + b).digest() for b in shb) for p in prefixes]
+
+
+def _py_minhash(sh: list, prefixes: list) -> list:
+    """Pure-Python twin of ``minhash_signature`` over a shingle list:
+    ``_py_minhash_digests`` with each winner hexed once."""
+    return [d.hex() for d in _py_minhash_digests(sh, prefixes)]
 
 
 def _sh_sig_kernel(id_col: str, text_col: str, k: int, n_hashes: int):
@@ -274,11 +279,10 @@ def minhash_near_duplicates(
     # fixed-size planted corpora; round 16 re-tested widen WITH a
     # row-count-adaptive post-checkpoint narrow (the fix for the
     # inherited-partition poison) and it STILL lost interleaved —
-    # minhash_lsh ×1.3, simhash ×1.36, curation flat (tools/ab_r16.py
-    # --what widen): the widen shuffle + extra count job cost more than
-    # the kernel parallelism buys at these batch sizes. Corpus-scale
-    # callers widen their own input, as index/dedupidx.signature_rows
-    # does internally.
+    # minhash_lsh ×1.3, simhash ×1.36, curation flat (OPTIMIZATION_r16.md):
+    # the widen shuffle + extra count job cost more than the kernel
+    # parallelism buys at these batch sizes. Corpus-scale callers widen
+    # their own input, as index/dedupidx.py's kernels do internally.
     id_type = df.schema[id_col].dataType
     kernel_schema = T.StructType(
         [

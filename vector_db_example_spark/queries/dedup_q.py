@@ -205,6 +205,12 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_near_duplicates(corpus, max_hamming=3)
 
 
+#: Most loser ids ``pipeline_corpus_curation`` broadcasts into its
+#: anti-join (8-byte ids: ≈ 8 MB); above it the join is left to the
+#: planner.
+_LOSERS_BROADCAST_MAX = 1_000_000
+
+
 @register(
     "pipeline_corpus_curation",
     oracle=f"""
@@ -319,15 +325,21 @@ def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_d, text_col="text", id_col="id",
         shingle_k=3, n_hashes=16, bands=8, threshold=0.6,
     )
-    losers = pairs.select(F.col("b_id").alias("id")).distinct()
+    losers = (
+        pairs.select(F.col("b_id").alias("id")).distinct().localCheckpoint(eager=True)
+    )
     # Broadcast hint (guide §3.1, round 16): the loser set is an
-    # aggregated dup-id list — small by construction (bounded by the
-    # near-dup pair count) — but its size ESTIMATE flows through the
-    # whole LSH verify DAG, so the planner used to pick a SortMergeJoin
-    # LeftAnti that exchanged AND sorted the checkpointed corpus per
-    # run. The hint turns it into a broadcast anti-join: zero corpus
-    # movement (plan diff in plans/r16/pipeline_corpus_curation_*).
-    curated = exact_d.join(F.broadcast(losers), "id", "left_anti")
+    # aggregated dup-id list — usually small (bounded by the near-dup
+    # pair count) — but its size ESTIMATE flows through the whole LSH
+    # verify DAG, so the planner used to pick a SortMergeJoin LeftAnti
+    # that exchanged AND sorted the checkpointed corpus per run. The
+    # hint turns it into a broadcast anti-join: zero corpus movement.
+    # It bypasses autoBroadcastJoinThreshold, so it is gated on the
+    # MATERIALIZED loser count: a dup-heavy corpus above the gate takes
+    # the plain anti-join instead of broadcasting an unbounded id set.
+    if losers.count() <= _LOSERS_BROADCAST_MAX:
+        losers = F.broadcast(losers)
+    curated = exact_d.join(losers, "id", "left_anti")
     return curated.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(F.split(F.trim("text"), r"\s+"))).alias("total_tokens"),
@@ -762,9 +774,10 @@ def dedup_dup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bands_sql(rel: str) -> str:
-    """Band keys of a (id, text) relation — the EXACT SQL mirror of
-    index/dedupidx.py::band_rows (same shingle/minhash/band pipeline as
-    the dedup_minhash_lsh oracle above, k=3, 16 hashes, 8 bands x 2)."""
+    """Band keys of a (id, text) relation — the EXACT SQL mirror of the
+    band keys index/dedupidx.py persists, in hex (the layout stores
+    their 16-byte digests; same shingle/minhash/band pipeline as the
+    dedup_minhash_lsh oracle above, k=3, 16 hashes, 8 bands x 2)."""
     return f"""
 SELECT id, b::INTEGER AS band,
        md5(array_to_string(sg[(b*2+1):(b*2+2)], '')) AS key

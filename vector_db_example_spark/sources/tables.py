@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import json
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -149,6 +150,53 @@ def append_repartition(df: DataFrame, partition_col: str) -> DataFrame:
     if est is not None and est <= APPEND_COLLAPSE_MAX_BYTES:
         return df.repartition(F.col(partition_col))
     return df
+
+
+@contextmanager
+def overlapped(spark: SparkSession):
+    """Run independent writes as overlapped Spark jobs (guide §2.6 —
+    actions are only sequential because the driver calls them
+    sequentially): ``submit(fn)`` starts ``fn`` on its own
+    ``pyspark.InheritableThread`` while the block goes on, and the
+    block's exit joins them all.
+
+    Each thread carries the caller's local properties — its job group
+    and description, e.g. a streaming query's — so its jobs are
+    attributed to the caller and cancelling the caller's group cancels
+    them too (a bare pool thread starts from an empty JVM thread and
+    escapes both). Every job is read on exit: the first failure (the
+    block's own, if any) is raised and each further one is attached to
+    it as a note, so a second failure never vanishes."""
+    from pyspark import InheritableThread
+
+    jobs: list[tuple[InheritableThread, list]] = []
+
+    def submit(fn) -> None:
+        failed: list = []
+
+        def run() -> None:
+            try:
+                fn()
+            except BaseException as e:  # re-raised by the caller on exit
+                failed.append(e)
+
+        t = InheritableThread(run, session=spark)
+        t.start()
+        jobs.append((t, failed))
+
+    errors: list[BaseException] = []
+    try:
+        yield submit
+    except BaseException as e:
+        errors.append(e)
+    finally:
+        for t, failed in jobs:
+            t.join()
+            errors += failed
+        if errors:
+            for e in errors[1:]:
+                errors[0].add_note(f"an overlapped write also failed: {e!r}")
+            raise errors[0]
 
 
 def read_layout(

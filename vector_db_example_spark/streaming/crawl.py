@@ -39,7 +39,7 @@ commit markers (fsio.canonical_token namespacing — the convention shared
 with streaming/ingest.py and rollup.py). A replayed COMMITTED batch is a
 no-op. A crash inside the multi-write window replays with these
 outcomes. The verdict sink, IVF append, and postings append run as
-OVERLAPPED jobs (driver thread pool, guide §2.6 — round 16): their
+OVERLAPPED jobs (sources/tables.py::overlapped, guide §2.6): their
 relative order never mattered for replay because each is independently
 idempotent, and a crash can interrupt any subset:
 
@@ -79,7 +79,7 @@ from ..index.dedupidx import (
     dedup_index_filter,
 )
 from ..index.ivf import IVFIndex, assign_cells
-from ..sources.tables import append_repartition
+from ..sources.tables import append_repartition, overlapped
 
 
 def stream_crawl_ingest(
@@ -256,22 +256,19 @@ def stream_crawl_ingest(
         )
         # The verdict write, the embed+IVF leg, and the postings append
         # are mutually independent given the materialized verdicts, so
-        # they run as OVERLAPPED jobs from a small driver pool (guide
-        # §2.6 — actions are only sequential because the driver calls
-        # them sequentially): the next job's tasks back-fill executors
-        # freed by the previous job's tail, and the driver-side commit
-        # phases overlap instead of queueing. At-least-once replay is
-        # unchanged: ALL of these precede the dedup-band append (still
-        # strictly LAST, below) and each one replays idempotently on its
-        # own — verdicts via the dynamic-partition overwrite, IVF and
-        # postings via compaction's full-row distinct — whatever subset
-        # a crash interrupts (module docstring).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fut_verdicts = (
-                pool.submit(_write_verdicts) if verdict_path is not None else None
-            )
+        # they run as OVERLAPPED jobs (sources/tables.py::overlapped —
+        # in the streaming query's job group, every failure surfaced):
+        # the next job's tasks back-fill executors freed by the previous
+        # job's tail, and the driver-side commit phases overlap instead
+        # of queueing. At-least-once replay is unchanged: ALL of these
+        # precede the dedup-band append (still strictly LAST, below) and
+        # each one replays idempotently on its own — verdicts via the
+        # dynamic-partition overwrite, IVF and postings via compaction's
+        # full-row distinct — whatever subset a crash interrupts (module
+        # docstring).
+        with overlapped(spark) as submit:
+            if verdict_path is not None:
+                submit(_write_verdicts)
             # Embed + assign once (localCheckpoint), feeding the IVF
             # append and the accepted count.
             assigned = (
@@ -292,16 +289,13 @@ def stream_crawl_ingest(
                     "cell_id"
                 ).mode("append").parquet(ivf_index.path)
 
-            fut_ivf = pool.submit(_append_ivf)
+            submit(_append_ivf)
             if inverted_index is not None and n_acc:
                 from ..index.inverted import append_to_inverted_index
 
                 append_to_inverted_index(
                     inverted_index, assigned.drop(vec_col, "cell_id")
                 )
-            fut_ivf.result()
-            if fut_verdicts is not None:
-                fut_verdicts.result()
         # Dedup append LAST (module docstring: the crash-replay outcomes
         # depend on this ordering). Feeds the filter's own materialized
         # sig/band checkpoint restricted to the survivors — zero
