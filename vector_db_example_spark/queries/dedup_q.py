@@ -956,11 +956,13 @@ def _verified_ctes(cap: int, threshold: float = 0.5) -> str:
     mega-key counts and routing at ``cap``, signature-estimate
     verification at ``threshold``, and the pessimistic one-pass
     within-batch rule. Shared by the verified-filter oracle and the
-    bench-tracked verified batch-filter oracle below."""
-    return f"""csig AS ({_sigs_sql('corpus')}),
-bsig AS ({_sigs_sql('batch')}),
-cb AS ({_BANDS_OF_SIGS_SQL.format(sigs='csig')}),
-bb AS ({_BANDS_OF_SIGS_SQL.format(sigs='bsig')}),
+    bench-tracked verified batch-filter oracle below. The signature and
+    band CTEs are ``MATERIALIZED``: several CTEs read each, and DuckDB
+    1.0 re-runs an inlined one's md5 MinHash per reference."""
+    return f"""csig AS MATERIALIZED ({_sigs_sql('corpus')}),
+bsig AS MATERIALIZED ({_sigs_sql('batch')}),
+cb AS MATERIALIZED ({_BANDS_OF_SIGS_SQL.format(sigs='csig')}),
+bb AS MATERIALIZED ({_BANDS_OF_SIGS_SQL.format(sigs='bsig')}),
 counts AS (SELECT band, key, count(*) AS n FROM cb GROUP BY band, key),
 over_keys AS (SELECT band, key FROM counts WHERE n > {cap}),
 auto_hits AS (

@@ -949,7 +949,12 @@ def _crawl_verified_oracle() -> str:
     dedup_incremental_verified_filter algebra (dedup_q — signature
     estimate ≥ 0.5, candidate_cap=2 mega-key routing) iterated over two
     sequential batches, batch 1's index side (band layout, signature
-    side-car, AND the mega-key counts) including batch 0's survivors."""
+    side-car, AND the mega-key counts) including batch 0's survivors.
+
+    The signature and band CTEs are ``MATERIALIZED``: each is read by
+    several later CTEs, and an inlined one re-runs its md5 MinHash per
+    reference (DuckDB 1.0 inlines by default) — 118 s → 0.5 s for the
+    whole oracle at sf0.01, identical rows."""
     from .dedup_q import _BANDS_OF_SIGS_SQL, _SIM_SQL, _sigs_sql
 
     return f"""
@@ -981,10 +986,10 @@ b1 AS (
   SELECT doc_id AS id, text FROM documents
   WHERE doc_id % 3 = 2 AND doc_id % 2 = 1
 ),
-csig AS ({_sigs_sql('corpus')}),
-b0sig AS ({_sigs_sql('b0')}),
-cb AS ({_BANDS_OF_SIGS_SQL.format(sigs='csig')}),
-b0b AS ({_BANDS_OF_SIGS_SQL.format(sigs='b0sig')}),
+csig AS MATERIALIZED ({_sigs_sql('corpus')}),
+b0sig AS MATERIALIZED ({_sigs_sql('b0')}),
+cb AS MATERIALIZED ({_BANDS_OF_SIGS_SQL.format(sigs='csig')}),
+b0b AS MATERIALIZED ({_BANDS_OF_SIGS_SQL.format(sigs='b0sig')}),
 counts0 AS (SELECT band, key, count(*) AS n FROM cb GROUP BY band, key),
 over0 AS (SELECT band, key FROM counts0 WHERE n > 2),
 auto0 AS (
@@ -1035,18 +1040,18 @@ wdup0 AS (SELECT id FROM wauto0 UNION SELECT id FROM wv0),
 surv0 AS (SELECT id FROM b0
           WHERE id NOT IN (SELECT id FROM cdup0)
             AND id NOT IN (SELECT id FROM wdup0)),
-csig2 AS (
+csig2 AS MATERIALIZED (
   SELECT * FROM csig
   UNION ALL
   SELECT * FROM b0sig WHERE id IN (SELECT id FROM surv0)
 ),
-cb2 AS (
+cb2 AS MATERIALIZED (
   SELECT * FROM cb
   UNION ALL
   SELECT * FROM b0b WHERE id IN (SELECT id FROM surv0)
 ),
-b1sig AS ({_sigs_sql('b1')}),
-b1b AS ({_BANDS_OF_SIGS_SQL.format(sigs='b1sig')}),
+b1sig AS MATERIALIZED ({_sigs_sql('b1')}),
+b1b AS MATERIALIZED ({_BANDS_OF_SIGS_SQL.format(sigs='b1sig')}),
 counts1 AS (SELECT band, key, count(*) AS n FROM cb2 GROUP BY band, key),
 over1 AS (SELECT band, key FROM counts1 WHERE n > 2),
 auto1 AS (
