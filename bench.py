@@ -125,7 +125,8 @@ def _report_deltas(result: dict) -> None:
     """Round-over-round tracking: compare against the newest BENCH_r*.json
     next to this script and print a per-query delta table to STDERR
     (stdout stays the one-line JSON contract). A headline query >2× its
-    previous-round time is flagged as a REGRESSION."""
+    previous-round time, raw and canary-normalized, is flagged as a
+    REGRESSION; one above 2× on only one of the two reads NEEDS-RERUN."""
     here = Path(__file__).resolve().parent
     # Compare against the newest ROUND record (BENCH_r<N>.json, numeric
     # order) — a lexicographic glob would pick a side-record like
@@ -175,13 +176,17 @@ def _report_deltas(result: dict) -> None:
         # to an absolute-noise wobble on a sub-0.5 s floor line inflates
         # only the normalized one (observed round 16: raw ×1.48 floor
         # wobble read norm ×2.15 because the canary ran ×0.69).
-        flag_ratio = ratio
+        # When only one of the two crosses 2×, the record cannot tell
+        # code from drift, so the line asks for a rerun.
+        ratios = [ratio]
         if canary_ratio and name != _CANARY:
             mark = f"  norm x{ratio / canary_ratio:.2f}"
-            flag_ratio = min(ratio, ratio / canary_ratio)
-        if flag_ratio > 2.0:
+            ratios.append(ratio / canary_ratio)
+        if min(ratios) > 2.0:
             mark += "  REGRESSION >2x"
             regressions.append(name)
+        elif max(ratios) > 2.0:
+            mark += "  NEEDS-RERUN"
         lines.append(f"   {name:<40} {now:>7.3f}s  vs {was:.3f}s  x{ratio:.2f}{mark}")
     for name in sorted(set(prev_q) - set(result["queries"])):
         lines.append(f"   {name:<40} (dropped; was {prev_q[name]:.3f}s)")

@@ -96,3 +96,20 @@ def checkpointed_plans(spark, action) -> list[str]:
     finally:
         cls.localCheckpoint = orig
     return plans
+
+
+def parquet_codecs(root) -> dict[str, set[str]]:
+    """The codec of every column chunk of every ``*.parquet`` file under
+    ``root`` (recursively), as pyarrow reads it from the file footers:
+    ``{relative path: {"ZSTD", ...}}``."""
+    import pyarrow.parquet as pq
+
+    out = {}
+    for path in sorted(Path(root).rglob("*.parquet")):
+        meta = pq.ParquetFile(path).metadata
+        out[str(path.relative_to(root))] = {
+            meta.row_group(g).column(c).compression
+            for g in range(meta.num_row_groups)
+            for c in range(meta.num_columns)
+        }
+    return out

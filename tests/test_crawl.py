@@ -637,3 +637,56 @@ def test_production_bench_twin_reruns_are_byte_identical(spark):
     # survivors exist in this configuration — the second run re-admitting
     # them is exactly what the pristine copy guarantees
     assert any(row[0] == "b0" and row[2] == 0 and row[3] == 0 for row in r1)
+
+
+def test_every_engine_write_is_zstd(spark, tmp_path, crawl_env):
+    """The session default makes every parquet file the engine writes
+    zstd-compressed: the builds, appends and compactions of the IVF,
+    inverted, dedup and LSH layouts (side-tables included) and one
+    crawl batch with its verdict sink. Parquet records the codec per
+    column chunk, so every chunk's footer is checked."""
+    from conftest import parquet_codecs
+
+    from vector_db_example_spark.index.dedupidx import dedup_index_compact
+    from vector_db_example_spark.index.inverted import (
+        build_inverted_index,
+        compact_inverted_index,
+    )
+    from vector_db_example_spark.index.ivf import compact_ivf_index
+    from vector_db_example_spark.index.lsh import (
+        build_lsh_layout,
+        compact_lsh_layout,
+        lsh_append,
+    )
+
+    didx, vidx, src_dir = crawl_env
+    corpus = spark.createDataFrame(CORPUS, DOC_SCHEMA)
+    iidx = build_inverted_index(corpus, str(tmp_path / "inv"))
+    embed = hashing_embedder(64)
+    lidx = build_lsh_layout(
+        corpus.withColumn("embedding", embed(F.col("text"))),
+        str(tmp_path / "lsh"), dim=64, id_col="doc_id",
+    )
+    lsh_append(
+        lidx,
+        spark.createDataFrame([FRESH_B2], DOC_SCHEMA).withColumn(
+            "embedding", embed(F.col("text"))
+        ),
+    )
+    totals = stream_crawl_ingest(
+        spark, src_dir, didx, vidx, str(tmp_path / "ckpt"),
+        verdict_path=str(tmp_path / "verdicts"), inverted_index=iidx,
+    )
+    assert totals["batches"] == 1 and totals["accepted"] > 0
+    compact_ivf_index(spark, vidx, str(tmp_path / "ivf_c"))
+    compact_inverted_index(spark, iidx, str(tmp_path / "inv_c"))
+    dedup_index_compact(spark, didx, str(tmp_path / "dedup_c"))
+    compact_lsh_layout(spark, lidx, str(tmp_path / "lsh_c"))
+
+    codecs = parquet_codecs(tmp_path)
+    roots = {p.split(os.sep)[0] for p, chunks in codecs.items() if chunks}
+    assert {
+        "ivf", "ivf_c", "inv", "inv_c", "dedup", "dedup_sigs", "dedup_c",
+        "dedup_c_sigs", "lsh", "lsh_c", "verdicts",
+    } <= roots
+    assert {p: c for p, c in codecs.items() if c - {"ZSTD"}} == {}

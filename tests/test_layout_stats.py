@@ -209,3 +209,124 @@ def test_total_file_count_rejects_unknown_layouts(spark):
 
     with pytest.raises(TypeError):
         layout_total_file_count(NotALayout(), spark)
+
+
+CODEC = "spark.sql.parquet.compression.codec"
+CODEC_BASE = [
+    (0, "relational algebra defines closed operators over typed relations"),
+    (1, "physical data independence separates storage layout from schema"),
+    (2, "a candidate key uniquely identifies every tuple in a relation"),
+    (3, "write ahead logging makes committed transactions durable"),
+    (4, "snapshot isolation reads a consistent version without locking"),
+]
+CODEC_APPEND = [
+    (5, "bloom filters answer set membership with one sided error"),
+    (6, "cost based optimizers enumerate join orders with dynamic programming"),
+]
+CODEC_BATCH = [
+    (10, CODEC_BASE[1][1]),  # copy of a built doc
+    (11, CODEC_APPEND[1][1]),  # copy of an appended doc
+    (12, "cost based optimizers enumerate join orders with greedy programming"),
+    (13, "log structured merge trees batch random writes into runs"),
+]
+
+
+def _codec_layouts(spark, root, build_codec=None):
+    """IVF, inverted and dedup layouts over ``CODEC_BASE`` (built under
+    ``build_codec`` when given), then ``CODEC_APPEND`` appended under the
+    session default."""
+    from vector_db_example_spark.functions.embedding import hashing_embedder
+    from vector_db_example_spark.index.dedupidx import (
+        build_dedup_index,
+        dedup_index_append,
+    )
+    from vector_db_example_spark.index.inverted import (
+        append_to_inverted_index,
+        build_inverted_index,
+    )
+    from vector_db_example_spark.index.ivf import build_ivf_index, ivf_append
+
+    def embedded(df):
+        return df.withColumn("embedding", hashing_embedder(64)(F.col("text")))
+
+    base = spark.createDataFrame(CODEC_BASE, DOC_SCHEMA)
+    default = spark.conf.get(CODEC)
+    if build_codec:
+        spark.conf.set(CODEC, build_codec)
+    try:
+        ivf = build_ivf_index(
+            embedded(base), f"{root}/ivf", nlist=2, id_col="doc_id", train_sample=100
+        )
+        inv = build_inverted_index(base, f"{root}/inv", n_buckets=4)
+        dedup = build_dedup_index(base, f"{root}/dedup", sig_buckets=4)
+    finally:
+        spark.conf.set(CODEC, default)
+    extra = spark.createDataFrame(CODEC_APPEND, DOC_SCHEMA)
+    ivf_append(ivf, embedded(extra))
+    append_to_inverted_index(inv, extra)
+    dedup_index_append(dedup, extra)
+    return ivf, inv, dedup
+
+
+def _codec_answers(spark, ivf, inv, dedup):
+    """Exhaustive IVF search (ids and distances: a compaction refits the
+    cells), BM25 ids and scores, and the dedup verdicts at thresholds 0
+    and 0.5 of ``CODEC_BATCH``."""
+    from vector_db_example_spark.functions.embedding import hash_embed_one
+    from vector_db_example_spark.index.dedupidx import dedup_index_filter
+    from vector_db_example_spark.index.inverted import bm25_search_inverted
+    from vector_db_example_spark.index.ivf import ivf_search
+
+    q = hash_embed_one("join orders and committed transactions", 64)
+    batch = spark.createDataFrame(CODEC_BATCH, DOC_SCHEMA)
+    return (
+        [
+            tuple(r)
+            for r in ivf_search(spark, ivf, q, k=5, nprobe=2)
+            .select("doc_id", "distance")
+            .collect()
+        ],
+        [
+            tuple(r)
+            for r in bm25_search_inverted(
+                spark, inv, ["join", "transactions", "storage"], k=5
+            ).collect()
+        ],
+        [
+            sorted(
+                map(tuple, dedup_index_filter(spark, dedup, batch, threshold=t)[0].collect())
+            )
+            for t in (0.0, 0.5)
+        ],
+    )
+
+
+def test_mixed_codec_layouts_answer_like_zstd_ones(spark, tmp_path):
+    """Parquet records the codec per column chunk, so a layout built
+    under snappy keeps working when zstd appends land in it: it answers
+    exactly like the same corpus built and appended under zstd, and its
+    compaction rewrites every file as zstd with unchanged answers."""
+    from conftest import parquet_codecs
+
+    from vector_db_example_spark.index.dedupidx import dedup_index_compact
+    from vector_db_example_spark.index.inverted import compact_inverted_index
+    from vector_db_example_spark.index.ivf import compact_ivf_index
+
+    mixed = _codec_layouts(spark, tmp_path / "mixed", build_codec="snappy")
+    chunks = set().union(*parquet_codecs(tmp_path / "mixed").values())
+    assert chunks == {"SNAPPY", "ZSTD"}
+    want = _codec_answers(spark, *_codec_layouts(spark, tmp_path / "zstd"))
+    assert set().union(*parquet_codecs(tmp_path / "zstd").values()) == {"ZSTD"}
+    assert want[0] and want[1] and any(v[1] for v in want[2][0])
+    assert _codec_answers(spark, *mixed) == want
+
+    ivf, inv, dedup = mixed
+    out = tmp_path / "compacted"
+    compacted = (
+        compact_ivf_index(spark, ivf, f"{out}/ivf"),
+        compact_inverted_index(spark, inv, f"{out}/inv"),
+        dedup_index_compact(spark, dedup, f"{out}/dedup"),
+    )
+    codecs = parquet_codecs(out)
+    assert codecs and set().union(*codecs.values()) == {"ZSTD"}
+    assert _codec_answers(spark, *compacted) == want

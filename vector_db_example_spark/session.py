@@ -4,6 +4,14 @@ Defaults chosen for correctness at small SF and sanity at cluster scale:
 AQE on (runtime coalescing + skew-join splitting), UTC session timezone
 (so results compare bit-for-bit against external oracles), Arrow enabled
 for the pandas-UDF surface.
+
+Every parquet file the engine writes (index layouts, their side-tables,
+crawl verdicts) is zstd-compressed: layout bytes are both storage and
+scan I/O, and zstd cuts them by about a fifth against Spark's snappy
+default at no measurable CPU cost. Parquet records the codec per column
+chunk, so a layout written under another codec needs no migration: its
+files read alongside the zstd appends, and its next compaction rewrites
+them as zstd.
 """
 
 from __future__ import annotations
@@ -38,6 +46,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
+        .config("spark.sql.parquet.compression.codec", "zstd")
         # Best-effort only: spark.driver.memory must reach the JVM before
         # it launches, so this applies ONLY when this builder starts the
         # gateway (fresh process, no PYSPARK_SUBMIT_ARGS). Under
