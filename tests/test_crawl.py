@@ -440,6 +440,19 @@ def test_overlapped_writes_keep_the_callers_job_group(spark):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 1
 
 
+def test_overlapped_writes_see_the_callers_session(spark, tmp_path):
+    """A function submitted through ``overlapped`` runs with the
+    caller's session active on its thread, so an ``fsio`` call that
+    takes no ``spark`` works there as it does on the caller's thread."""
+    from vector_db_example_spark import fsio
+    from vector_db_example_spark.sources.tables import overlapped
+
+    seen = []
+    with overlapped(spark) as submit:
+        submit(lambda: seen.append(fsio.exists(str(tmp_path))))
+    assert seen == [True]
+
+
 def test_failing_inverted_append_surfaces_ivf_failure(
     spark, tmp_path, crawl_env, monkeypatch
 ):

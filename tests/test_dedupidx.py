@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -604,47 +605,9 @@ def test_band_filter_never_shuffles_layout(spark, tmp_path_factory):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-# --- bucketed signature side-car (round 11) -------------------------------
-
-
-def test_sig_sidecar_bucketed_and_pruned(spark, tmp_path_factory):
-    """The default layout partitions the signature side-car by
-    ``pmod(id, sig_buckets)`` and the verified filter's candidate fetch
-    reads ONLY the buckets holding candidate ids — the scan node must
-    carry a sig_bucket partition filter, so the per-batch cost no
-    longer grows with corpus size (the round-10 verdict's top gap)."""
-    import os
-
-    from vector_db_example_spark.index.dedupidx import _sigs_path
-
-    d = str(tmp_path_factory.mktemp("dedupidx_bkt"))
-    corpus = spark.createDataFrame(
-        [(i, f"document number {i} alpha beta gamma") for i in range(20)],
-        "doc_id long, text string",
-    )
-    index = build_dedup_index(corpus, f"{d}/idx", sig_buckets=8)
-    assert index.sig_buckets == 8
-    subdirs = {
-        p for p in os.listdir(_sigs_path(index)) if p.startswith("sig_bucket=")
-    }
-    assert subdirs, "expected sig_bucket= partition directories"
-    assert subdirs <= {f"sig_bucket={b}" for b in range(8)}
-    batch = spark.createDataFrame(
-        [(100, "document number 3 alpha beta gamma")], "doc_id long, text string"
-    )
-    frame = dedup_index_filter(spark, index, batch, threshold=0.5)[0]
-    plan = frame._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "sig_bucket" in plan, plan
-    # and the verdicts are unchanged by the pruning
-    [r] = frame.collect()
-    assert (r["corpus_dup"], r["within_dup"]) == (True, False)
-
-
 def test_legacy_unbucketed_layout_still_works(spark, tmp_path_factory):
-    """sig_buckets=0 keeps the pre-round-11 unpartitioned side-car and
-    full-scan verify path; a meta JSON without the field loads as 0
+    """A build writes the unpartitioned side-car and records
+    ``sig_buckets`` 0; a meta JSON without the field loads as 0
     (backward compatibility with layouts persisted by earlier rounds)."""
     import json
     import os
@@ -656,7 +619,8 @@ def test_legacy_unbucketed_layout_still_works(spark, tmp_path_factory):
         [(1, "the quick brown fox jumps over the lazy dog")],
         "doc_id long, text string",
     )
-    index = build_dedup_index(corpus, f"{d}/idx", sig_buckets=0)
+    index = build_dedup_index(corpus, f"{d}/idx")
+    assert index.sig_buckets == 0
     assert not any(
         p.startswith("sig_bucket=") for p in os.listdir(_sigs_path(index))
     )
@@ -681,63 +645,6 @@ def test_legacy_unbucketed_layout_still_works(spark, tmp_path_factory):
         )[0].collect()
     }
     assert got == {10: (True, False), 11: (False, False)}
-
-
-def test_compact_migrates_sig_buckets(spark, tmp_path_factory):
-    """A legacy unpartitioned layout migrates onto the bucket-pruned
-    verified read path through ONE ordinary compaction with a
-    ``sig_buckets`` override — no corpus re-shingle (signatures are
-    already persisted) — and the verdicts are identical before and
-    after: bucketing moves sig rows, never changes their values. The
-    downgrade direction (bucketed → 0) must also round-trip, dropping
-    the directory-derived column cleanly."""
-    import os
-
-    from vector_db_example_spark.index.dedupidx import (
-        _sigs_path,
-        dedup_index_compact,
-    )
-
-    d = str(tmp_path_factory.mktemp("dedupidx_migrate"))
-    corpus = spark.createDataFrame(
-        [(i, f"document number {i} alpha beta gamma") for i in range(12)],
-        "doc_id long, text string",
-    )
-    legacy = build_dedup_index(corpus, f"{d}/idx", sig_buckets=0)
-    batch = spark.createDataFrame(
-        [
-            (100, "document number 3 alpha beta gamma"),
-            (101, "totally unrelated fresh content here"),
-        ],
-        "doc_id long, text string",
-    )
-
-    def verified(idx):
-        return {
-            r["doc_id"]: (r["corpus_dup"], r["within_dup"])
-            for r in dedup_index_filter(
-                spark, idx, batch, threshold=0.5
-            )[0].collect()
-        }
-
-    before = verified(legacy)
-    assert before == {100: (True, False), 101: (False, False)}
-
-    migrated = dedup_index_compact(spark, legacy, f"{d}/idx_v2", sig_buckets=8)
-    assert migrated.sig_buckets == 8
-    assert DedupIndex.load(f"{d}/idx_v2").sig_buckets == 8
-    assert any(
-        p.startswith("sig_bucket=") for p in os.listdir(_sigs_path(migrated))
-    )
-    assert verified(migrated) == before
-
-    # downgrade: bucketed → unpartitioned, verdicts still identical
-    downgraded = dedup_index_compact(spark, migrated, f"{d}/idx_v3", sig_buckets=0)
-    assert downgraded.sig_buckets == 0
-    assert not any(
-        p.startswith("sig_bucket=") for p in os.listdir(_sigs_path(downgraded))
-    )
-    assert verified(downgraded) == before
 
 
 def _write_hex_layout(spark, docs, path: str, sig_buckets: int = 8) -> None:
@@ -842,9 +749,119 @@ def test_legacy_hex_layout_filters_appends_and_migrates(spark, tmp_path_factory)
     assert stats(migrated) == hex_stats
 
 
-def test_bucketed_append_compact_preserve_buckets(spark, tmp_path_factory):
-    """Appends land in the right bucket partitions and compaction keeps
-    the bucketing (so the pruned verify path survives maintenance)."""
+def _write_bucketed_layout(spark, flat, path: str, sig_buckets: int = 8) -> DedupIndex:
+    """A copy of the ``flat`` layout as builds before the flat side-car
+    wrote it: signatures partitioned by ``sig_bucket = pmod(id,
+    sig_buckets)`` and a meta recording ``sig_buckets``."""
+    import json
+
+    from vector_db_example_spark.index.dedupidx import _read_bands, _read_sigs
+
+    _read_sigs(spark, flat).withColumn(
+        "sig_bucket", F.pmod(F.col("doc_id"), F.lit(sig_buckets)).cast("int")
+    ).write.partitionBy("sig_bucket").parquet(f"{path}_sigs")
+    _read_bands(spark, flat).write.partitionBy("band").parquet(path)
+    meta = json.loads(open(f"{flat.path}/_dedup_meta.json").read())
+    open(f"{path}/_dedup_meta.json", "w").write(
+        json.dumps({**meta, "sig_buckets": sig_buckets})
+    )
+    return DedupIndex.load(path)
+
+
+BKT_SCHEMA = "doc_id long, text string"
+BKT_BOILER = "shared boilerplate footer text for every page"
+BKT_CORPUS = (
+    [(i, f"corpus doc {i} alpha beta gamma delta") for i in range(12)]
+    + [(20 + i, f"{BKT_BOILER} {i}") for i in range(5)]
+    + [(30, None), (31, "w31a w31b w31c w31d w31e")]
+)
+BKT_BATCH = [
+    (100, "corpus doc 3 alpha beta gamma delta"),  # exact corpus dup
+    (101, "corpus doc 4 alpha beta gamma omega"),  # near dup
+    (102, f"{BKT_BOILER} 99"),  # boilerplate collider
+    (103, None),
+    (104, "fresh words nobody has written before"),
+    (105, "fresh words nobody has written before"),
+    (106, "w31a w31b w31c w31d w31e"),  # dup of doc 31
+    (107, "appended later with its own words"),  # dup of a later append
+]
+
+
+def _bkt_verdicts(spark, idx, thresholds=(0.0, 0.5)):
+    batch = spark.createDataFrame(BKT_BATCH, BKT_SCHEMA)
+    return {
+        t: {
+            r["doc_id"]: (r["corpus_dup"], r["within_dup"])
+            for r in dedup_index_filter(
+                spark, idx, batch, threshold=t, candidate_cap=3
+            )[0].collect()
+        }
+        for t in thresholds
+    }
+
+
+@pytest.fixture(scope="module")
+def flat_bkt(spark, tmp_path_factory):
+    """A flat build of ``BKT_CORPUS`` and its verdicts on ``BKT_BATCH``
+    at thresholds 0 and 0.5 (mega-key route, null texts and a
+    within-batch pair included) — the reference a bucketed copy of the
+    same corpus must reproduce. Never mutated."""
+    d = str(tmp_path_factory.mktemp("dedupidx_flat"))
+    flat = build_dedup_index(
+        spark.createDataFrame(BKT_CORPUS, BKT_SCHEMA), f"{d}/flat"
+    )
+    want = _bkt_verdicts(spark, flat)
+    assert want[0.0] != want[0.5]
+    assert want[0.5][106] == (True, False) and want[0.5][107] == (False, False)
+    return flat, want
+
+
+def test_legacy_bucketed_layout_appends_and_deletes(
+    spark, tmp_path_factory, flat_bkt
+):
+    """A layout whose side-car is partitioned by ``sig_bucket`` (every
+    build from round 11 until the flat side-car) keeps working: its
+    verdicts at thresholds 0 and 0.5 equal a flat build's, an append
+    lands under its ``sig_bucket=`` directories and the next filter sees
+    it, and a delete tombstones through the side-car root."""
+    import glob
+    import os
+
+    from vector_db_example_spark.index.dedupidx import (
+        _sigs_path,
+        dedup_index_delete,
+    )
+
+    flat, want = flat_bkt
+    d = str(tmp_path_factory.mktemp("dedupidx_bucketed"))
+    bucketed = _write_bucketed_layout(spark, flat, f"{d}/bkt")
+    assert bucketed.sig_buckets == 8
+    assert _bkt_verdicts(spark, bucketed) == want
+
+    sigs = _sigs_path(bucketed)
+    before = set(glob.glob(f"{sigs}/**/*.parquet", recursive=True))
+    dedup_index_append(
+        bucketed,
+        spark.createDataFrame(
+            [(200, "appended later with its own words")], BKT_SCHEMA
+        ),
+    )
+    added = set(glob.glob(f"{sigs}/**/*.parquet", recursive=True)) - before
+    assert added and all(
+        os.path.dirname(f) == f"{sigs}/sig_bucket={200 % 8}" for f in added
+    ), added
+    assert dedup_index_delete(spark, bucketed, [31, 999]) == 1
+    assert dedup_index_delete(spark, bucketed, [31]) == 0
+    after = {**want[0.5], 106: (False, False), 107: (True, False)}
+    assert _bkt_verdicts(spark, bucketed, (0.5,)) == {0.5: after}
+
+
+def test_compact_migrates_sig_buckets(spark, tmp_path_factory, flat_bkt):
+    """A legacy bucketed layout migrates onto the flat side-car through
+    ONE ordinary compaction — no corpus re-shingle (signatures are
+    already persisted) — and the verdicts at thresholds 0 and 0.5 are
+    identical before and after: the migration moves sig rows, never
+    changes their values, and drops the directory-derived column."""
     import os
 
     from vector_db_example_spark.index.dedupidx import (
@@ -852,36 +869,22 @@ def test_bucketed_append_compact_preserve_buckets(spark, tmp_path_factory):
         dedup_index_compact,
     )
 
-    d = str(tmp_path_factory.mktemp("dedupidx_bkt2"))
-    corpus = spark.createDataFrame(
-        [(3, "alpha beta gamma delta epsilon")], "doc_id long, text string"
+    flat, want = flat_bkt
+    d = str(tmp_path_factory.mktemp("dedupidx_migrate"))
+    bucketed = _write_bucketed_layout(spark, flat, f"{d}/bkt")
+    assert any(
+        p.startswith("sig_bucket=") for p in os.listdir(_sigs_path(bucketed))
     )
-    index = build_dedup_index(corpus, f"{d}/idx", sig_buckets=4)
-    dedup_index_append(
-        index,
-        spark.createDataFrame(
-            [(6, "one two three four five")], "doc_id long, text string"
-        ),
+    migrated = dedup_index_compact(spark, bucketed, f"{d}/bkt_v2")
+    assert migrated.sig_buckets == 0
+    assert DedupIndex.load(migrated.path).sig_buckets == 0
+    assert not any(
+        p.startswith("sig_bucket=") for p in os.listdir(_sigs_path(migrated))
     )
-    dirs = {p for p in os.listdir(_sigs_path(index)) if p.startswith("sig_bucket=")}
-    assert dirs == {"sig_bucket=3", "sig_bucket=2"}  # pmod(3,4), pmod(6,4)
-    compacted = dedup_index_compact(spark, index, f"{d}/idx_v2")
-    assert compacted.sig_buckets == 4
-    dirs2 = {
-        p for p in os.listdir(_sigs_path(compacted)) if p.startswith("sig_bucket=")
-    }
-    assert dirs2 == {"sig_bucket=3", "sig_bucket=2"}
-    got = _verdicts(
-        spark,
-        compacted,
-        spark.createDataFrame(
-            [(20, "one two three four five")], "doc_id long, text string"
-        ),
-    )
-    assert got == {20: (True, False)}
+    assert _bkt_verdicts(spark, migrated) == want
 
 
-# --- round-12: count-first verified filter + bucket-pruned delete ---------
+# --- round-12: count-first verified filter --------------------------------
 
 
 def test_verified_filter_checkpoints_only_batch_bounded_frames(
@@ -929,49 +932,11 @@ def test_verified_filter_checkpoints_only_batch_bounded_frames(
         )[0].collect()
     }
     assert got == {200: (True, False), 201: (False, False)}
-    # bsigs (2 rows), key_counts (<= 16 batch keys), bucketed cand pairs
-    # (0 here - the hot key is over-cap). The old shape would have
+    # sig/band rows (16), key_counts (<= 16 batch keys); no candidate
+    # pairs here - the hot key is over-cap. The old shape would have
     # recorded 480.
     assert counts, "expected the filter to materialize its bounded frames"
     assert max(counts) <= 32, counts
-
-
-def test_delete_victim_scan_is_bucket_pruned(spark, tmp_path_factory):
-    """On bucketed layouts, delete's victim resolution must read only the
-    victims' ``sig_bucket`` partitions (driver-side pmod of the ids), not
-    the full side-car id column (VERDICT r11 gap #2)."""
-    from vector_db_example_spark.index.dedupidx import (
-        _delete_victims,
-        dedup_index_delete,
-    )
-
-    d = str(tmp_path_factory.mktemp("dedupidx_delprune"))
-    # per-doc-unique words: no cross-doc shingles, so deleting doc 3
-    # removes the ONLY corpus doc its duplicate can collide with
-    corpus = spark.createDataFrame(
-        [(i, f"w{i}a w{i}b w{i}c w{i}d w{i}e") for i in range(20)],
-        "doc_id long, text string",
-    )
-    index = build_dedup_index(corpus, f"{d}/idx", sig_buckets=8)
-    victims = _delete_victims(spark, index, [3, 11])  # both pmod to bucket 3
-    plan = victims._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "sig_bucket" in plan, plan
-    assert "PartitionFilters: []" not in plan, plan
-    # and the real delete still behaves: both ids tombstone, re-delete is
-    # a no-op, and the filter stops flagging their duplicates
-    assert dedup_index_delete(spark, index, [3, 11]) == 2
-    assert dedup_index_delete(spark, index, [3, 11]) == 0
-    got = _verdicts(
-        spark,
-        index,
-        spark.createDataFrame(
-            [(100, "w3a w3b w3c w3d w3e")],
-            "doc_id long, text string",
-        ),
-    )
-    assert got == {100: (False, False)}
 
 
 def test_plan_size_bytes_error_discipline(spark):
@@ -1067,8 +1032,7 @@ def test_verified_filter_skips_sig_subtree_when_no_under_cap_key(
     """When every colliding (band, key) is over-cap — or nothing collides
     at all — the candidate set is provably empty, so the filter must not
     touch the signature side-car: no ``_read_sigs`` call, hence no
-    candidate checkpoint, bucket collect, or side-car scan jobs over
-    provably-empty frames (advisor finding, round 12). At
+    side-car scan over provably-empty frames (advisor finding, round 12). At
     ``threshold=0`` every colliding key is routed unverified, so even an
     under-cap collider and a within-batch pair must build neither the
     side-car read nor the similarity estimator. At ``threshold > 0`` an
@@ -1081,7 +1045,7 @@ def test_verified_filter_skips_sig_subtree_when_no_under_cap_key(
         + [(50, "one two three four five six seven")],
         "doc_id long, text string",
     )
-    index = build_dedup_index(corpus, f"{d}/idx", sig_buckets=8)
+    index = build_dedup_index(corpus, f"{d}/idx")
     calls: list[int] = []
     orig = dd._read_sigs
 
@@ -1165,7 +1129,7 @@ def test_verified_filter_fresh_batch_plan_collapses(
         [(i, f"w{i}a w{i}b w{i}c w{i}d w{i}e") for i in range(10)],
         "doc_id long, text string",
     )
-    index = build_dedup_index(corpus, f"{d}/idx", sig_buckets=8)
+    index = build_dedup_index(corpus, f"{d}/idx")
     calls: list[int] = []
     orig = dd._est_sim
 
@@ -1237,7 +1201,7 @@ KERNEL_ROWS = [
 
 KERNEL_INDEX = DedupIndex(
     path="/unused", shingle_k=3, n_hashes=16, bands=8,
-    id_col="doc_id", text_col="text", sig_buckets=0,
+    id_col="doc_id", text_col="text",
 )
 
 
@@ -1435,7 +1399,7 @@ def test_append_rows_equals_recompute_append(spark, tmp_path_factory):
     )
     layouts = {}
     for mode in ("docs", "rows"):
-        idx = build_dedup_index(corpus, f"{base}/{mode}", sig_buckets=8)
+        idx = build_dedup_index(corpus, f"{base}/{mode}")
         verdicts, rows = dedup_index_filter(spark, idx, batch)
         verdicts = verdicts.localCheckpoint(eager=True)
         surv = verdicts.filter("NOT corpus_dup AND NOT within_dup").select(

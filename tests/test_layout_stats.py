@@ -173,10 +173,14 @@ def test_dispatch_rejects_unknown_layouts(spark):
 
 
 def test_total_file_count_includes_dedup_siblings(spark, tmp_path):
-    """The dedup layout's every append also grows the _sigs sibling;
+    """The dedup layout's every append also grows the _sigs sibling —
+    by exactly one file, however the appended ids spread —
     layout_total_file_count must see that debt while the root-only
     layout_file_count by contract does not (advisor finding, round 9)."""
+    import glob
+
     from vector_db_example_spark.index.dedupidx import (
+        _sigs_path,
         build_dedup_index,
         dedup_index_append,
         dedup_index_delete,
@@ -187,10 +191,18 @@ def test_total_file_count_includes_dedup_siblings(spark, tmp_path):
     idx = build_dedup_index(docs, str(tmp_path / "idx"))
     base_total = layout_total_file_count(idx, spark)
     assert base_total > layout_file_count(idx.path, spark)
-    dedup_index_append(
-        idx,
-        spark.createDataFrame([(100, "sibling growth probe tokens")], DOC_SCHEMA),
-    )
+
+    def sig_files():
+        return len(glob.glob(f"{_sigs_path(idx)}/**/*.parquet", recursive=True))
+
+    base_sig_files = sig_files()
+    # ids 100..107 fall in 8 distinct residues mod 64; read back from a
+    # file, as a crawl batch is, so the append's size gate has an estimate
+    spark.createDataFrame(
+        [(100 + i, f"sibling growth probe tokens {i}") for i in range(8)], DOC_SCHEMA
+    ).write.parquet(str(tmp_path / "batch"))
+    dedup_index_append(idx, spark.read.parquet(str(tmp_path / "batch")))
+    assert sig_files() == base_sig_files + 1
     grown_total = layout_total_file_count(idx, spark)
     assert grown_total > base_total
     dedup_index_delete(spark, idx, [100])
@@ -258,7 +270,7 @@ def _codec_layouts(spark, root, build_codec=None):
             embedded(base), f"{root}/ivf", nlist=2, id_col="doc_id", train_sample=100
         )
         inv = build_inverted_index(base, f"{root}/inv", n_buckets=4)
-        dedup = build_dedup_index(base, f"{root}/dedup", sig_buckets=4)
+        dedup = build_dedup_index(base, f"{root}/dedup")
     finally:
         spark.conf.set(CODEC, default)
     extra = spark.createDataFrame(CODEC_APPEND, DOC_SCHEMA)

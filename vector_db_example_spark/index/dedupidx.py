@@ -15,8 +15,8 @@ The layout persists the corpus's LSH band keys — ``(id, band, key)``,
 one 16-byte md5 digest per band (8 by default) per document via the
 same shingle → minhash → band pipeline as ``minhash_near_duplicates``
 (operators/dedup.py:84,99) — partitioned by ``band``, plus a signature
-side-car ``(id, sig)`` of ``n_hashes`` 16-byte digests, partitioned by
-``sig_bucket``. Every hash is the binary form of the hex string the
+side-car ``(id, sig)`` of ``n_hashes`` 16-byte digests, one unpartitioned
+table. Every hash is the binary form of the hex string the
 batch operators and the SQL oracles compute (``key = unhex(
 lsh_band_keys(...).key)``, ``sig[i] = unhex(minhash_signature(...)[i])``
 — a bijection, so every equality the layout tests is the hex one), at
@@ -30,7 +30,7 @@ hex strings; reads unhex them, appends keep writing hex, and
    again), streamed through a broadcast semi-join against the batch's
    own keys and counted per colliding key,
 2. at ``threshold > 0``, a MinHash similarity check of the under-cap
-   candidates against the bucket-pruned signature side-car,
+   candidates, joined against a narrow scan of the signature side-car,
 3. a groupBy-min within the batch for the intra-batch verdicts
    (map-side combine; never a collect).
 
@@ -119,13 +119,15 @@ class DedupIndex:
     """Band-partitioned dedup layout on disk (the dedup twin of
     index/lsh.py::LSHIndex).
 
-    ``sig_buckets`` > 0 means the signature side-car is partitioned by
-    ``sig_bucket = pmod(id, sig_buckets)``, so the verified filter's
-    candidate-signature fetch reads ONLY the buckets holding candidate
-    ids instead of a corpus-proportional full scan — the one per-batch
-    cost in the intake loop that used to grow with corpus size. 0 is
-    the legacy unpartitioned layout (metas written before the field
-    existed load as 0 and keep their read path).
+    ``sig_buckets`` is 0 for every layout built or compacted now: the
+    signature side-car is one unpartitioned table, so an append lands
+    one file. A meta with ``sig_buckets`` > 0 is a legacy layout whose
+    side-car is partitioned by ``sig_bucket = pmod(id, sig_buckets)``:
+    reads go through the side-car root (the discovered partition column
+    is dropped), appends keep landing in its bucket directories (a flat
+    file under a partitioned root would break partition discovery), and
+    ``dedup_index_compact`` rewrites it flat. Metas written before the
+    field existed load as 0.
 
     ``hash_format`` is how the hashes are stored: ``"binary"`` 16-byte
     md5 digests, or ``"hex"`` 32-character strings — the format of
@@ -360,22 +362,17 @@ def _sigs_path(index: DedupIndex) -> str:
 
 
 def _sig_schema(index: DedupIndex) -> T.StructType:
-    fields = [
-        T.StructField(index.id_col, T.LongType(), True),
-        T.StructField("sig", T.ArrayType(_hash_type(index)), True),
-    ]
-    if index.sig_buckets:
-        # Partition column (directory-encoded): declared in the schema so
-        # a declared-empty bucketed layout reads well-typed.
-        fields.append(T.StructField("sig_bucket", T.IntegerType(), True))
-    return T.StructType(fields)
+    return T.StructType(
+        [
+            T.StructField(index.id_col, T.LongType(), True),
+            T.StructField("sig", T.ArrayType(_hash_type(index)), True),
+        ]
+    )
 
 
 def _sig_bucket_expr(index: DedupIndex, id_expr):
-    """The id → bucket mapping the sig side-car is partitioned by. Plain
-    ``pmod(id, sig_buckets)`` — deterministic across engines (the filter
-    derives the SAME expression from candidate ids to pick the buckets
-    it reads), no hash-function coupling."""
+    """The id → bucket mapping of a legacy bucketed side-car
+    (``sig_buckets`` > 0), which its appends keep writing."""
     return F.pmod(id_expr.cast("long"), F.lit(index.sig_buckets)).cast("int")
 
 
@@ -400,11 +397,13 @@ def _read_bands(spark: SparkSession, index: DedupIndex) -> DataFrame:
 
 
 def _read_sigs(spark: SparkSession, index: DedupIndex) -> DataFrame:
-    """The signature side-car, its elements always digests."""
+    """The signature side-car ``(id, sig)``, its elements always
+    digests. A legacy bucketed side-car reads through its root too: the
+    select drops the discovered ``sig_bucket`` partition column."""
     sigs = spark.read.schema(_sig_schema(index)).parquet(_sigs_path(index))
     if index.hash_format == "hex":
         sigs = sigs.withColumn("sig", _sig_elements(index, F.unhex))
-    return sigs
+    return sigs.select(index.id_col, "sig")
 
 
 def _stored(index: DedupIndex, rows: DataFrame) -> DataFrame:
@@ -450,25 +449,13 @@ def _persist(index: DedupIndex, docs: DataFrame) -> None:
     ReusedExchange, so an unmaterialized sig frame would run the kernel
     twice), and streaming 256 B/doc back through the executors scales
     to a corpus-sized build where no in-memory materialization could.
-
-    Bucketed layouts (``sig_buckets`` > 0) shuffle the sig rows on the
-    bucket column before the partitioned write, so the build lands one
-    file set per bucket partition instead of (tasks × buckets) shards.
-    """
+    The sig table is one unpartitioned side-car."""
     # Corpus-sized pass: over-partition 4× so one uneven scan split
     # can't set the build's wall (_kernel_input docstring; measured
     # 18% off the sf25 sigs pass, SCALING.md round 8).
-    sigs = signature_rows(index, docs, widen_factor=4)
-    if index.sig_buckets:
-        (
-            sigs.withColumn("sig_bucket", _sig_bucket_expr(index, F.col(index.id_col)))
-            .repartition(F.col("sig_bucket"))
-            .write.partitionBy("sig_bucket")
-            .mode("overwrite")
-            .parquet(_sigs_path(index))
-        )
-    else:
-        sigs.write.mode("overwrite").parquet(_sigs_path(index))
+    signature_rows(index, docs, widen_factor=4).write.mode("overwrite").parquet(
+        _sigs_path(index)
+    )
     _bands_of_sigs(index, _read_sigs(docs.sparkSession, index)).write.partitionBy(
         "band"
     ).mode("overwrite").parquet(index.path)
@@ -483,19 +470,15 @@ def build_dedup_index(
     bands: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    sig_buckets: int = 64,
 ) -> DedupIndex:
     """Shingle+minhash the accepted corpus ONCE and persist its band
-    keys partitioned by ``band`` plus the signature side-car table
-    (partitioned by ``pmod(id, sig_buckets)`` so the verified filter's
-    candidate fetch prunes; ``sig_buckets=0`` writes the legacy
-    unpartitioned side-car). An empty ``docs`` declares an empty layout
-    (first-crawl bootstrap) — the schema is meta-derived, so reads and
-    the first filter work before any append."""
+    keys partitioned by ``band`` plus the unpartitioned signature
+    side-car (the meta records ``sig_buckets: 0``). An empty ``docs``
+    declares an empty layout (first-crawl bootstrap) — the schema is
+    meta-derived, so reads and the first filter work before any
+    append."""
     if n_hashes % bands:
         raise ValueError(f"n_hashes={n_hashes} not divisible by bands={bands}")
-    if sig_buckets < 0:
-        raise ValueError(f"sig_buckets={sig_buckets} must be >= 0")
     index = DedupIndex(
         path=path,
         shingle_k=shingle_k,
@@ -503,7 +486,6 @@ def build_dedup_index(
         bands=bands,
         id_col=id_col,
         text_col=text_col,
-        sig_buckets=sig_buckets,
     )
     _persist(index, docs)
     index.save_meta()
@@ -573,10 +555,9 @@ def dedup_index_filter(
     — bounded by the batch's own key count, never by a hot key's
     corpus frequency. A second pruned pass restricted to the UNDER-cap
     keys feeds the enumeration (≤ cap · batch_bands rows by
-    construction). On bucketed layouts the signature fetch reads only
-    the ``sig_bucket`` partitions holding candidate ids (static
-    partition pruning); legacy unpartitioned layouts (sig_buckets=0)
-    keep the full-scan read.
+    construction). The candidates' corpus signatures come from a plain
+    join against a narrow ``(id, sig)`` scan of the side-car: no
+    checkpoint, collect or listing job of its own.
 
     Batch side: ONE materialization shared by bands and signatures
     (``_sig_band_rows`` — sig rides the band-0 rows), and two probes
@@ -671,33 +652,10 @@ def dedup_index_filter(
             )
             .distinct()
         )
-        csigs = _read_sigs(spark, index)
-        if index.sig_buckets:
-            # Bucket-pruned fetch: materialize the (small —
-            # ≤ cap·batch_bands pairs) candidate set once, collect the
-            # ≤ sig_buckets distinct buckets its corpus ids live in, and
-            # read ONLY those partitions of the side-car. The collect is
-            # bounded metadata (at most sig_buckets ints), never layout
-            # rows.
-            cand = cand.localCheckpoint(eager=True)
-            buckets = [
-                r["_b"]
-                for r in cand.select(
-                    _sig_bucket_expr(index, F.col("_cid")).alias("_b")
-                )
-                .distinct()
-                .collect()
-            ]
-            if buckets:
-                csigs = csigs.filter(F.col("sig_bucket").isin(buckets))
-            else:
-                csigs = csigs.filter(F.lit(False))
+        csigs = _read_sigs(spark, index).toDF("_cid", "_cs")
         verified_hits = (
             cand.join(bsigs.withColumnRenamed("sig", "_bs"), id_col)
-            .join(
-                csigs.select(F.col(id_col).alias("_cid"), F.col("sig").alias("_cs")),
-                "_cid",
-            )
+            .join(csigs, "_cid")
             .filter(_est_sim(F.col("_bs"), F.col("_cs"), index.n_hashes) >= threshold)
             .select(id_col)
         )
@@ -785,27 +743,22 @@ def dedup_index_append_rows(index: DedupIndex, sig_band_rows: DataFrame) -> None
     two separate actions and an unmaterialized frame would recompute
     between them.
 
-    Both writes are size-gated collapses onto the partition column
+    Both writes are size-gated collapses
     (sources/tables.py::append_repartition): a micro-batch append lands
-    one file per touched ``sig_bucket`` / ``band`` partition instead of
-    (tasks × partitions) shards, and a frame over the collapse ceiling
+    ONE file in the unpartitioned side-car (one per touched
+    ``sig_bucket`` of a legacy bucketed layout, until a compaction
+    rewrites it flat) and one per ``band`` partition, instead of
+    (tasks × partitions) shards; a frame over the collapse ceiling
     keeps full write parallelism (compaction owns its file hygiene)."""
     id_col = index.id_col
     sigs = _stored(index, sig_band_rows.filter(F.col("band") == 0).select(id_col, "sig"))
     if index.sig_buckets:
-        (
-            append_repartition(
-                sigs.withColumn(
-                    "sig_bucket", _sig_bucket_expr(index, F.col(id_col))
-                ),
-                "sig_bucket",
-            )
-            .write.partitionBy("sig_bucket")
-            .mode("append")
-            .parquet(_sigs_path(index))
-        )
+        sigs = sigs.withColumn("sig_bucket", _sig_bucket_expr(index, F.col(id_col)))
+        append_repartition(sigs, "sig_bucket").write.partitionBy("sig_bucket").mode(
+            "append"
+        ).parquet(_sigs_path(index))
     else:
-        sigs.write.mode("append").parquet(_sigs_path(index))
+        append_repartition(sigs).write.mode("append").parquet(_sigs_path(index))
     append_repartition(
         _stored(index, sig_band_rows.select(id_col, "band", "key")), "band"
     ).write.partitionBy("band").mode("append").parquet(index.path)
@@ -852,51 +805,28 @@ def dedup_index_delete(spark: SparkSession, index: DedupIndex, ids) -> int:
     defers until one compaction amortizes it.
 
     Idempotent: victims resolve through the LIVE sig table (one narrow
-    id-column scan — on bucketed layouts pruned to the victims'
-    ``sig_bucket`` partitions, computed driver-side from the ids via
-    the same ``pmod`` the side-car is partitioned by, so victim
-    resolution reads O(touched buckets) not the full corpus id column;
-    the same pruning the verified filter's candidate fetch uses), so
-    re-deleting a tombstoned or absent id is a no-op. Returns the
-    number of ids newly tombstoned."""
+    id-column scan of the side-car root), so re-deleting a tombstoned
+    or absent id is a no-op. Returns the number of ids newly
+    tombstoned."""
     ids = [int(i) for i in ids]
     if not ids:
         return 0
-    victims = _delete_victims(spark, index, ids).localCheckpoint(eager=True)
+    id_col = index.id_col
+    live = _live(spark, index, _read_sigs(spark, index).select(id_col))
+    if len(ids) <= _DELETE_ISIN_MAX:
+        victims = live.filter(F.col(id_col).isin(ids))
+    else:
+        ids_df = spark.createDataFrame([(i,) for i in ids], f"{id_col} long").coalesce(1)
+        victims = live.join(F.broadcast(ids_df), id_col, "semi")
+    victims = victims.distinct().localCheckpoint(eager=True)
     n = victims.count()
     if n:
         victims.write.mode("append").parquet(_tombstone_path(index))
     return n
 
 
-def _delete_victims(spark: SparkSession, index: DedupIndex, ids: list[int]) -> DataFrame:
-    """The (unmaterialized) live-victim frame ``dedup_index_delete``
-    tombstones — split out so its plan shape is pinnable: on bucketed
-    layouts the side-car scan must carry the victims' ``sig_bucket``
-    partition filter (tests/test_dedupidx.py)."""
-    id_col = index.id_col
-    sigs = _read_sigs(spark, index)
-    if index.sig_buckets:
-        # Python % equals Spark's pmod for a positive modulus, so this
-        # driver-side set names exactly the partitions the victims can
-        # live in — static partition pruning, no job.
-        buckets = sorted({i % index.sig_buckets for i in ids})
-        sigs = sigs.filter(F.col("sig_bucket").isin(buckets))
-    live = _live(spark, index, sigs.select(id_col))
-    if len(ids) <= _DELETE_ISIN_MAX:
-        victims = live.filter(F.col(id_col).isin(ids))
-    else:
-        ids_df = spark.createDataFrame([(i,) for i in ids], f"{id_col} long").coalesce(1)
-        victims = live.join(F.broadcast(ids_df), id_col, "semi")
-    return victims.distinct()
-
-
 def dedup_index_compact(
-    spark: SparkSession,
-    index: DedupIndex,
-    new_path: str,
-    *,
-    sig_buckets: int | None = None,
+    spark: SparkSession, index: DedupIndex, new_path: str
 ) -> DedupIndex:
     """Offline maintenance: rewrite the band table and signature side-car
     at ``new_path`` — write-new-then-swap-pointer, never in place
@@ -922,23 +852,13 @@ def dedup_index_compact(
     zero data files and reads back through the meta-derived schema, the
     same declared-empty path the first-crawl bootstrap uses.
 
-    ``sig_buckets`` overrides the side-car partitioning for the NEW
-    layout (default: inherit the source's). This is the migration path
-    for pre-round-11 legacy layouts (``sig_buckets=0``, full-scan
-    verified reads): the signatures are already persisted, so one
-    ordinary compaction — ``sig_buckets=64`` — moves the layout onto
-    the bucket-pruned verified read path without ever re-shingling the
-    corpus text. Verdicts are unaffected: bucketing changes WHERE sig
-    rows live, never their values (regression-pinned in
-    tests/test_dedupidx.py::test_compact_migrates_sig_buckets).
-
-    The new layout always stores binary digests, so compacting a hex
-    layout (a meta without ``hash_format``) is its migration too — the
-    reads unhex, the writes are the compact form, verdicts unchanged."""
-    if sig_buckets is None:
-        sig_buckets = index.sig_buckets
-    if sig_buckets < 0:
-        raise ValueError(f"sig_buckets={sig_buckets} must be >= 0")
+    The new layout always has the unpartitioned side-car, so compacting
+    a legacy bucketed layout (``sig_buckets`` > 0) is its migration:
+    the signatures are already persisted, bucketing only changed WHERE
+    their rows lived, so the verdicts are unchanged. It also always
+    stores binary digests, so compacting a hex layout (a meta without
+    ``hash_format``) is its migration too — the reads unhex, the writes
+    are the compact form, verdicts unchanged."""
     out = DedupIndex(
         path=new_path,
         shingle_k=index.shingle_k,
@@ -946,31 +866,11 @@ def dedup_index_compact(
         bands=index.bands,
         id_col=index.id_col,
         text_col=index.text_col,
-        sig_buckets=sig_buckets,
     )
-    # Drop the source's directory-derived bucket column (if any) before
-    # re-deriving for the OUT layout — the override may change the
-    # bucket count or remove the partitioning entirely.
-    sigs = (
-        _live(spark, index, _read_sigs(spark, index))
-        .drop("sig_bucket")
-        .distinct()
+    sigs = _live(spark, index, _read_sigs(spark, index)).distinct()
+    sigs.repartition(F.col(index.id_col)).write.mode("overwrite").parquet(
+        _sigs_path(out)
     )
-    if out.sig_buckets:
-        # The bucket column is re-derived here and directory-derived on
-        # read, so a replayed row dedups identically; one file set per
-        # bucket after the shuffle.
-        (
-            sigs.withColumn("sig_bucket", _sig_bucket_expr(out, F.col(out.id_col)))
-            .repartition(F.col("sig_bucket"))
-            .write.partitionBy("sig_bucket")
-            .mode("overwrite")
-            .parquet(_sigs_path(out))
-        )
-    else:
-        sigs.repartition(F.col(index.id_col)).write.mode("overwrite").parquet(
-            _sigs_path(out)
-        )
     bands = _live(spark, index, _read_bands(spark, index)).distinct()
     bands.repartition(F.col("band"), F.col("key")).write.partitionBy("band").mode(
         "overwrite"

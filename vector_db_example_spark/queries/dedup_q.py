@@ -1478,12 +1478,11 @@ def dedup_incremental_verified_batch_filter(
     cap 64) against the prebuilt cached corpus index — the verified twin
     of dedup_incremental_batch_filter, sharing its corpus layout and
     batch bytes so the two lines isolate exactly the verification
-    premium (candidate enumeration + the bucket-pruned signature fetch,
-    index/dedupidx.py). The layout's design claim is that BOTH lines
-    stay flat as the corpus grows: the corpus side is a batch-key-
-    restricted (band, key) scan, and since round 11 the signature
-    side-car read prunes to candidate id buckets instead of scanning
-    the full (id, sig) table per batch."""
+    premium (candidate enumeration + the signature fetch,
+    index/dedupidx.py). Neither line re-reads corpus text: the corpus
+    side is a batch-key-restricted (band, key) scan, and the signature
+    fetch joins the candidates against a narrow (id, sig) scan of the
+    unpartitioned side-car."""
     from ..index.dedupidx import dedup_index_filter
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")

@@ -132,7 +132,7 @@ def narrow_materialized(df: DataFrame, n_rows: int) -> DataFrame:
     return df.coalesce(want) if want < cur else df
 
 
-def append_repartition(df: DataFrame, partition_col: str) -> DataFrame:
+def append_repartition(df: DataFrame, partition_col: str | None = None) -> DataFrame:
     """Size-gated partitioned-append discipline (round 16): micro-batch
     appends collapse onto the partition column so each touched partition
     lands ONE file per append (measured round 15: 256 files/1.63 s → 8
@@ -143,13 +143,17 @@ def append_repartition(df: DataFrame, partition_col: str) -> DataFrame:
     owns file hygiene), so nothing can serialize a big write onto
     ≤ distinct-partition-value tasks. An unreachable size estimate is
     treated as big — the scale-safe failure mode (extra small files,
-    never a collapsed corpus write)."""
+    never a collapsed corpus write). Without ``partition_col`` (an
+    unpartitioned append) the collapse is a narrow ``coalesce(1)``: one
+    file, no shuffle."""
     from pyspark.sql import functions as F
 
     est = plan_size_bytes(df)
-    if est is not None and est <= APPEND_COLLAPSE_MAX_BYTES:
-        return df.repartition(F.col(partition_col))
-    return df
+    if est is None or est > APPEND_COLLAPSE_MAX_BYTES:
+        return df
+    if partition_col is None:
+        return df.coalesce(1)
+    return df.repartition(F.col(partition_col))
 
 
 @contextmanager
@@ -164,9 +168,10 @@ def overlapped(spark: SparkSession):
     and description, e.g. a streaming query's — so its jobs are
     attributed to the caller and cancelling the caller's group cancels
     them too (a bare pool thread starts from an empty JVM thread and
-    escapes both). Every job is read on exit: the first failure (the
-    block's own, if any) is raised and each further one is attached to
-    it as a note, so a second failure never vanishes."""
+    escapes both), and the caller's session is its active one. Every
+    job is read on exit: the first failure (the block's own, if any) is
+    raised and each further one is attached to it as a note, so a
+    second failure never vanishes."""
     from pyspark import InheritableThread
 
     jobs: list[tuple[InheritableThread, list]] = []
@@ -176,6 +181,11 @@ def overlapped(spark: SparkSession):
 
         def run() -> None:
             try:
+                # The active session is thread-local in the JVM: without
+                # it, fsio calls that take no ``spark`` would fail here.
+                spark._jvm.org.apache.spark.sql.SparkSession.setActiveSession(
+                    spark._jsparkSession
+                )
                 fn()
             except BaseException as e:  # re-raised by the caller on exit
                 failed.append(e)

@@ -12,8 +12,9 @@ package's persisted layouts into that intake loop, per micro-batch:
 1. **filter** the batch against the persisted incremental-dedup layout
    (index/dedupidx.py::dedup_index_filter — one narrow (band, key)
    corpus scan restricted to the batch's keys by a broadcast
-   semi-join, plus the bucket-pruned signature check in verified
-   mode; the accepted corpus's text is never re-read),
+   semi-join, plus in verified mode a signature check that joins the
+   candidates against a narrow scan of the signature side-car; the
+   accepted corpus's text is never re-read),
 2. **report** the per-document verdicts to a partitioned verdict sink
    (the curation audit trail: every dropped doc_id is attributable to a
    corpus collision or a within-batch collision),
@@ -27,12 +28,12 @@ package's persisted layouts into that intake loop, per micro-batch:
    sees them, so a duplicate arriving twice across batches is admitted
    exactly once.
 
-Per-batch cost is O(batch) everywhere: the corpus-sized structures are
-touched only through pruned columnar reads (dedup bands) and partitioned
-appends (IVF cells). That is the property that holds at 1000 executors:
-a crawl batch's admission cost never grows with the size of what was
-already accepted (measured curve: SCALING.md round-8, corpus 25× →
-band-filter 2.1×).
+Per-batch cost is O(batch) but for narrow scans: the corpus-sized
+structures are touched only through column-pruned reads of derived
+tables (dedup band keys, and signatures in verified mode — never the
+corpus text) and partitioned appends (IVF cells), so a crawl batch's
+admission cost grows far slower than what was already accepted
+(measured curve: SCALING.md round-8, corpus 25× → band-filter 2.1×).
 
 Delivery: foreachBatch is at-least-once, guarded by per-checkpoint
 commit markers (fsio.canonical_token namespacing — the convention shared
@@ -153,11 +154,11 @@ def stream_crawl_ingest(
     (tools/false_drop_measure.py; SCALING.md round 10). Set
     ``verified=True`` for production crawls on diverse data; keep the
     default for replica-heavy backfills where over-suppression is the
-    point. Verified mode joins the persisted signature side-car — read
-    bucket-pruned to the candidate ids' partitions since round 11
-    (index/dedupidx.py ``sig_buckets``) — so the corpus text is still
-    never re-read and per-batch cost stays O(batch) + cap·batch_bands
-    pairs with NO corpus-proportional scan left on the path.
+    point. Verified mode joins the candidate pairs (≤ cap·batch_bands)
+    against a narrow ``(id, sig)`` scan of the persisted signature
+    side-car, so the corpus text is never re-read: like the band-key
+    scan, it is a column-pruned read of a derived table, and each
+    batch's append adds one file to it.
 
     ``source_schema`` defaults to the dedup handle's column names
     (``{id_col} long, {text_col} string``) — every sink stage addresses
