@@ -327,7 +327,6 @@ def test_delete_stops_suppressing_near_duplicates(spark, tmp_path_factory):
     corpus_dup) — in both filter modes, immediately (tombstone read
     path) and after compaction (folded in, tombstone sibling gone)."""
     from vector_db_example_spark.index.dedupidx import (
-        _tombstone_path,
         dedup_index_compact,
         dedup_index_delete,
     )
@@ -362,7 +361,7 @@ def test_delete_stops_suppressing_near_duplicates(spark, tmp_path_factory):
     assert dedup_index_delete(spark, index, [1, 999]) == 0
 
     compacted = dedup_index_compact(spark, index, f"{d}/idx_v2")
-    assert not fsio.exists(_tombstone_path(compacted), spark)
+    assert not fsio.exists(compacted.tombstones_path, spark)
     assert verdict(compacted, "band") == (False, False)
     assert verdict(compacted, "verified") == (False, False)
     # doc 2 survived the compaction: its exact copy is still flagged
@@ -612,8 +611,6 @@ def test_legacy_unbucketed_layout_still_works(spark, tmp_path_factory):
     import json
     import os
 
-    from vector_db_example_spark.index.dedupidx import _sigs_path
-
     d = str(tmp_path_factory.mktemp("dedupidx_legacy"))
     corpus = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog")],
@@ -622,7 +619,7 @@ def test_legacy_unbucketed_layout_still_works(spark, tmp_path_factory):
     index = build_dedup_index(corpus, f"{d}/idx")
     assert index.sig_buckets == 0
     assert not any(
-        p.startswith("sig_bucket=") for p in os.listdir(_sigs_path(index))
+        p.startswith("sig_bucket=") for p in os.listdir(index.sigs_path)
     )
     # strip the field from the meta to simulate a pre-round-11 layout
     meta_path = f"{d}/idx/_dedup_meta.json"
@@ -686,7 +683,6 @@ def test_legacy_hex_layout_filters_appends_and_migrates(spark, tmp_path_factory)
     from pyspark.sql import types as T
 
     from vector_db_example_spark.index.dedupidx import (
-        _sigs_path,
         dedup_index_compact,
     )
     from vector_db_example_spark.index.stats import dedup_layout_stats
@@ -742,7 +738,7 @@ def test_legacy_hex_layout_filters_appends_and_migrates(spark, tmp_path_factory)
     migrated = dedup_index_compact(spark, hexidx, f"{d}/hex_v2")
     assert DedupIndex.load(migrated.path).hash_format == "binary"
     assert spark.read.parquet(migrated.path).schema["key"].dataType == T.BinaryType()
-    assert spark.read.parquet(_sigs_path(migrated)).schema[
+    assert spark.read.parquet(migrated.sigs_path).schema[
         "sig"
     ].dataType == T.ArrayType(T.BinaryType())
     assert verdicts(migrated) == want
@@ -828,7 +824,6 @@ def test_legacy_bucketed_layout_appends_and_deletes(
     import os
 
     from vector_db_example_spark.index.dedupidx import (
-        _sigs_path,
         dedup_index_delete,
     )
 
@@ -838,7 +833,7 @@ def test_legacy_bucketed_layout_appends_and_deletes(
     assert bucketed.sig_buckets == 8
     assert _bkt_verdicts(spark, bucketed) == want
 
-    sigs = _sigs_path(bucketed)
+    sigs = bucketed.sigs_path
     before = set(glob.glob(f"{sigs}/**/*.parquet", recursive=True))
     dedup_index_append(
         bucketed,
@@ -865,7 +860,6 @@ def test_compact_migrates_sig_buckets(spark, tmp_path_factory, flat_bkt):
     import os
 
     from vector_db_example_spark.index.dedupidx import (
-        _sigs_path,
         dedup_index_compact,
     )
 
@@ -873,13 +867,13 @@ def test_compact_migrates_sig_buckets(spark, tmp_path_factory, flat_bkt):
     d = str(tmp_path_factory.mktemp("dedupidx_migrate"))
     bucketed = _write_bucketed_layout(spark, flat, f"{d}/bkt")
     assert any(
-        p.startswith("sig_bucket=") for p in os.listdir(_sigs_path(bucketed))
+        p.startswith("sig_bucket=") for p in os.listdir(bucketed.sigs_path)
     )
     migrated = dedup_index_compact(spark, bucketed, f"{d}/bkt_v2")
     assert migrated.sig_buckets == 0
     assert DedupIndex.load(migrated.path).sig_buckets == 0
     assert not any(
-        p.startswith("sig_bucket=") for p in os.listdir(_sigs_path(migrated))
+        p.startswith("sig_bucket=") for p in os.listdir(migrated.sigs_path)
     )
     assert _bkt_verdicts(spark, migrated) == want
 
@@ -1295,8 +1289,6 @@ def test_persisted_schema_is_binary_digests(spark, tmp_path_factory):
 
     from pyspark.sql import types as T
 
-    from vector_db_example_spark.index.dedupidx import _sigs_path
-
     d = str(tmp_path_factory.mktemp("dedupidx_schema"))
     corpus = spark.createDataFrame(
         [(1, "alpha beta gamma delta"), (2, None)], "doc_id long, text string"
@@ -1309,7 +1301,7 @@ def test_persisted_schema_is_binary_digests(spark, tmp_path_factory):
     assert json.load(open(f"{d}/idx/_dedup_meta.json"))["hash_format"] == "binary"
     assert DedupIndex.load(index.path).hash_format == "binary"
     bands = spark.read.parquet(index.path)
-    sigs = spark.read.parquet(_sigs_path(index))
+    sigs = spark.read.parquet(index.sigs_path)
     assert bands.schema["key"].dataType == T.BinaryType()
     assert sigs.schema["sig"].dataType == T.ArrayType(T.BinaryType())
     assert {len(r["key"]) for r in bands.collect()} == {16}

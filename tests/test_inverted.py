@@ -135,8 +135,24 @@ def test_stream_ingest_into_inverted_layout(spark, tmp_path):
 def test_tombstone_delete_then_compact(spark, tmp_path):
     """Deletion vectors: after delete_from_inverted_index, searches must
     score EXACTLY like an index never containing the victims (stats
-    decremented, postings anti-joined); compaction folds tombstones in
-    and preserves scores with the tombstone table gone."""
+    decremented, postings anti-joined, tombstones read without a
+    schema-inference job); compaction folds tombstones in and preserves
+    scores with the tombstone table gone."""
+    _check_tombstone_delete_then_compact(spark, tmp_path)
+
+
+def test_tombstone_delete_broadcast_ids_route(spark, tmp_path, monkeypatch):
+    """The same delete lifecycle with the ids cut-off at 0, so victims
+    resolve through the broadcast ids join instead of an isin literal."""
+    from vector_db_example_spark.index import deletes
+
+    monkeypatch.setattr(deletes, "_DELETE_ISIN_MAX", 0)
+    _check_tombstone_delete_then_compact(spark, tmp_path)
+
+
+def _check_tombstone_delete_then_compact(spark, tmp_path):
+    from tests.conftest import job_names
+
     from vector_db_example_spark.index.inverted import (
         compact_inverted_index,
         delete_from_inverted_index,
@@ -157,7 +173,11 @@ def test_tombstone_delete_then_compact(spark, tmp_path):
         docs.filter(~F.col("doc_id").isin(victims)), str(tmp_path / "ref"), n_buckets=16
     )
     terms = ("vector", "stream", "window")
-    got = bm25_search_inverted(spark, idx, terms, k=10).collect()
+    got = []
+    names = job_names(
+        spark, lambda: got.extend(bm25_search_inverted(spark, idx, terms, k=10).collect())
+    )
+    assert not [n for n in names if n.startswith("parquet")], names
     want = bm25_search_inverted(spark, ref, terms, k=10).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
 

@@ -683,8 +683,8 @@ def test_ivf_delete_large_batch_broadcast_path(spark, tmp_path):
     """A delete batch above _DELETE_ISIN_MAX must take the broadcast
     semi/anti-join path (no giant IN literal in the plan) and still
     yield exact search parity with a brute-force scan of the survivors."""
+    from vector_db_example_spark.index.deletes import _DELETE_ISIN_MAX
     from vector_db_example_spark.index.ivf import (
-        _DELETE_ISIN_MAX,
         build_ivf_index,
         ivf_delete,
         ivf_search,
@@ -731,6 +731,8 @@ def test_ivf_delete_lazy_tombstones(spark, tmp_path):
     victims vanish from searches and bucketed pairs (broadcast anti-join
     at read), re-deletes are no-ops, compaction folds the tombstones in
     for real, and a tombstone-free index keeps its join-free scan plan."""
+    from conftest import job_names
+
     from vector_db_example_spark.index.ivf import (
         build_ivf_index,
         compact_ivf_index,
@@ -761,10 +763,15 @@ def test_ivf_delete_lazy_tombstones(spark, tmp_path):
         (r.vec_id, round(r.distance, 9))
         for r in knn_exact(survivors, qv, k=10, score_threshold=None).collect()
     ]
-    got = [
-        (r.vec_id, round(r.distance, 9))
-        for r in ivf_search(spark, index, qv, k=10, nprobe=8).collect()
-    ]
+    rows = []
+    # the tombstone table is read with a declared schema: no
+    # schema-inference (``parquet at …``) job per search
+    names = job_names(
+        spark,
+        lambda: rows.extend(ivf_search(spark, index, qv, k=10, nprobe=8).collect()),
+    )
+    assert not [n for n in names if n.startswith("parquet")], names
+    got = [(r.vec_id, round(r.distance, 9)) for r in rows]
     assert got == want
 
     # compaction folds the deletion vectors in: same answers, no

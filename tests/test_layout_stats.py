@@ -180,7 +180,6 @@ def test_total_file_count_includes_dedup_siblings(spark, tmp_path):
     import glob
 
     from vector_db_example_spark.index.dedupidx import (
-        _sigs_path,
         build_dedup_index,
         dedup_index_append,
         dedup_index_delete,
@@ -193,7 +192,7 @@ def test_total_file_count_includes_dedup_siblings(spark, tmp_path):
     assert base_total > layout_file_count(idx.path, spark)
 
     def sig_files():
-        return len(glob.glob(f"{_sigs_path(idx)}/**/*.parquet", recursive=True))
+        return len(glob.glob(f"{idx.sigs_path}/**/*.parquet", recursive=True))
 
     base_sig_files = sig_files()
     # ids 100..107 fall in 8 distinct residues mod 64; read back from a

@@ -187,6 +187,19 @@ def test_lsh_delete_rewrites_only_affected_buckets(spark, tmp_path):
     """Delete-by-id on the LSH layout: victims gone from full-radius
     (exact) search, every other row kept, unaffected bucket partitions'
     files untouched."""
+    _check_lsh_delete(spark, tmp_path)
+
+
+def test_lsh_delete_broadcast_ids_route(spark, tmp_path, monkeypatch):
+    """The same delete with the ids cut-off at 0, so victims and
+    survivors resolve through the broadcast ids joins."""
+    from vector_db_example_spark.index import deletes
+
+    monkeypatch.setattr(deletes, "_DELETE_ISIN_MAX", 0)
+    _check_lsh_delete(spark, tmp_path)
+
+
+def _check_lsh_delete(spark, tmp_path):
     import os
 
     from pyspark.sql import functions as F

@@ -104,6 +104,19 @@ def test_positional_delete_rides_shared_tombstones(spark, tmp_path):
     doclens/stats side-tables) resolves victims against the postings'
     live ids, is idempotent, and phrase search hides the tombstoned doc
     — equal to a fresh build without it."""
+    _check_positional_delete(spark, tmp_path)
+
+
+def test_positional_delete_broadcast_ids_route(spark, tmp_path, monkeypatch):
+    """The same positional delete with the ids cut-off at 0, so victims
+    resolve through the broadcast ids join."""
+    from vector_db_example_spark.index import deletes
+
+    monkeypatch.setattr(deletes, "_DELETE_ISIN_MAX", 0)
+    _check_positional_delete(spark, tmp_path)
+
+
+def _check_positional_delete(spark, tmp_path):
     from vector_db_example_spark.index.inverted import (
         delete_from_inverted_index,
     )

@@ -588,7 +588,6 @@ def test_ivf_lifecycle_matches_brute_force(spark, corpus, ops, qv, tmp_path_fact
     import os as _os
 
     from vector_db_example_spark.index.ivf import (
-        _tombstone_path,
         build_ivf_index,
         compact_ivf_index,
         ivf_append,
@@ -624,7 +623,7 @@ def test_ivf_lifecycle_matches_brute_force(spark, corpus, ops, qv, tmp_path_fact
             idx = compact_ivf_index(
                 spark, idx, f"{root}/gen{gen}", nlist=min(2, len(model))
             )
-            assert not _os.path.isdir(_tombstone_path(idx))
+            assert not _os.path.isdir(idx.tombstones_path)
         elif op == "split":
             idx = split_hot_cells(spark, idx, max_cell_rows=2, sub_nlist=2)
     want = sorted(

@@ -61,7 +61,6 @@ def main() -> int:
     from vector_db_example_spark.functions.embedding import hashing_embedder
     from vector_db_example_spark.index.dedupidx import (
         DedupIndex,
-        _sigs_path,
         build_dedup_index,
     )
     from vector_db_example_spark.index.inverted import (
@@ -158,7 +157,7 @@ def main() -> int:
         for mode in args.modes:
             mdir = f"{work}/{mode}"
             shutil.copytree(f"{work}/dedup", f"{mdir}/dedup")
-            shutil.copytree(_sigs_path(DedupIndex.load(f"{work}/dedup")),
+            shutil.copytree(DedupIndex.load(f"{work}/dedup").sigs_path,
                             f"{mdir}/dedup_sigs")
             shutil.copytree(f"{work}/ivf", f"{mdir}/ivf")
             didx = DedupIndex.load(f"{mdir}/dedup")

@@ -104,14 +104,12 @@ from pyspark.sql import types as T
 
 from .. import fsio
 from ..operators.dedup import _py_minhash_digests, _py_shingles
-from ..sources.tables import append_repartition, widen_cpu_dense
-
-# Post-materialization narrow (sources/tables.py holds the shared
-# implementation + rationale; ``signature_rows`` widens the kernel
-# input, this un-widens the CHECKPOINT for the ~dozen downstream
-# probe/join jobs). Imported under a module-local name so an A/B
-# harness can seam it per-module.
-from ..sources.tables import narrow_materialized as _narrow_ckpt
+from ..sources.tables import (
+    append_repartition,
+    narrow_materialized,
+    widen_cpu_dense,
+)
+from . import deletes
 
 
 @dataclass
@@ -145,6 +143,17 @@ class DedupIndex:
     @property
     def rows_per_band(self) -> int:
         return self.n_hashes // self.bands
+
+    # Both side-tables are sibling directories, NOT subdirectories: the
+    # layout root holds the ``band=`` partition dirs and Spark's
+    # partition discovery would trip over a foreign child.
+    @property
+    def sigs_path(self) -> str:
+        return f"{self.path}_sigs"
+
+    @property
+    def tombstones_path(self) -> str:
+        return f"{self.path}_tombstones"
 
     def save_meta(self) -> None:
         meta = {
@@ -353,14 +362,6 @@ def _sig_band_rows(index: DedupIndex, docs: DataFrame) -> DataFrame:
     return _kernel_input(index, docs, 1).mapInPandas(kernel, out_schema)
 
 
-def _sigs_path(index: DedupIndex) -> str:
-    """Sibling directory, NOT a subdirectory: the layout root holds the
-    ``band=`` partition dirs and Spark's partition discovery would trip
-    over a foreign child (same convention as the IVF tombstone table,
-    index/ivf.py::_tombstone_path)."""
-    return f"{index.path}_sigs"
-
-
 def _sig_schema(index: DedupIndex) -> T.StructType:
     return T.StructType(
         [
@@ -400,7 +401,7 @@ def _read_sigs(spark: SparkSession, index: DedupIndex) -> DataFrame:
     """The signature side-car ``(id, sig)``, its elements always
     digests. A legacy bucketed side-car reads through its root too: the
     select drops the discovered ``sig_bucket`` partition column."""
-    sigs = spark.read.schema(_sig_schema(index)).parquet(_sigs_path(index))
+    sigs = spark.read.schema(_sig_schema(index)).parquet(index.sigs_path)
     if index.hash_format == "hex":
         sigs = sigs.withColumn("sig", _sig_elements(index, F.unhex))
     return sigs.select(index.id_col, "sig")
@@ -421,24 +422,11 @@ def _stored(index: DedupIndex, rows: DataFrame) -> DataFrame:
     return rows
 
 
-def _tombstone_path(index: DedupIndex) -> str:
-    """Sibling directory, NOT a subdirectory: the layout root holds the
-    ``band=`` partition dirs and partition discovery would trip over a
-    foreign child (same convention as ``_sigs_path`` and the IVF
-    tombstone table, index/ivf.py::_tombstone_path)."""
-    return f"{index.path}_tombstones"
-
-
-def _live(spark: SparkSession, index: DedupIndex, df: DataFrame) -> DataFrame:
-    """Apply deletion vectors: broadcast anti-join against the tombstone
-    sibling (absent ⇒ identity, so the filter plans are unchanged until
-    the first delete — the IVF ``_ivf_live`` contract). The probe goes
-    through fsio, so a scheme-addressed layout can never silently skip
-    the anti-join and resurrect deleted docs' band rows."""
-    tomb = _tombstone_path(index)
-    if not fsio.exists(tomb, spark):
-        return df
-    return df.join(F.broadcast(spark.read.parquet(tomb)), index.id_col, "left_anti")
+def _live(index: DedupIndex, df: DataFrame) -> DataFrame:
+    """``df`` without the deleted documents (index/deletes.py::live):
+    both filter modes read the layout through it, so the filter plans
+    are unchanged until the first delete."""
+    return deletes.live(df, index.tombstones_path, index.id_col)
 
 
 def _persist(index: DedupIndex, docs: DataFrame) -> None:
@@ -454,7 +442,7 @@ def _persist(index: DedupIndex, docs: DataFrame) -> None:
     # can't set the build's wall (_kernel_input docstring; measured
     # 18% off the sf25 sigs pass, SCALING.md round 8).
     signature_rows(index, docs, widen_factor=4).write.mode("overwrite").parquet(
-        _sigs_path(index)
+        index.sigs_path
     )
     _bands_of_sigs(index, _read_sigs(docs.sparkSession, index)).write.partitionBy(
         "band"
@@ -579,10 +567,10 @@ def dedup_index_filter(
     cap = candidate_cap if threshold > 0 else -1
     sb = _sig_band_rows(index, batch).localCheckpoint(eager=True)
     # One count over the materialized checkpoint serves the broadcast
-    # decision below AND the checkpoint-width decision (_narrow_ckpt:
-    # wide kernel, narrow downstream).
+    # decision below AND the checkpoint-width decision
+    # (narrow_materialized: wide kernel, narrow downstream).
     n_rows = sb.count()
-    sb = _narrow_ckpt(sb, n_rows)
+    sb = narrow_materialized(sb, n_rows)
     bands = sb.select(id_col, "band", "key")
     # (id, sig): a narrow filter over the checkpoint — one row per doc,
     # no shuffle, no second kernel run.
@@ -590,7 +578,7 @@ def dedup_index_filter(
     # Tombstoned docs drop out of BOTH the candidate enumeration and the
     # mega-key counts — a deleted boilerplate cluster must not keep its
     # band key over the cap and auto-suppress future batches.
-    layout = _live(spark, index, _read_bands(spark, index))
+    layout = _live(index, _read_bands(spark, index))
     # No distinct on the probe side: the semi-joins are unchanged by
     # duplicate probe keys, and the dedup exchange cost more than the
     # ≤ docs·bands extra broadcast rows.
@@ -756,9 +744,9 @@ def dedup_index_append_rows(index: DedupIndex, sig_band_rows: DataFrame) -> None
         sigs = sigs.withColumn("sig_bucket", _sig_bucket_expr(index, F.col(id_col)))
         append_repartition(sigs, "sig_bucket").write.partitionBy("sig_bucket").mode(
             "append"
-        ).parquet(_sigs_path(index))
+        ).parquet(index.sigs_path)
     else:
-        append_repartition(sigs).write.mode("append").parquet(_sigs_path(index))
+        append_repartition(sigs).write.mode("append").parquet(index.sigs_path)
     append_repartition(
         _stored(index, sig_band_rows.select(id_col, "band", "key")), "band"
     ).write.partitionBy("band").mode("append").parquet(index.path)
@@ -780,12 +768,6 @@ def dedup_index_append(index: DedupIndex, docs: DataFrame) -> None:
     )
 
 
-#: Above this many delete ids, ``dedup_index_delete`` switches from
-#: inlined ``isin`` literals to a broadcast ids DataFrame so the plan
-#: size stays O(1) in the batch size (same constant as index/ivf.py).
-_DELETE_ISIN_MAX = 10_000
-
-
 def dedup_index_delete(spark: SparkSession, index: DedupIndex, ids) -> int:
     """Remove documents from the accepted corpus — takedowns/retention,
     the reference's drop lifecycle next to its inserts (drop_collection
@@ -794,10 +776,10 @@ def dedup_index_delete(spark: SparkSession, index: DedupIndex, ids) -> int:
     every future batch that near-duplicates it: the batch doc reads as
     corpus_dup against a document the corpus no longer contains.
 
-    Deletion vectors, not a rewrite (the O(k) design every other mutable
-    layout here uses — IVF ``ivf_delete_lazy``, inverted tombstones):
-    victim ids append to a tiny sibling table; both filter modes
-    broadcast-anti-join it on the corpus side (band rows AND mega-key
+    Deletion vectors, not a rewrite (the O(k) design of
+    index/deletes.py, shared with ``ivf_delete_lazy`` and the inverted
+    tombstones): victim ids append to a tiny sibling table; both filter
+    modes broadcast-anti-join it on the corpus side (band rows AND mega-key
     counts — a deleted boilerplate cluster must not keep its key over
     the candidate cap); ``dedup_index_compact`` folds tombstones in for
     real. A doc's band rows span every ``band=`` partition, so an eager
@@ -808,21 +790,8 @@ def dedup_index_delete(spark: SparkSession, index: DedupIndex, ids) -> int:
     id-column scan of the side-car root), so re-deleting a tombstoned
     or absent id is a no-op. Returns the number of ids newly
     tombstoned."""
-    ids = [int(i) for i in ids]
-    if not ids:
-        return 0
-    id_col = index.id_col
-    live = _live(spark, index, _read_sigs(spark, index).select(id_col))
-    if len(ids) <= _DELETE_ISIN_MAX:
-        victims = live.filter(F.col(id_col).isin(ids))
-    else:
-        ids_df = spark.createDataFrame([(i,) for i in ids], f"{id_col} long").coalesce(1)
-        victims = live.join(F.broadcast(ids_df), id_col, "semi")
-    victims = victims.distinct().localCheckpoint(eager=True)
-    n = victims.count()
-    if n:
-        victims.write.mode("append").parquet(_tombstone_path(index))
-    return n
+    live_ids = _live(index, _read_sigs(spark, index).select(index.id_col))
+    return deletes.tombstone(live_ids, ids, index.tombstones_path, index.id_col)
 
 
 def dedup_index_compact(
@@ -867,11 +836,11 @@ def dedup_index_compact(
         id_col=index.id_col,
         text_col=index.text_col,
     )
-    sigs = _live(spark, index, _read_sigs(spark, index)).distinct()
+    sigs = _live(index, _read_sigs(spark, index)).distinct()
     sigs.repartition(F.col(index.id_col)).write.mode("overwrite").parquet(
-        _sigs_path(out)
+        out.sigs_path
     )
-    bands = _live(spark, index, _read_bands(spark, index)).distinct()
+    bands = _live(index, _read_bands(spark, index)).distinct()
     bands.repartition(F.col("band"), F.col("key")).write.partitionBy("band").mode(
         "overwrite"
     ).parquet(out.path)

@@ -57,6 +57,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import fsio
+from . import deletes
 from ..functions.text import extract_tokens
 from ..operators.bm25 import bm25_score_expr, bm25_score_expr_for
 from ..sources.tables import append_repartition, overlapped, read_layout
@@ -103,6 +104,10 @@ class InvertedIndex:
     @property
     def stats_path(self) -> str:
         return f"{self.path}/stats"
+
+    @property
+    def tombstones_path(self) -> str:
+        return f"{self.path}/tombstones"
 
     def save_meta(self) -> None:
         meta = {
@@ -501,11 +506,11 @@ def compact_inverted_index(
 
 
 def delete_from_inverted_index(index: InvertedIndex, ids) -> int:
-    """Delete documents by id — the DELETION-VECTOR design (contrast
-    with ivf_delete's eager partition rewrite): a doc's postings spread
-    across ~every term bucket, so an eager rewrite would be O(layout).
-    Instead the ids append to a tiny tombstone table; searches anti-join
-    it (broadcast — tombstones are small between compactions); and
+    """Delete documents by id — the DELETION-VECTOR design of
+    index/deletes.py (contrast with ivf_delete's eager partition
+    rewrite): a doc's postings spread across ~every term bucket, so an
+    eager rewrite would be O(layout). Instead the ids append to a tiny
+    tombstone table; searches anti-join it; and
     ``compact_inverted_index`` folds tombstones in for real, restoring
     zero read-side cost. The stats row is decremented eagerly (it is one
     row) so BM25's N/avgdl stay correct while tombstones exist.
@@ -517,32 +522,25 @@ def delete_from_inverted_index(index: InvertedIndex, ids) -> int:
     Works on POSITIONAL-ONLY layouts too (build_positional_index writes
     no doclens/stats side-tables — the docstring there routes deletes
     here): victims then resolve against the postings' live doc ids and
-    only the tombstone table is written. That resolve is a full postings
-    scan (no query terms to prune by), fine for an offline delete;
-    ``compact_positional_index`` folds the tombstones in for real.
+    only the tombstone table is written (``deletes.tombstone``). That
+    resolve is a full postings scan (no query terms to prune by), fine
+    for an offline delete; ``compact_positional_index`` folds the
+    tombstones in for real.
 
     Returns the number of ids newly tombstoned."""
-    ids = [int(i) for i in ids]
-    if not ids:
-        return 0
     spark = SparkSession.getActiveSession()
     # Route on the PERSISTED layout kind, never a filesystem probe: an
     # os.path.isdir(doclens_path) check is local-FS-only — a BM25 layout
     # on s3:// or hdfs:// would silently take the positional branch and
     # skip the doclens/stats decrement, corrupting BM25's N/avgdl.
     if index.positional:
-        victims = (
-            _live(index, _read_postings(spark, index))
-            .select(index.id_col)
-            .filter(F.col(index.id_col).isin(ids))
-            .distinct()
-        ).localCheckpoint(eager=True)
-        n = victims.count()
-        if n:
-            victims.write.mode("append").parquet(f"{index.path}/tombstones")
-        return n
+        live_ids = _live(index, _read_postings(spark, index).select(index.id_col))
+        return deletes.tombstone(live_ids, ids, index.tombstones_path, index.id_col)
+    ids = [int(i) for i in ids]
+    if not ids:
+        return 0
     doclens = _live(index, spark.read.parquet(index.doclens_path))
-    victims = doclens.filter(F.col(index.id_col).isin(ids))
+    victims = deletes.matching(doclens, ids, index.id_col)
     # The decremented stats row is aggregated AND materialized (one job:
     # the victims' decrement cross-joined with the old 1-row table, no
     # driver collect of either) BEFORE the tombstones land and the
@@ -565,21 +563,14 @@ def delete_from_inverted_index(index: InvertedIndex, ids) -> int:
     n = int(new_stats.head()["_dn"])
     if n == 0:
         return 0
-    victims.select(index.id_col).write.mode("append").parquet(
-        f"{index.path}/tombstones"
-    )
+    victims.select(index.id_col).write.mode("append").parquet(index.tombstones_path)
     new_stats.drop("_dn").write.mode("overwrite").parquet(index.stats_path)
     return n
 
 
 def _live(index: InvertedIndex, df: DataFrame) -> DataFrame:
-    """Apply deletion vectors: broadcast anti-join against the tombstone
-    table (absent ⇒ no-op). Probed with ``fsio.exists`` like
-    ``ivf._ivf_live``: one Hadoop FS call, not a failed read per query."""
-    spark, tomb = df.sparkSession, f"{index.path}/tombstones"
-    if not fsio.exists(tomb, spark):
-        return df
-    return df.join(F.broadcast(spark.read.parquet(tomb)), index.id_col, "left_anti")
+    """``df`` without the deleted documents (index/deletes.py::live)."""
+    return deletes.live(df, index.tombstones_path, index.id_col)
 
 
 def build_positional_index(

@@ -43,6 +43,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fsio
+from . import deletes
 from ..operators.knn import knn_exact
 from ..sources.tables import append_repartition, read_layout
 
@@ -64,6 +65,13 @@ class IVFIndex:
     @property
     def nlist(self) -> int:
         return len(self.centroids)
+
+    @property
+    def tombstones_path(self) -> str:
+        """Sibling directory, NOT a subdirectory: the layout root holds
+        the ``cell_id=`` partition dirs, and Spark's partition discovery
+        would read a stray ``tombstones/`` subdir as (schema-less) data."""
+        return f"{self.path}_tombstones"
 
     def save_meta(self) -> None:
         meta = {
@@ -247,35 +255,16 @@ def _declared_empty_centroids(dim: int | None) -> np.ndarray:
     return np.zeros((1, int(dim)), dtype=np.float64)
 
 
-def _tombstone_path(index: IVFIndex) -> str:
-    """Sibling directory, NOT a subdirectory: the layout root holds the
-    ``cell_id=`` partition dirs, and Spark's partition discovery would
-    read a stray ``tombstones/`` subdir as (schema-less) data."""
-    return f"{index.path}_tombstones"
-
-
 def _ivf_live(index: IVFIndex, df: DataFrame) -> DataFrame:
-    """Apply deletion vectors: broadcast anti-join against the tombstone
-    sibling table (absent ⇒ identity — the plan is unchanged until the
-    first lazy delete, checked in tests/test_plans.py)."""
-    tomb = _tombstone_path(index)
-    # fsio.exists, not os.path.isdir: a local-FS probe on an s3://hdfs://
-    # layout would silently skip the anti-join and resurrect deleted rows
-    # (the advisor's round-6 routing finding, same class).
-    if not fsio.exists(tomb):
-        return df
-    spark = df.sparkSession
-    return df.join(
-        F.broadcast(spark.read.parquet(tomb)), index.id_col, "left_anti"
-    )
+    """``df`` without the lazily deleted rows (index/deletes.py::live)."""
+    return deletes.live(df, index.tombstones_path, index.id_col)
 
 
 def ivf_delete_lazy(spark: SparkSession, index: IVFIndex, ids) -> int:
     """Delete-by-id as DELETION VECTORS — the O(k) alternative to
-    ``ivf_delete``'s eager per-cell rewrite (same design as the inverted
-    index's tombstones, index/inverted.py): victim ids append to a tiny
-    sibling table; every search/pair/compaction read anti-joins it
-    (broadcast — tombstones are small between compactions); and
+    ``ivf_delete``'s eager per-cell rewrite (both designs live in
+    index/deletes.py): victim ids append to a tiny sibling table; every
+    search/pair/compaction read anti-joins it; and
     ``compact_ivf_index`` folds the tombstones in for real, restoring
     zero read-side cost. Use this when deletes are frequent relative to
     compactions; use the eager path when they are rare and you want the
@@ -284,23 +273,8 @@ def ivf_delete_lazy(spark: SparkSession, index: IVFIndex, ids) -> int:
     Idempotent: victims resolve through the LIVE view, so re-deleting a
     tombstoned id is a no-op. Returns the number of ids newly
     tombstoned."""
-    ids = [int(i) for i in ids]
-    if not ids:
-        return 0
-    id_col = index.id_col
-    layout = _ivf_live(index, _read_layout(spark, index).select(id_col))
-    if len(ids) <= _DELETE_ISIN_MAX:
-        victims = layout.filter(F.col(id_col).isin(ids))
-    else:
-        ids_df = spark.createDataFrame(
-            [(i,) for i in ids], f"{id_col} long"
-        ).coalesce(1)
-        victims = layout.join(F.broadcast(ids_df), id_col, "semi")
-    victims = victims.distinct().localCheckpoint(eager=True)
-    n = victims.count()
-    if n:
-        victims.write.mode("append").parquet(_tombstone_path(index))
-    return n
+    live_ids = _ivf_live(index, _read_layout(spark, index).select(index.id_col))
+    return deletes.tombstone(live_ids, ids, index.tombstones_path, index.id_col)
 
 
 def nearest_cells(index: IVFIndex, query_vec, nprobe: int) -> list[int]:
@@ -488,11 +462,6 @@ def compact_ivf_index(
 #: without renumbering live cells' partition directories.
 _DEAD_CENTROID_COORD = 1.0e30
 
-#: Above this many delete ids, ``ivf_delete`` switches from inlined
-#: ``isin`` literals to a broadcast ids DataFrame (semi/anti joins) so
-#: the plan size stays O(1) in the batch size.
-_DELETE_ISIN_MAX = 10_000
-
 
 def split_hot_cells(
     spark: SparkSession,
@@ -631,64 +600,20 @@ def ivf_search_batch(
 
 def ivf_delete(spark: SparkSession, index: IVFIndex, ids) -> int:
     """Delete rows by id from the layout (Milvus delete-by-pk semantics,
-    served eagerly): locate the cells holding the ids (one pruned-column
-    scan), rewrite ONLY those cell partitions without the victims
-    (dynamic partition overwrite), leave every other partition's files
-    untouched. Cost is O(rows in affected cells) — for a k-id delete
-    that is k cells' worth of data, not the corpus.
+    served eagerly): rewrite ONLY the cell partitions holding the ids,
+    without the victims, and leave every other partition's files
+    untouched (index/deletes.py::rewrite_partitions_without). Cost is
+    O(rows in affected cells) — for a k-id delete that is k cells' worth
+    of data, not the corpus.
 
-    Returns the number of rows deleted. A deletion-vector design (write
-    tombstones, apply at read, fold in at compaction) would make deletes
-    O(k) at the price of a read-side anti-join; eager rewrite keeps every
-    search plan unchanged, which is the right trade for rare deletes.
-    Single-writer assumption as elsewhere.
-
-    Two id-matching strategies by batch size: a small batch inlines the
-    ids as an ``isin`` literal (cheapest plan, no extra exchange); a
-    batch above ``_DELETE_ISIN_MAX`` would put a million-literal IN
-    expression in the plan twice, so instead the ids become a broadcast
-    DataFrame — victims via a semi join, survivors via a left-anti join —
-    keeping the plan O(1) in the id count.
-    """
-    ids = [int(i) for i in ids]
-    if not ids:
-        return 0
-    id_col = index.id_col
-    # victims resolve through the LIVE view so the count excludes rows a
-    # prior ivf_delete_lazy already tombstoned (the rewrite may carry
-    # such rows physically; they stay hidden until compaction)
+    Returns the number of rows deleted. The deletion-vector design
+    (``ivf_delete_lazy``) makes deletes O(k) at the price of a read-side
+    anti-join; eager rewrite keeps every search plan unchanged, which is
+    the right trade for rare deletes. Victims resolve through the LIVE
+    view, so the count excludes rows a prior ``ivf_delete_lazy`` already
+    tombstoned (the rewrite may carry such rows physically; they stay
+    hidden until compaction)."""
     layout = _ivf_live(index, _read_layout(spark, index))
-    if len(ids) <= _DELETE_ISIN_MAX:
-        victims = layout.filter(F.col(id_col).isin(ids)).select(id_col, "cell_id")
-        survivor_filter = lambda df: df.filter(~F.col(id_col).isin(ids))  # noqa: E731
-    else:
-        ids_df = spark.createDataFrame(
-            [(i,) for i in ids], f"{id_col} long"
-        ).coalesce(1)
-        victims = layout.join(F.broadcast(ids_df), id_col, "semi").select(
-            id_col, "cell_id"
-        )
-        survivor_filter = lambda df: df.join(  # noqa: E731
-            F.broadcast(ids_df), id_col, "left_anti"
-        )
-    cells = sorted({int(r["cell_id"]) for r in victims.select("cell_id").distinct().collect()})
-    if not cells:
-        return 0
-    affected = layout.filter(F.col("cell_id").isin(cells))  # partition pruning
-    n_before = affected.count()
-    survivors = survivor_filter(affected).localCheckpoint(eager=True)
-    (
-        survivors.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell_id")
-        .parquet(index.path)
+    return deletes.rewrite_partitions_without(
+        layout, index.path, "cell_id", ids, index.id_col
     )
-    # a cell emptied entirely writes no partition back — remove its dir so
-    # the dangling directory doesn't linger (readers would see it as empty)
-    remaining = {
-        int(r["cell_id"])
-        for r in survivors.select("cell_id").distinct().collect()
-    }
-    for cell in set(cells) - remaining:
-        fsio.delete(f"{index.path}/cell_id={cell}")
-    return n_before - survivors.count()

@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fsio
+from . import deletes
 from ..operators.knn import knn_exact
 from ..sources.tables import append_repartition, read_layout
 
@@ -295,44 +296,20 @@ def compact_lsh_layout(
 
 
 def lsh_delete(spark: SparkSession, index: LSHIndex, ids) -> int:
-    """Delete rows by id from the bucket-partitioned layout — the LSH
-    twin of ``ivf_delete``'s eager per-partition rewrite (a vector lives
-    in exactly ONE bucket directory, so a k-id delete rewrites only the
-    affected buckets and every other partition's files stay untouched).
-    Search plans stay join-free afterwards; for frequent deletes prefer
-    the deletion-vector pattern (index/ivf.py::ivf_delete_lazy) ported
-    onto a read-side ``_live`` wrapper. Single-writer assumption as
+    """Delete rows by id from the bucket-partitioned layout — the same
+    eager per-partition rewrite as ``ivf_delete``
+    (index/deletes.py::rewrite_partitions_without): a vector lives in
+    exactly ONE bucket directory, so a k-id delete rewrites only the
+    affected buckets and every other partition's files stay untouched.
+    Search plans stay join-free afterwards. The layout has no tombstone
+    table: the deletion-vector half of index/deletes.py would need its
+    reads wrapped in ``deletes.live`` first. Single-writer assumption as
     every layout mutation here.
 
     Returns the number of rows deleted."""
-    ids = [int(i) for i in ids]
-    if not ids:
-        return 0
-    id_col = index.id_col
-    layout = _read_layout(spark, index)
-    victims = layout.filter(F.col(id_col).isin(ids)).select(id_col, "bucket")
-    buckets = sorted(
-        {int(r["bucket"]) for r in victims.select("bucket").distinct().collect()}
+    return deletes.rewrite_partitions_without(
+        _read_layout(spark, index), index.path, "bucket", ids, index.id_col
     )
-    if not buckets:
-        return 0
-    affected = layout.filter(F.col("bucket").isin(buckets))  # partition pruning
-    n_before = affected.count()
-    survivors = (
-        affected.filter(~F.col(id_col).isin(ids)).localCheckpoint(eager=True)
-    )
-    (
-        survivors.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(index.path)
-    )
-    remaining = {
-        int(r["bucket"]) for r in survivors.select("bucket").distinct().collect()
-    }
-    for bucket in set(buckets) - remaining:
-        fsio.delete(f"{index.path}/bucket={bucket}")
-    return n_before - survivors.count()
 
 
 def lsh_layout_search_batch(

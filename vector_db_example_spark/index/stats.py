@@ -15,8 +15,9 @@ directly comparable against an oracle recomputation from the source
 documents.
 
 Logical vs physical: ``layout_stats`` reports LOGICAL state (row/doc/
-partition counts through the same deletion-vector ``_live`` wrappers the
-search paths use — what a fresh compaction would preserve).
+partition counts through the same deletion-vector view the search
+paths use, index/deletes.py::live — what a fresh compaction would
+preserve; tombstone counts read through the same module).
 ``layout_file_count`` reports the PHYSICAL file count (what append
 traffic accumulated and compaction would collapse); it is driver-side
 filesystem metadata via fsio, one recursive listing, no Spark job.
@@ -28,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fsio
+from . import deletes
 
 
 def _melt(one_row: DataFrame) -> DataFrame:
@@ -41,14 +43,19 @@ def _count_row(df: DataFrame, name: str) -> DataFrame:
     return df.agg(F.count(F.lit(1)).cast("double").alias(name))
 
 
-def _tombstone_count(spark: SparkSession, path: str, id_col: str) -> DataFrame:
-    """1-row distinct-victim count; absent table ⇒ 0 (pre-first-delete
-    layouts have no tombstone sibling by contract)."""
-    if fsio.exists(path, spark):
-        return spark.read.parquet(path).agg(
-            F.countDistinct(id_col).cast("double").alias("docs_tombstoned")
+def _tombstone_count(index, layout: DataFrame) -> DataFrame:
+    """1-row distinct-victim count of ``index``'s tombstone table, read
+    typed by the id field of ``layout`` (a frame over the layout);
+    absent table ⇒ 0 (pre-first-delete layouts have no tombstone table
+    by contract)."""
+    tomb = deletes.tombstoned(layout, index.tombstones_path, index.id_col)
+    if tomb is None:
+        return layout.sparkSession.range(1).select(
+            F.lit(0.0).alias("docs_tombstoned")
         )
-    return spark.range(1).select(F.lit(0.0).alias("docs_tombstoned"))
+    return tomb.agg(
+        F.countDistinct(index.id_col).cast("double").alias("docs_tombstoned")
+    )
 
 
 def dedup_layout_stats(
@@ -60,13 +67,14 @@ def dedup_layout_stats(
     pressure that routes the verified filter's auto-flag path (a rising
     count means boilerplate is accumulating and compaction or a bigger
     cap review is due)."""
-    from .dedupidx import _live, _read_bands, _read_sigs, _tombstone_path
+    from .dedupidx import _live, _read_bands, _read_sigs
 
-    docs = _live(spark, index, _read_sigs(spark, index)).agg(
+    sigs = _read_sigs(spark, index)
+    docs = _live(index, sigs).agg(
         F.countDistinct(index.id_col).cast("double").alias("docs_live")
     )
     per_key = (
-        _live(spark, index, _read_bands(spark, index))
+        _live(index, _read_bands(spark, index))
         .groupBy("band", "key")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -80,7 +88,7 @@ def dedup_layout_stats(
         .cast("double")
         .alias("band_keys_over_cap"),
     )
-    tomb = _tombstone_count(spark, _tombstone_path(index), index.id_col)
+    tomb = _tombstone_count(index, sigs)
     return _melt(docs).unionByName(_melt(bands)).unionByName(_melt(tomb))
 
 
@@ -93,14 +101,15 @@ def inverted_layout_stats(spark: SparkSession, index) -> DataFrame:
     sequence."""
     from .inverted import _live, _read_postings
 
-    live_posts = _live(index, _read_postings(spark, index))
+    postings = _read_postings(spark, index)
+    live_posts = _live(index, postings)
     per_term = live_posts.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     posts = per_term.agg(
         F.coalesce(F.sum("df"), F.lit(0)).cast("double").alias("postings_live"),
         F.count(F.lit(1)).cast("double").alias("distinct_terms"),
         F.coalesce(F.max("df"), F.lit(0)).cast("double").alias("max_term_df"),
     )
-    tomb = _tombstone_count(spark, f"{index.path}/tombstones", index.id_col)
+    tomb = _tombstone_count(index, postings)
     if index.positional:
         # Positional-only layouts carry no doclens/stats side-tables
         # (build_positional_index contract; routed on the persisted
@@ -130,10 +139,11 @@ def ivf_layout_stats(spark: SparkSession, index) -> DataFrame:
     """Stats for the IVF layout (index/ivf.py): live row count, declared
     vs non-empty cell counts, and the hottest cell's row count — the
     skew signal ``split_hot_cells`` acts on."""
-    from .ivf import _ivf_live, _read_layout, _tombstone_path
+    from .ivf import _ivf_live, _read_layout
 
+    layout = _read_layout(spark, index)
     per_cell = (
-        _ivf_live(index, _read_layout(spark, index))
+        _ivf_live(index, layout)
         .groupBy("cell_id")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -145,7 +155,7 @@ def ivf_layout_stats(spark: SparkSession, index) -> DataFrame:
     declared = spark.range(1).select(
         F.lit(float(len(index.centroids))).alias("cells_declared")
     )
-    tomb = _tombstone_count(spark, _tombstone_path(index), index.id_col)
+    tomb = _tombstone_count(index, layout)
     return _melt(cells).unionByName(_melt(declared)).unionByName(_melt(tomb))
 
 
@@ -240,12 +250,7 @@ def layout_total_file_count(layout, spark: SparkSession | None = None) -> int:
         raise TypeError(f"no file count for layout type {type(layout).__name__}")
     total = layout_file_count(layout.path, spark)
     if isinstance(layout, DedupIndex):
-        from .dedupidx import _sigs_path, _tombstone_path
-
-        total += layout_file_count(_sigs_path(layout), spark)
-        total += layout_file_count(_tombstone_path(layout), spark)
-    elif isinstance(layout, IVFIndex):
-        from .ivf import _tombstone_path
-
-        total += layout_file_count(_tombstone_path(layout), spark)
+        total += layout_file_count(layout.sigs_path, spark)
+    if isinstance(layout, (DedupIndex, IVFIndex)):
+        total += layout_file_count(layout.tombstones_path, spark)
     return total

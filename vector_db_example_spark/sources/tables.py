@@ -13,7 +13,6 @@ because we always go through ``spark.read.parquet``.
 from __future__ import annotations
 
 import json
-import os
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -72,13 +71,10 @@ def widen_cpu_dense(df: DataFrame, factor: int = 1) -> DataFrame:
 #: the append keeps the caller's full write parallelism: hashing a
 #: corpus-sized frame onto ≤ distinct-partition-value reducers would
 #: serialize the write into a handful of tasks with one hot partition
-#: per task (round-15 verdict, "what's wrong" #1). Parameterised for
-#: cluster deployments; the default bounds a collapsed append at
-#: ~512 MB across the touched partitions — micro-batch scale by
-#: construction.
-APPEND_COLLAPSE_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_APPEND_COLLAPSE_MAX_BYTES", str(512 * 1024**2))
-)
+#: per task (round-15 verdict, "what's wrong" #1). It bounds a
+#: collapsed append at ~512 MB across the touched partitions —
+#: micro-batch scale by construction.
+APPEND_COLLAPSE_MAX_BYTES = 512 * 1024**2
 
 
 def plan_size_bytes(df: DataFrame) -> int | None:
