@@ -52,6 +52,47 @@ def test_fsio_atomic_write_overwrites_and_cleans_tmp(spark, tmp_path):
     assert leftovers == [], leftovers
 
 
+@pytest.mark.parametrize("scheme", ["", "file://"])
+def test_read_layout_resolves_only_probed_partitions(spark, tmp_path, scheme):
+    """A probed read_layout skips a probed directory that does not exist,
+    reads an empty frame of the layout schema when none does, and
+    matches a root holding glob metacharacters literally, probed or read
+    whole, with or without a persisted schema: the decoy sibling
+    ``odd1aXY`` matches the root's name read as a pattern."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    from vector_db_example_spark.sources.tables import read_layout
+
+    rows = [(i, i % 4) for i in range(20)]
+    decoy = f"{scheme}{tmp_path}/odd1aXY/layout"
+    spark.createDataFrame([(100 + i, p) for i, p in rows], "id long, part int").write.partitionBy(
+        "part"
+    ).parquet(decoy)
+    for name in ("plain", "odd[1]{a,b}*?"):
+        root = f"{scheme}{tmp_path}/{name}/layout"
+        spark.createDataFrame(rows, "id long, part int").write.partitionBy("part").parquet(root)
+        schema_json = spark.read.parquet(root).schema.json()
+
+        def ids(values, root=root, schema_json=schema_json):
+            df = read_layout(spark, root, schema_json, "part", values)
+            assert df.schema == StructType.fromJson(json.loads(schema_json))
+            return sorted(r.id for r in df.collect())
+
+        assert ids([3, 1, 1]) == [i for i, p in rows if p in (1, 3)]
+        assert ids([1, 7]) == [i for i, p in rows if p == 1]
+        assert ids([2]) == [i for i, p in rows if p == 2]
+        assert ids([7, 9]) == [] and ids([7]) == []
+        assert ids(None) == [i for i, _ in rows]
+        legacy = read_layout(spark, root, None, "part", [2])
+        assert sorted(r.id for r in legacy.collect()) == [i for i, p in rows if p == 2]
+        assert sorted(r.id for r in read_layout(spark, root, None).collect()) == [i for i, _ in rows]
+        assert fsio.existing_children(root, ["part=7", "part=3", "part=0"]) == ["part=0", "part=3"]
+    assert fsio.existing_children(f"{scheme}{tmp_path}/absent", ["part=1", "part=2"]) == []
+    assert fsio.existing_children(f"{scheme}{tmp_path}/absent", ["part=1"]) == []
+
+
 def test_ivf_lifecycle_on_uri_path(spark, uri_root):
     """build → load → lazy-delete (tombstone probe!) → search → compact,
     all on a file:// layout. The tombstone-presence check is the

@@ -198,6 +198,51 @@ def test_knn_exact_reference_constants(spark):
     assert hits[0].score == 1.0
 
 
+def test_vector_literal_keeps_every_bit(spark):
+    """The query vector literal (one SQL ``array(…D)`` expression) reads
+    back bit-for-bit, and matches the per-component ``F.lit`` form in
+    value, type and analyzed plan; a vector with NaN or ±inf reads back
+    as the ``F.lit`` form does."""
+    import math
+    import struct
+
+    import numpy as np
+
+    from vector_db_example_spark.functions.vector import vector_literal
+
+    def bits(xs):
+        return [struct.pack("<d", x) for x in xs]
+
+    def lit_form(vec):
+        return F.array(*[F.lit(float(x)) for x in vec])
+
+    def analyzed(col):
+        return spark.range(1).select(col.alias("v"))._jdf.queryExecution().analyzed().toString()
+
+    finite = [
+        -0.0, 0.0, 5e-324, -5e-324, 2.2250738585072014e-308, 1e308,
+        1.7976931348623157e308, 0.1 + 0.2, -1.5, -1e-7, 1e16, -123456.789e-20,
+    ]
+    for vec in (finite, np.array(finite[:4]), np.array([0.1, -0.0, 3e-38], dtype=np.float32)):
+        expected = [float(x) for x in vec]
+        row = spark.range(1).select(
+            vector_literal(vec).alias("v"), lit_form(vec).alias("w")
+        ).head()
+        assert bits(row.v) == bits(expected) == bits(row.w)
+        df = spark.range(1).select(vector_literal(vec).alias("v"))
+        assert df.schema == spark.range(1).select(lit_form(vec).alias("v")).schema
+        strip_ids = lambda s: s.split(" AS v#")[0]  # noqa: E731
+        assert strip_ids(analyzed(vector_literal(vec))) == strip_ids(analyzed(lit_form(vec)))
+    for vec in ([float("nan"), 1.0], [float("inf"), -float("inf"), -0.0]):
+        got, want = spark.range(1).select(
+            vector_literal(vec).alias("v"), lit_form(vec).alias("w")
+        ).head()
+        assert [math.isnan(x) for x in got] == [math.isnan(x) for x in want]
+        assert bits(x for x in got if not math.isnan(x)) == bits(
+            x for x in want if not math.isnan(x)
+        )
+
+
 def test_parse_chapter_text_s7(spark):
     """S7: pasted text → (chapter, content) rows; preamble lines before
     the first header are dropped (reference batch parser semantics,

@@ -175,3 +175,38 @@ def list_names(path: str, spark: SparkSession | None = None) -> list[str]:
     if not fs.exists(jpath):
         return []
     return [st.getPath().getName() for st in fs.listStatus(jpath)]
+
+
+#: Hadoop glob metacharacters (``org.apache.hadoop.fs.GlobPattern``);
+#: a backslash makes the next character literal.
+_GLOB_SPECIAL = frozenset("\\*?[]{},")
+
+
+def glob_escape(path: str) -> str:
+    """``path`` as a Hadoop glob pattern that matches only itself.
+    ``spark.read`` globs every path it is given, so a path built from a
+    root that may hold metacharacters goes through this first."""
+    return "".join("\\" + c if c in _GLOB_SPECIAL else c for c in path)
+
+
+def existing_children(
+    path: str, names, spark: SparkSession | None = None
+) -> list[str]:
+    """The entries of ``names`` that exist directly under ``path``,
+    sorted (empty for an absent path). One Hadoop ``globStatus`` of
+    ``path/{n1,n2,…}`` (``path`` and the names escaped, so they match
+    literally) lists ``path`` inside the JVM and returns the matches:
+    the py4j cost is a few calls whatever the number of entries or
+    names, plus three per match only when some name is missing."""
+    names = sorted(set(names))
+    if not names:
+        return []
+    pattern = f"{glob_escape(path)}/{{{','.join(map(glob_escape, names))}}}"
+    fs, jpattern, _ = _fs(pattern, spark)
+    found = fs.globStatus(jpattern)
+    if found is None:  # absent parent
+        return []
+    if len(found) == len(names):  # distinct names, one match each
+        return names
+    got = {st.getPath().getName() for st in found}
+    return [n for n in names if n in got]

@@ -15,8 +15,29 @@ what makes the DuckDB oracle hash-match possible).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+
+def vector_literal(vec) -> Column:
+    """A Python vector (a query, centroid, plane or codebook column) as a
+    Catalyst array<double> literal, built in ONE py4j call:
+    ``F.expr("array(0.1D, -2.5e-07D, …)")``. A ``F.lit`` per component
+    costs about four calls each, over 250 for one 64-dim query. Python's
+    ``repr`` of a float is the shortest string that reads back as the same
+    double and Spark's parser reads a ``D`` literal with
+    ``Double.parseDouble``, which rounds correctly, so every component
+    keeps its exact bits, -0.0 and subnormals included
+    (tests/test_operators.py). The analyzed expression is the same
+    ``array(literal, …)`` as the per-component form. SQL has no literal
+    for NaN or ±inf, so a vector holding one keeps the per-component
+    ``F.lit`` form."""
+    vals = [float(x) for x in vec]
+    if not all(math.isfinite(v) for v in vals):
+        return F.array(*[F.lit(v) for v in vals])
+    return F.expr(f"array({', '.join(f'{v!r}D' for v in vals)})")
 
 
 def _to_double(x: Column) -> Column:

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vector import l2_distance
+from ..functions.vector import l2_distance, vector_literal
 
 WORD_BITS = 32
 
@@ -76,7 +76,7 @@ def bq_search(
     # first pass and silently yield an empty query array downstream.
     query_vec = [float(x) for x in query_vec]
     dim = len(query_vec)
-    qcode = bq_codes(F.array(*[F.lit(x) for x in query_vec]), dim)
+    qcode = bq_codes(vector_literal(query_vec), dim)
     coded = corpus.select(
         F.col(id_col),
         F.col(vector_col),
@@ -87,7 +87,7 @@ def bq_search(
         .orderBy(F.col("hamming").asc(), F.col(id_col).asc())
         .limit(k * overfetch)
     )
-    qlit = F.array(*[F.lit(x) for x in query_vec])
+    qlit = vector_literal(query_vec)
     return (
         approx.withColumn("distance", l2_distance(F.col(vector_col), qlit))
         .orderBy(F.col("distance").asc(), F.col(id_col).asc())

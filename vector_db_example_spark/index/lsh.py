@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from .. import fsio
 from . import deletes
+from ..functions.vector import vector_literal
 from ..operators.knn import knn_exact
 from ..sources.tables import append_repartition, read_layout
 
@@ -51,9 +52,8 @@ def bucket_expr(vector: Column, planes: np.ndarray) -> Column:
     dot product per plane via zip_with/aggregate — JVM-side, no Python)."""
     bits = []
     for i, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(x)) for x in plane])
         dot = F.aggregate(
-            F.zip_with(lit_plane, vector, lambda p, v: p * v.cast("double")),
+            F.zip_with(vector_literal(plane), vector, lambda p, v: p * v.cast("double")),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )

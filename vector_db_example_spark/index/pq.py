@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vector import l2_distance
+from ..functions.vector import l2_distance, vector_literal
 
 #: Deterministic codebook sample: ksub=32 spread vec_ids, present at every
 #: test scale factor. Codeword k = the k-th entry (ascending id order).
@@ -76,7 +76,7 @@ def pq_codes(
     sqd = [
         F.zip_with(
             x,
-            F.array(*[F.lit(c) for c in cw]),
+            vector_literal(cw),
             lambda a, b: (a - b) * (a - b),
         )
         for cw in codebook
@@ -110,7 +110,7 @@ def pq_reconstruct(
     elems = []
     for i in range(dim):
         j = i // dsub
-        options = F.array(*[F.lit(float(cw[i])) for cw in codebook])
+        options = vector_literal([cw[i] for cw in codebook])
         elems.append(F.element_at(options, F.element_at(codes, j + 1) + 1))
     return F.array(*elems)
 
@@ -121,7 +121,7 @@ def pq_adc_distance(
     """Asymmetric distance: float query vs the reconstruction, as the
     standard left-to-right 64-fold (bit-exact vs the oracle; numerically
     identical to the per-subspace LUT sum, but with a fixed add order)."""
-    qv = F.array(*[F.lit(float(q)) for q in query_vec])
+    qv = vector_literal(query_vec)
     return l2_distance(pq_reconstruct(codes, codebook, m), qv)
 
 
@@ -152,7 +152,7 @@ def pq_search(
         .orderBy(F.col("approx_distance").asc(), F.col(id_col).asc())
         .limit(k * overfetch)
     )
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
+    qlit = vector_literal(query_vec)
     return (
         approx.withColumn("distance", l2_distance(F.col(vector_col), qlit))
         .orderBy(F.col("distance").asc(), F.col(id_col).asc())
@@ -225,7 +225,7 @@ def ivf_pq_search(
         .orderBy(F.col("approx_distance").asc(), F.col(index.id_col).asc())
         .limit(k * overfetch)
     )
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
+    qlit = vector_literal(query_vec)
     return (
         pruned.select(index.id_col, index.vector_col)
         .join(F.broadcast(approx.select(index.id_col)), index.id_col)

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.vector import vector_literal
+
 EPS = 1e-12
 
 
@@ -51,8 +53,8 @@ def train_sq8_params(
 def sq8_codes(vector: Column, mins: list[float], scales: list[float]) -> Column:
     """array<float> → array<int> of 8-bit codes (pure expression; the
     2·dim literals are KBs, nothing like a centroid matrix)."""
-    mn = F.array(*[F.lit(float(m)) for m in mins]).alias("mn")
-    sc = F.array(*[F.lit(float(s)) for s in scales]).alias("sc")
+    mn = vector_literal(mins).alias("mn")
+    sc = vector_literal(scales).alias("sc")
     zipped = F.arrays_zip(vector.cast("array<double>").alias("x"), mn, sc)
     return F.transform(
         zipped,
@@ -65,9 +67,9 @@ def sq8_codes(vector: Column, mins: list[float], scales: list[float]) -> Column:
 
 def sq8_distance(codes: Column, query_vec, mins: list[float], scales: list[float]) -> Column:
     """Asymmetric L2: float query vs dequantized (bin-midpoint) codes."""
-    qv = F.array(*[F.lit(float(q)) for q in query_vec]).alias("q")
-    mn = F.array(*[F.lit(float(m)) for m in mins]).alias("mn")
-    sc = F.array(*[F.lit(float(s)) for s in scales]).alias("sc")
+    qv = vector_literal(query_vec).alias("q")
+    mn = vector_literal(mins).alias("mn")
+    sc = vector_literal(scales).alias("sc")
     zipped = F.arrays_zip(codes.alias("c"), qv, mn, sc)
     diff = lambda t: t["q"] - (  # noqa: E731
         t["mn"] + (t["c"].cast("double") + 0.5) * t["sc"]
@@ -102,7 +104,7 @@ def sq8_search(
         .orderBy(F.col("approx_distance").asc(), F.col(id_col).asc())
         .limit(k * overfetch)
     )
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
+    qlit = vector_literal(query_vec)
     return (
         approx.withColumn("distance", l2_distance(F.col(vector_col), qlit))
         .orderBy(F.col("distance").asc(), F.col(id_col).asc())
@@ -180,7 +182,7 @@ def ivf_sq8_search(
         .orderBy(F.col("approx_distance").asc(), F.col(index.id_col).asc())
         .limit(k * overfetch)
     )
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
+    qlit = vector_literal(query_vec)
     return (
         pruned.select(index.id_col, index.vector_col)
         .join(F.broadcast(approx.select(index.id_col)), index.id_col)

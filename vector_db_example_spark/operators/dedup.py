@@ -807,16 +807,14 @@ def semantic_dedup(
     shuffle join when, as in a heavy-dup corpus, it is not); the
     expression-literal centroid form here is the oracle-exact policy
     layer for a bounded centroid count."""
-    from ..functions.vector import cosine_similarity, l2_distance_sq
+    from ..functions.vector import cosine_similarity, l2_distance_sq, vector_literal
 
     if not centroids:
         raise ValueError("centroids must be non-empty")
     structs = F.array(
         *[
             F.struct(
-                l2_distance_sq(
-                    F.col(vector_col), F.array(*[F.lit(float(x)) for x in c])
-                ).alias("d"),
+                l2_distance_sq(F.col(vector_col), vector_literal(c)).alias("d"),
                 F.lit(ci).alias("c"),
             )
             for ci, c in enumerate(centroids)

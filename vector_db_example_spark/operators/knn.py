@@ -35,17 +35,13 @@ from ..functions.vector import (
     cosine_similarity,
     l2_distance,
     score_from_distance,
+    vector_literal,
 )
 
 #: Reference defaults (SURVEY.md §2.6 — these constants define parity).
 DEFAULT_TOP_K = 5
 DEFAULT_SCORE_THRESHOLD = 0.3
 OVERFETCH_FACTOR = 3  # reference searches limit=top_k*3 then re-limits
-
-
-def _vector_literal(vec) -> Column:
-    """A query vector as a Catalyst array<double> literal (broadcast by value)."""
-    return F.array(*[F.lit(float(x)) for x in vec])
 
 
 def knn_exact(
@@ -62,7 +58,7 @@ def knn_exact(
     Returns the corpus columns + ``distance`` + ``score``, deterministic
     ties broken by ``id_col``.
     """
-    q = _vector_literal(query_vec) if not isinstance(query_vec, Column) else query_vec
+    q = vector_literal(query_vec) if not isinstance(query_vec, Column) else query_vec
     if metric == "l2":
         dist = l2_distance(F.col(vector_col), q)
     elif metric == "cosine":
@@ -353,7 +349,7 @@ def knn_grouped(
     one-row-per-group table ranks globally — the corpus is scanned once
     and never broadcast or re-shuffled.
     """
-    q = _vector_literal(query_vec) if not isinstance(query_vec, Column) else query_vec
+    q = vector_literal(query_vec) if not isinstance(query_vec, Column) else query_vec
     if metric == "l2":
         dist = l2_distance(F.col(vector_col), q)
     elif metric == "cosine":
@@ -398,7 +394,7 @@ def knn_range(
     — no k limit; the band filter is a pure map-side predicate, so the
     plan is scan → filter with zero shuffle (callers paginate/iterate).
     """
-    q = _vector_literal(query_vec) if not isinstance(query_vec, Column) else query_vec
+    q = vector_literal(query_vec) if not isinstance(query_vec, Column) else query_vec
     if metric == "l2":
         dist = l2_distance(F.col(vector_col), q)
     elif metric == "cosine":
@@ -429,8 +425,8 @@ def knn_truncated_rerank(
     prefix 16/64, and with a column of pre-sliced prefixes, 4x less IO),
     then exact rerank on the full vectors. Both stages are map-side +
     TakeOrdered — no shuffle, no index to maintain."""
-    q_prefix = F.array(*[F.lit(float(x)) for x in query_vec[:prefix_dims]])
-    q_full = F.array(*[F.lit(float(x)) for x in query_vec])
+    q_prefix = vector_literal(query_vec[:prefix_dims])
+    q_full = vector_literal(query_vec)
     approx = (
         corpus.withColumn(
             "approx_distance",
@@ -460,7 +456,7 @@ def knn_page(
     order. Executes as TakeOrdered of offset+k rows (tiny) + a window over
     just those rows — the corpus itself is never shuffled, so iterating
     pages costs one map-side scan per page at any corpus size."""
-    q = _vector_literal(query_vec)
+    q = vector_literal(query_vec)
     top = (
         corpus.withColumn("distance", l2_distance(F.col(vector_col), q))
         .orderBy(F.col("distance").asc(), F.col(id_col).asc())

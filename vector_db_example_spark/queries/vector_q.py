@@ -308,10 +308,10 @@ FROM d ORDER BY sim DESC, vec_id LIMIT 10
 def vector_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cosine top-k (second metric the engine supports beyond the
     reference's L2)."""
-    from ..functions.vector import cosine_similarity
+    from ..functions.vector import cosine_similarity, vector_literal
 
     emb = load_table(spark, sf_dir, "embeddings")
-    q = F.array(*[F.lit(float(x)) for x in _query_vec(spark, sf_dir, 7)])
+    q = vector_literal(_query_vec(spark, sf_dir, 7))
     return (
         emb.withColumn("sim", cosine_similarity(F.col("embedding"), q))
         .orderBy(F.col("sim").desc(), F.col("vec_id").asc())

@@ -12,6 +12,20 @@ default at no measurable CPU cost. Parquet records the codec per column
 chunk, so a layout written under another codec needs no migration: its
 files read alongside the zstd appends, and its next compaction rewrites
 them as zstd.
+
+DataFrame debugging is off (``spark.python.sql.dataFrameDebugging.enabled
+=false``). While it is on, PySpark wraps every Column function (``F.col``,
+``F.lit``, ``F.when``, ...) so that each call also reads the active
+session and a conf value and sets and clears the JVM's
+``PySparkCurrentOrigin``: about six extra py4j round trips per Column op,
+about half of a keyword or hybrid question's driver↔JVM calls
+(tests/test_roundtrips.py).
+PySpark documents the flag as the switch to reduce that slowdown. What it
+gives up: an analysis error's DataFrame query context no longer names the
+Python file and line of the Column call that built the failing
+expression; the error class, message and JVM stack trace are unchanged.
+PySpark caches the flag at a process's first Column op, so it is set
+here, when the session is built.
 """
 
 from __future__ import annotations
@@ -47,6 +61,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # No Python call site on each Column op (module docstring).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Best-effort only: spark.driver.memory must reach the JVM before
         # it launches, so this applies ONLY when this builder starts the
         # gateway (fresh process, no PYSPARK_SUBMIT_ARGS). Under

@@ -220,22 +220,31 @@ def read_layout(
     (schema inference over an empty partitioned root raises
     UNABLE_TO_INFER_SCHEMA).
 
-    With ``values`` (the integer partition values a query probes) the
-    root is listed ONCE on the driver through the Hadoop FS, and only
-    the ``part_col=v`` directories that exist are read, under
+    With ``values`` (the integer partition values a query probes) only
+    the probed ``part_col=v`` directories that exist are read, under
     ``basePath`` so ``part_col`` is still a discovered partition column.
-    Spark's own discovery of the root lists every partition directory —
-    a parallel listing job once they outnumber
-    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` — so a
-    question's listing cost follows its probes, not the layout's
-    partition count. The ``isin`` filter is still applied, so the scan
-    keeps its PartitionFilters (plan-pinned in tests/test_plans.py).
-    When no probed directory exists (a cell or bucket emptied by a
-    delete) the result is an empty frame of the layout schema. Nothing
-    is cached: each call lists afresh, so appends are visible at once.
+    One Hadoop glob of ``root/part_col={v1,…}`` on the driver finds them
+    (``fsio.existing_children``): the root's listing stays inside the
+    JVM, and only the matches cross py4j. Spark's own discovery of the
+    root lists every partition directory (a parallel listing job once
+    they outnumber
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold``), and
+    walking the root's listing through py4j costs about four calls per
+    entry. So a question's cost follows its probes, not the layout's
+    partition count, in Spark jobs and in py4j calls alike
+    (tests/test_roundtrips.py). The ``isin`` filter is still applied, so
+    the scan keeps its PartitionFilters (plan-pinned in
+    tests/test_plans.py). When no probed directory exists (a cell or
+    bucket emptied by a delete) the result is an empty frame of the
+    layout schema. Nothing is cached: each call globs afresh, so appends
+    are visible at once.
 
     Layout handles predating the persisted schema keep the inferred
-    root read (plus the filter)."""
+    root read (plus the filter).
+
+    ``spark.read`` globs every path it is given, so each read path goes
+    through ``fsio.glob_escape``: a root holding ``[``, ``{``, ``*`` or
+    ``?`` reads itself, not the siblings its name matches as a pattern."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
@@ -243,16 +252,15 @@ def read_layout(
     if schema_json:
         reader = reader.schema(StructType.fromJson(json.loads(schema_json)))
     if values is None:
-        return reader.parquet(root)
+        return reader.parquet(fsio.glob_escape(root))
     values = [int(v) for v in values]
     if schema_json:
-        wanted = {f"{part_col}={v}" for v in values}
-        names = sorted(fsio.list_names(root, spark))
-        dirs = [f"{root}/{n}" for n in names if n in wanted]
+        names = fsio.existing_children(root, (f"{part_col}={v}" for v in values), spark)
+        dirs = [fsio.glob_escape(f"{root}/{n}") for n in names]
         # no probed directory: zero paths read as an empty frame of the schema
         df = reader.option("basePath", root).parquet(*dirs)
     else:
-        df = reader.parquet(root)
+        df = reader.parquet(fsio.glob_escape(root))
     return df.filter(F.col(part_col).isin(values))
 
 
