@@ -604,278 +604,62 @@ def test_band_filter_never_shuffles_layout(spark, tmp_path_factory):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_legacy_unbucketed_layout_still_works(spark, tmp_path_factory):
-    """A build writes the unpartitioned side-car and records
-    ``sig_buckets`` 0; a meta JSON without the field loads as 0
-    (backward compatibility with layouts persisted by earlier rounds)."""
-    import json
-    import os
+def test_append_and_delete_match_model_at_both_thresholds(spark, tmp_path_factory):
+    """build → append (a null text included) → filter at thresholds 0
+    and 0.5 with ``candidate_cap`` 3 equals the model: the boilerplate
+    cluster takes the mega-key route, null texts collide, a within-batch
+    pair and a copy of the appended doc are flagged. A delete tombstones
+    through the side-car (re-deleting is a no-op), and the next filter
+    equals the model over the surviving corpus."""
+    from vector_db_example_spark.index.dedupidx import dedup_index_delete
 
-    d = str(tmp_path_factory.mktemp("dedupidx_legacy"))
-    corpus = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog")],
-        "doc_id long, text string",
-    )
-    index = build_dedup_index(corpus, f"{d}/idx")
-    assert index.sig_buckets == 0
-    assert not any(
-        p.startswith("sig_bucket=") for p in os.listdir(index.sigs_path)
-    )
-    # strip the field from the meta to simulate a pre-round-11 layout
-    meta_path = f"{d}/idx/_dedup_meta.json"
-    meta = json.loads(open(meta_path).read())
-    meta.pop("sig_buckets")
-    open(meta_path, "w").write(json.dumps(meta))
-    crc = f"{d}/idx/._dedup_meta.json.crc"  # hadoop LocalFS checksum sibling
-    if os.path.exists(crc):
-        os.remove(crc)
-    loaded = DedupIndex.load(f"{d}/idx")
-    assert loaded.sig_buckets == 0
-    batch = spark.createDataFrame(
-        [(10, "the quick brown fox jumps over the lazy dog"), (11, "unrelated")],
-        "doc_id long, text string",
-    )
-    got = {
-        r["doc_id"]: (r["corpus_dup"], r["within_dup"])
-        for r in dedup_index_filter(
-            spark, loaded, batch, threshold=0.5
-        )[0].collect()
-    }
-    assert got == {10: (True, False), 11: (False, False)}
-
-
-def _write_hex_layout(spark, docs, path: str, sig_buckets: int = 8) -> None:
-    """A layout as builds before binary digests wrote it: hex band keys
-    and hex signatures straight from the Catalyst expressions, and a
-    meta without ``hash_format``."""
-    import json
-
-    from vector_db_example_spark.operators.dedup import (
-        lsh_band_keys,
-        minhash_signature,
-        shingles,
-    )
-
-    sigs = docs.select(
-        "doc_id", minhash_signature(shingles(F.col("text"), k=3), n_hashes=16).alias("sig")
-    ).localCheckpoint(eager=True)
-    sigs.withColumn(
-        "sig_bucket", F.pmod(F.col("doc_id"), F.lit(sig_buckets)).cast("int")
-    ).write.partitionBy("sig_bucket").parquet(f"{path}_sigs")
-    sigs.select("doc_id", F.explode(lsh_band_keys(F.col("sig"), 8, 2)).alias("bk")).select(
-        "doc_id", F.col("bk.key").alias("key"), F.col("bk.band").alias("band")
-    ).write.partitionBy("band").parquet(path)
-    meta = {
-        "shingle_k": 3, "n_hashes": 16, "bands": 8, "id_col": "doc_id",
-        "text_col": "text", "sig_buckets": sig_buckets,
-    }
-    open(f"{path}/_dedup_meta.json", "w").write(json.dumps(meta))
-
-
-def test_legacy_hex_layout_filters_appends_and_migrates(spark, tmp_path_factory):
-    """A hex layout (meta without ``hash_format``) reads through
-    ``unhex``: after an append (which keeps writing hex), the filter at
-    thresholds 0 and 0.5 — mega-key route and null texts included —
-    gives the verdicts of a binary build of the same documents (the
-    model ``test_verified_filter_matches_model`` pins builds to). One
-    compaction migrates it to binary digests with every verdict and
-    every ``dedup_layout_stats`` row unchanged."""
-    from pyspark.sql import types as T
-
-    from vector_db_example_spark.index.dedupidx import (
-        dedup_index_compact,
-    )
-    from vector_db_example_spark.index.stats import dedup_layout_stats
-
-    d = str(tmp_path_factory.mktemp("dedupidx_hex"))
+    d = str(tmp_path_factory.mktemp("dedupidx_model"))
     boiler = "shared boilerplate footer text for every page"
     corpus = (
         [(i, f"corpus doc {i} alpha beta gamma delta") for i in range(12)]
         + [(20 + i, f"{boiler} {i}") for i in range(5)]
-        + [(30, None), (31, "the quick brown fox jumps over the lazy dog")]
+        + [(30, None), (31, "w31a w31b w31c w31d w31e")]
     )
     extra = [(200, "appended later with its own words"), (201, None)]
     batch = [
-            (100, "corpus doc 3 alpha beta gamma delta"),  # exact corpus dup
-            (101, "corpus doc 4 alpha beta gamma omega"),  # near dup
-            (102, f"{boiler} 99"),  # boilerplate collider
-            (103, None),
-            (104, "fresh words nobody has written before"),
-            (105, "fresh words nobody has written before"),
-            (106, "the quick brown fox jumps over the lazy cat"),
-            (107, "appended later with its own words"),  # dup of the append
+        (100, "corpus doc 3 alpha beta gamma delta"),  # exact corpus dup
+        (101, "corpus doc 4 alpha beta gamma omega"),  # near dup
+        (102, f"{boiler} 99"),  # boilerplate collider
+        (103, None),
+        (104, "fresh words nobody has written before"),
+        (105, "fresh words nobody has written before"),
+        (106, "w31a w31b w31c w31d w31e"),  # dup of doc 31
+        (107, "appended later with its own words"),  # dup of the append
     ]
     schema = "doc_id long, text string"
-
-    _write_hex_layout(spark, spark.createDataFrame(corpus, schema), f"{d}/hex")
-    hexidx = DedupIndex.load(f"{d}/hex")
-    assert hexidx.hash_format == "hex"
-    dedup_index_append(hexidx, spark.createDataFrame(extra, schema))
-    assert spark.read.parquet(f"{d}/hex").schema["key"].dataType == T.StringType()
-
+    index = build_dedup_index(spark.createDataFrame(corpus, schema), f"{d}/idx")
+    dedup_index_append(index, spark.createDataFrame(extra, schema))
     batch_df = spark.createDataFrame(batch, schema)
 
-    def verdicts(idx):
+    def verdicts():
         return {
             t: {
                 r["doc_id"]: (r["corpus_dup"], r["within_dup"])
                 for r in dedup_index_filter(
-                    spark, idx, batch_df, threshold=t, candidate_cap=3
+                    spark, index, batch_df, threshold=t, candidate_cap=3
                 )[0].collect()
             }
             for t in (0.0, 0.5)
         }
 
-    def stats(idx):
-        return sorted(map(tuple, dedup_layout_stats(spark, idx, 3).collect()))
+    def model(docs):
+        return {t: model_filter_verified(docs, batch, t, 3) for t in (0.0, 0.5)}
 
-    want = {t: model_filter_verified(corpus + extra, batch, t, 3) for t in (0.0, 0.5)}
+    want = model(corpus + extra)
     assert want[0.0] != want[0.5]
-    assert want[0.5][107] == (True, False)
-    assert verdicts(hexidx) == want
-    hex_stats = stats(hexidx)
+    assert want[0.5][106] == want[0.5][107] == (True, False)
+    assert verdicts() == want
 
-    migrated = dedup_index_compact(spark, hexidx, f"{d}/hex_v2")
-    assert DedupIndex.load(migrated.path).hash_format == "binary"
-    assert spark.read.parquet(migrated.path).schema["key"].dataType == T.BinaryType()
-    assert spark.read.parquet(migrated.sigs_path).schema[
-        "sig"
-    ].dataType == T.ArrayType(T.BinaryType())
-    assert verdicts(migrated) == want
-    assert stats(migrated) == hex_stats
-
-
-def _write_bucketed_layout(spark, flat, path: str, sig_buckets: int = 8) -> DedupIndex:
-    """A copy of the ``flat`` layout as builds before the flat side-car
-    wrote it: signatures partitioned by ``sig_bucket = pmod(id,
-    sig_buckets)`` and a meta recording ``sig_buckets``."""
-    import json
-
-    from vector_db_example_spark.index.dedupidx import _read_bands, _read_sigs
-
-    _read_sigs(spark, flat).withColumn(
-        "sig_bucket", F.pmod(F.col("doc_id"), F.lit(sig_buckets)).cast("int")
-    ).write.partitionBy("sig_bucket").parquet(f"{path}_sigs")
-    _read_bands(spark, flat).write.partitionBy("band").parquet(path)
-    meta = json.loads(open(f"{flat.path}/_dedup_meta.json").read())
-    open(f"{path}/_dedup_meta.json", "w").write(
-        json.dumps({**meta, "sig_buckets": sig_buckets})
-    )
-    return DedupIndex.load(path)
-
-
-BKT_SCHEMA = "doc_id long, text string"
-BKT_BOILER = "shared boilerplate footer text for every page"
-BKT_CORPUS = (
-    [(i, f"corpus doc {i} alpha beta gamma delta") for i in range(12)]
-    + [(20 + i, f"{BKT_BOILER} {i}") for i in range(5)]
-    + [(30, None), (31, "w31a w31b w31c w31d w31e")]
-)
-BKT_BATCH = [
-    (100, "corpus doc 3 alpha beta gamma delta"),  # exact corpus dup
-    (101, "corpus doc 4 alpha beta gamma omega"),  # near dup
-    (102, f"{BKT_BOILER} 99"),  # boilerplate collider
-    (103, None),
-    (104, "fresh words nobody has written before"),
-    (105, "fresh words nobody has written before"),
-    (106, "w31a w31b w31c w31d w31e"),  # dup of doc 31
-    (107, "appended later with its own words"),  # dup of a later append
-]
-
-
-def _bkt_verdicts(spark, idx, thresholds=(0.0, 0.5)):
-    batch = spark.createDataFrame(BKT_BATCH, BKT_SCHEMA)
-    return {
-        t: {
-            r["doc_id"]: (r["corpus_dup"], r["within_dup"])
-            for r in dedup_index_filter(
-                spark, idx, batch, threshold=t, candidate_cap=3
-            )[0].collect()
-        }
-        for t in thresholds
-    }
-
-
-@pytest.fixture(scope="module")
-def flat_bkt(spark, tmp_path_factory):
-    """A flat build of ``BKT_CORPUS`` and its verdicts on ``BKT_BATCH``
-    at thresholds 0 and 0.5 (mega-key route, null texts and a
-    within-batch pair included) — the reference a bucketed copy of the
-    same corpus must reproduce. Never mutated."""
-    d = str(tmp_path_factory.mktemp("dedupidx_flat"))
-    flat = build_dedup_index(
-        spark.createDataFrame(BKT_CORPUS, BKT_SCHEMA), f"{d}/flat"
-    )
-    want = _bkt_verdicts(spark, flat)
-    assert want[0.0] != want[0.5]
-    assert want[0.5][106] == (True, False) and want[0.5][107] == (False, False)
-    return flat, want
-
-
-def test_legacy_bucketed_layout_appends_and_deletes(
-    spark, tmp_path_factory, flat_bkt
-):
-    """A layout whose side-car is partitioned by ``sig_bucket`` (every
-    build from round 11 until the flat side-car) keeps working: its
-    verdicts at thresholds 0 and 0.5 equal a flat build's, an append
-    lands under its ``sig_bucket=`` directories and the next filter sees
-    it, and a delete tombstones through the side-car root."""
-    import glob
-    import os
-
-    from vector_db_example_spark.index.dedupidx import (
-        dedup_index_delete,
-    )
-
-    flat, want = flat_bkt
-    d = str(tmp_path_factory.mktemp("dedupidx_bucketed"))
-    bucketed = _write_bucketed_layout(spark, flat, f"{d}/bkt")
-    assert bucketed.sig_buckets == 8
-    assert _bkt_verdicts(spark, bucketed) == want
-
-    sigs = bucketed.sigs_path
-    before = set(glob.glob(f"{sigs}/**/*.parquet", recursive=True))
-    dedup_index_append(
-        bucketed,
-        spark.createDataFrame(
-            [(200, "appended later with its own words")], BKT_SCHEMA
-        ),
-    )
-    added = set(glob.glob(f"{sigs}/**/*.parquet", recursive=True)) - before
-    assert added and all(
-        os.path.dirname(f) == f"{sigs}/sig_bucket={200 % 8}" for f in added
-    ), added
-    assert dedup_index_delete(spark, bucketed, [31, 999]) == 1
-    assert dedup_index_delete(spark, bucketed, [31]) == 0
-    after = {**want[0.5], 106: (False, False), 107: (True, False)}
-    assert _bkt_verdicts(spark, bucketed, (0.5,)) == {0.5: after}
-
-
-def test_compact_migrates_sig_buckets(spark, tmp_path_factory, flat_bkt):
-    """A legacy bucketed layout migrates onto the flat side-car through
-    ONE ordinary compaction — no corpus re-shingle (signatures are
-    already persisted) — and the verdicts at thresholds 0 and 0.5 are
-    identical before and after: the migration moves sig rows, never
-    changes their values, and drops the directory-derived column."""
-    import os
-
-    from vector_db_example_spark.index.dedupidx import (
-        dedup_index_compact,
-    )
-
-    flat, want = flat_bkt
-    d = str(tmp_path_factory.mktemp("dedupidx_migrate"))
-    bucketed = _write_bucketed_layout(spark, flat, f"{d}/bkt")
-    assert any(
-        p.startswith("sig_bucket=") for p in os.listdir(bucketed.sigs_path)
-    )
-    migrated = dedup_index_compact(spark, bucketed, f"{d}/bkt_v2")
-    assert migrated.sig_buckets == 0
-    assert DedupIndex.load(migrated.path).sig_buckets == 0
-    assert not any(
-        p.startswith("sig_bucket=") for p in os.listdir(migrated.sigs_path)
-    )
-    assert _bkt_verdicts(spark, migrated) == want
+    assert dedup_index_delete(spark, index, [31, 999]) == 1
+    assert dedup_index_delete(spark, index, [31]) == 0
+    after = model([c for c in corpus if c[0] != 31] + extra)
+    assert after[0.5][106] == (False, False)
+    assert verdicts() == after
 
 
 # --- round-12: count-first verified filter --------------------------------
@@ -1018,6 +802,50 @@ def test_over_ceiling_fallback_matches_broadcast_path(
     assert band_bc[200] == (True, False)
     assert ver_bc[201] == (True, False)  # mega-key auto route
     assert ver_bc[203] == (False, True)
+
+
+def test_legacy_unbucketed_layout_still_works(spark, tmp_path_factory):
+    """A binary layout whose meta still records ``sig_buckets`` 0 (as
+    unbucketed builds of earlier rounds wrote it) loads and filters like
+    a fresh build; a meta of a bucketed or hex layout is refused."""
+    import json
+    import os
+
+    d = str(tmp_path_factory.mktemp("dedupidx_legacy"))
+    corpus = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog")],
+        "doc_id long, text string",
+    )
+    build_dedup_index(corpus, f"{d}/idx")
+    meta_path = f"{d}/idx/_dedup_meta.json"
+    meta = json.loads(open(meta_path).read())
+    crc = f"{d}/idx/._dedup_meta.json.crc"  # hadoop LocalFS checksum sibling
+
+    def write_meta(m):
+        open(meta_path, "w").write(json.dumps(m))
+        if os.path.exists(crc):
+            os.remove(crc)
+
+    write_meta({**meta, "sig_buckets": 0})
+    loaded = DedupIndex.load(f"{d}/idx")
+    batch = spark.createDataFrame(
+        [(10, "the quick brown fox jumps over the lazy dog"), (11, "unrelated")],
+        "doc_id long, text string",
+    )
+    got = {
+        r["doc_id"]: (r["corpus_dup"], r["within_dup"])
+        for r in dedup_index_filter(
+            spark, loaded, batch, threshold=0.5
+        )[0].collect()
+    }
+    assert got == {10: (True, False), 11: (False, False)}
+
+    write_meta({**meta, "sig_buckets": 8})
+    with pytest.raises(ValueError, match="sig_buckets"):
+        DedupIndex.load(f"{d}/idx")
+    write_meta({k: v for k, v in meta.items() if k != "hash_format"})
+    with pytest.raises(ValueError, match="hash_format"):
+        DedupIndex.load(f"{d}/idx")
 
 
 def test_verified_filter_skips_sig_subtree_when_no_under_cap_key(
@@ -1284,8 +1112,10 @@ def test_persisted_schema_is_binary_digests(spark, tmp_path_factory):
     """The layout stores each band key as a 16-byte binary digest and
     each signature as an ``array<binary>`` of ``n_hashes`` 16-byte
     digests — in the parquet files themselves, for the build and for
-    an append, and the meta records the format."""
+    an append; the signature side-car is one unpartitioned table; and
+    the meta stamps the format."""
     import json
+    import os
 
     from pyspark.sql import types as T
 
@@ -1298,8 +1128,9 @@ def test_persisted_schema_is_binary_digests(spark, tmp_path_factory):
         index,
         spark.createDataFrame([(3, "epsilon zeta eta theta")], "doc_id long, text string"),
     )
-    assert json.load(open(f"{d}/idx/_dedup_meta.json"))["hash_format"] == "binary"
-    assert DedupIndex.load(index.path).hash_format == "binary"
+    meta = json.load(open(f"{d}/idx/_dedup_meta.json"))
+    assert meta["hash_format"] == "binary" and "sig_buckets" not in meta
+    assert not any(p.startswith("sig_bucket=") for p in os.listdir(index.sigs_path))
     bands = spark.read.parquet(index.path)
     sigs = spark.read.parquet(index.sigs_path)
     assert bands.schema["key"].dataType == T.BinaryType()

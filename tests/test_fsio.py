@@ -24,6 +24,11 @@ from vector_db_example_spark import fsio
 from vector_db_example_spark.sources.tables import load_table
 
 
+#: A layout root name holding glob metacharacters, and a sibling name
+#: that the root's name matches when read as a pattern.
+ODD, DECOY = "odd[1]{a,b}*?", "odd1aXY"
+
+
 @pytest.fixture
 def uri_root(tmp_path):
     return f"file://{tmp_path}"
@@ -57,8 +62,8 @@ def test_read_layout_resolves_only_probed_partitions(spark, tmp_path, scheme):
     """A probed read_layout skips a probed directory that does not exist,
     reads an empty frame of the layout schema when none does, and
     matches a root holding glob metacharacters literally, probed or read
-    whole, with or without a persisted schema: the decoy sibling
-    ``odd1aXY`` matches the root's name read as a pattern."""
+    whole: the decoy sibling ``DECOY`` matches the root's name read as a
+    pattern."""
     import json
 
     from pyspark.sql.types import StructType
@@ -66,11 +71,11 @@ def test_read_layout_resolves_only_probed_partitions(spark, tmp_path, scheme):
     from vector_db_example_spark.sources.tables import read_layout
 
     rows = [(i, i % 4) for i in range(20)]
-    decoy = f"{scheme}{tmp_path}/odd1aXY/layout"
+    decoy = f"{scheme}{tmp_path}/{DECOY}/layout"
     spark.createDataFrame([(100 + i, p) for i, p in rows], "id long, part int").write.partitionBy(
         "part"
     ).parquet(decoy)
-    for name in ("plain", "odd[1]{a,b}*?"):
+    for name in ("plain", ODD):
         root = f"{scheme}{tmp_path}/{name}/layout"
         spark.createDataFrame(rows, "id long, part int").write.partitionBy("part").parquet(root)
         schema_json = spark.read.parquet(root).schema.json()
@@ -85,12 +90,152 @@ def test_read_layout_resolves_only_probed_partitions(spark, tmp_path, scheme):
         assert ids([2]) == [i for i, p in rows if p == 2]
         assert ids([7, 9]) == [] and ids([7]) == []
         assert ids(None) == [i for i, _ in rows]
-        legacy = read_layout(spark, root, None, "part", [2])
-        assert sorted(r.id for r in legacy.collect()) == [i for i, p in rows if p == 2]
-        assert sorted(r.id for r in read_layout(spark, root, None).collect()) == [i for i, _ in rows]
         assert fsio.existing_children(root, ["part=7", "part=3", "part=0"]) == ["part=0", "part=3"]
     assert fsio.existing_children(f"{scheme}{tmp_path}/absent", ["part=1", "part=2"]) == []
     assert fsio.existing_children(f"{scheme}{tmp_path}/absent", ["part=1"]) == []
+
+
+def test_layout_lifecycles_under_glob_metachar_root(spark, tmp_path):
+    """The side-table reads (BM25 stats and doclens, tombstones, dedup
+    bands and signatures) match a root holding glob metacharacters
+    literally. Under root ``ODD``, with decoy layouts under ``DECOY``:
+    an inverted build → search → delete → search → compact → search and
+    its layout stats answer exactly as under a plain root, and a dedup
+    build → filter → delete → filter gives its own corpus's verdicts."""
+    from vector_db_example_spark.index.dedupidx import (
+        build_dedup_index,
+        dedup_index_delete,
+        dedup_index_filter,
+    )
+    from vector_db_example_spark.index.inverted import (
+        bm25_search_inverted,
+        build_inverted_index,
+        compact_inverted_index,
+        delete_from_inverted_index,
+    )
+    from vector_db_example_spark.index.stats import layout_stats
+
+    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
+    terms = ["vector", "stream", "window"]
+    build_inverted_index(docs.filter("doc_id % 2 = 1"), f"{tmp_path}/{DECOY}/inv", 8)
+
+    def inverted_lifecycle(name):
+        idx = build_inverted_index(docs.filter("doc_id % 2 = 0"), f"{tmp_path}/{name}/inv", 8)
+
+        def top(layout):
+            return [tuple(r) for r in bm25_search_inverted(spark, layout, terms).collect()]
+
+        before = top(idx)
+        deleted = delete_from_inverted_index(idx, [before[0][0]])
+        after = top(idx)
+        stats = sorted(map(tuple, layout_stats(spark, idx).collect()))
+        compacted = compact_inverted_index(spark, idx, f"{tmp_path}/{name}/inv_v2")
+        return before, deleted, after, stats, top(compacted)
+
+    want = inverted_lifecycle("plain")
+    assert want[1] == 1 and want[0] != want[2] == want[4]
+    assert inverted_lifecycle(ODD) == want
+
+    schema = "doc_id long, text string"
+    fox = "the quick brown fox jumps over the lazy dog"
+    build_dedup_index(spark.createDataFrame([(5, "decoy corpus text")], schema), f"{tmp_path}/{DECOY}/dd")
+    idx = build_dedup_index(
+        spark.createDataFrame([(1, fox), (2, "band keys under an odd root")], schema),
+        f"{tmp_path}/{ODD}/dd",
+    )
+    batch = spark.createDataFrame([(10, fox), (11, "decoy corpus text")], schema)
+
+    def verdicts():
+        return {
+            r["doc_id"]: (r["corpus_dup"], r["within_dup"])
+            for r in dedup_index_filter(spark, idx, batch, threshold=0.5)[0].collect()
+        }
+
+    assert verdicts() == {10: (True, False), 11: (False, False)}
+    assert dedup_index_delete(spark, idx, [1]) == 1
+    assert verdicts() == {10: (False, False), 11: (False, False)}
+
+
+def _current_meta(spark, kind: str):
+    """A layout handle class, its meta file name and a meta of the
+    current format that must load: as ``save_meta`` writes it, the dedup
+    meta also carrying the ``"sig_buckets": 0`` that earlier flat builds
+    wrote."""
+    from vector_db_example_spark.index.dedupidx import DedupIndex
+    from vector_db_example_spark.index.inverted import InvertedIndex
+    from vector_db_example_spark.index.ivf import IVFIndex
+    from vector_db_example_spark.index.lsh import LSHIndex
+
+    def schema(ddl):
+        return spark.createDataFrame([], ddl).schema.json()
+
+    vec = {"vector_col": "embedding", "id_col": "doc_id"}
+    inverted = {"n_buckets": 8, "id_col": "doc_id", "text_col": "text"}
+    return {
+        "dedup": (DedupIndex, "_dedup_meta.json", {
+            "shingle_k": 3, "n_hashes": 16, "bands": 8, "id_col": "doc_id",
+            "text_col": "text", "sig_buckets": 0, "hash_format": "binary",
+        }),
+        "ivf": (IVFIndex, "_ivf_meta.json", {
+            **vec, "centroids": [[0.0, 1.0]],
+            "schema": schema("doc_id long, embedding array<float>, cell_id int"),
+        }),
+        "lsh": (LSHIndex, "_lsh_meta.json", {
+            **vec, "planes": [[1.0, 0.0]],
+            "schema": schema("doc_id long, embedding array<float>, bucket int"),
+        }),
+        "bm25": (InvertedIndex, "_inverted_meta.json", {
+            **inverted, "positional": False,
+            "postings_schema": schema(
+                "term string, doc_id long, tf long, __dl int, bucket int"
+            ),
+        }),
+        "positional": (InvertedIndex, "_inverted_meta.json", {
+            **inverted, "positional": True,
+            "postings_schema": schema(
+                "term string, doc_id long, positions array<int>, bucket int"
+            ),
+        }),
+    }[kind]
+
+
+def _no_dl(meta):
+    meta["postings_schema"] = meta["postings_schema"].replace('"__dl"', '"__len"')
+
+
+@pytest.mark.parametrize(
+    "kind, make_old, field",
+    [
+        ("dedup", lambda m: m.pop("hash_format"), "hash_format"),
+        ("dedup", lambda m: m.update(sig_buckets=8), "sig_buckets"),
+        ("ivf", lambda m: m.update(schema=None), "schema"),
+        ("lsh", lambda m: m.update(schema=None), "schema"),
+        ("bm25", lambda m: m.pop("positional"), "positional"),
+        ("bm25", lambda m: m.update(postings_schema=None), "postings_schema"),
+        ("bm25", _no_dl, "__dl"),
+        ("positional", lambda m: m.pop("positional"), "positional"),
+    ],
+    ids=[
+        "dedup-hex", "dedup-bucketed", "ivf-no-schema", "lsh-no-schema",
+        "bm25-no-flag", "bm25-no-schema", "bm25-no-dl", "positional-no-flag",
+    ],
+)
+def test_load_rejects_pre_format_metas(spark, tmp_path, kind, make_old, field):
+    """Each layout handle has one stored format: a current meta loads,
+    and ``load`` of a meta from before that format raises a
+    ``ValueError`` naming the missing or old field. Metas are written
+    through fsio, so no stale ``.crc`` sidecar fails the read."""
+    import json
+
+    cls, name, meta = _current_meta(spark, kind)
+    path = str(tmp_path / kind)
+    fsio.write_text(f"{path}/{name}", json.dumps(meta))
+    loaded = cls.load(path)
+    assert loaded.path == path and loaded.id_col == "doc_id"
+    make_old(meta)
+    fsio.write_text(f"{path}/{name}", json.dumps(meta))
+    with pytest.raises(ValueError, match=field):
+        cls.load(path)
 
 
 def test_ivf_lifecycle_on_uri_path(spark, uri_root):

@@ -137,7 +137,8 @@ def test_tombstone_delete_then_compact(spark, tmp_path):
     score EXACTLY like an index never containing the victims (stats
     decremented, postings anti-joined, tombstones read without a
     schema-inference job); compaction folds tombstones in and preserves
-    scores with the tombstone table gone."""
+    scores with the tombstone table gone. Neither the delete nor the
+    compaction runs a schema-inference job over ``doclens/``."""
     _check_tombstone_delete_then_compact(spark, tmp_path)
 
 
@@ -161,8 +162,14 @@ def _check_tombstone_delete_then_compact(spark, tmp_path):
     docs = load_table(spark, SF_SMOKE, "documents")
     idx = build_inverted_index(docs, str(tmp_path / "idx"), n_buckets=16)
     victims = [3, 77, 200]
-    n = delete_from_inverted_index(idx, victims)
-    assert n == len(victims)
+    deleted = []
+    names = job_names(
+        spark, lambda: deleted.append(delete_from_inverted_index(idx, victims))
+    )
+    assert deleted == [len(victims)]
+    # doclens/ is read with a declared schema: the only parquet jobs are
+    # the tombstone and stats writes, no schema inference
+    assert sum(n.startswith("parquet") for n in names) <= 2, names
     assert delete_from_inverted_index(idx, [999999]) == 0  # unknown id
     # idempotent: re-deleting already-tombstoned ids is a no-op (no
     # duplicate tombstones, no second stats decrement)
@@ -181,7 +188,15 @@ def _check_tombstone_delete_then_compact(spark, tmp_path):
     want = bm25_search_inverted(spark, ref, terms, k=10).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
-    compacted = compact_inverted_index(spark, idx, str(tmp_path / "compact"))
+    compacted = []
+    names = job_names(
+        spark,
+        lambda: compacted.append(
+            compact_inverted_index(spark, idx, str(tmp_path / "compact"))
+        ),
+    )
+    assert not [n for n in names if n.startswith("parquet")], names
+    [compacted] = compacted
     import os
 
     assert not os.path.exists(f"{compacted.path}/tombstones")
@@ -404,13 +419,13 @@ def test_search_plan_has_no_corpus_sized_operand(spark, tmp_path):
     (at billions of docs that join re-shuffles the whole doclens table
     per search)."""
     from vector_db_example_spark.index.inverted import (
-        _postings_carry_dl,
+        _read_postings,
         bm25_search_inverted_batch,
     )
 
     docs = load_table(spark, SF_SMOKE, "documents")
     idx = build_inverted_index(docs, str(tmp_path / "idx"), n_buckets=16)
-    assert _postings_carry_dl(idx)
+    assert "__dl" in _read_postings(spark, idx).columns
     single = bm25_search_inverted(spark, idx, ("vector", "stream"), k=5)
     assert "doclens" not in _plan_of(single)
     batch = bm25_search_inverted_batch(
@@ -418,65 +433,6 @@ def test_search_plan_has_no_corpus_sized_operand(spark, tmp_path):
     )
     assert "doclens" not in _plan_of(batch)
     assert single.count() > 0
-
-
-def test_legacy_layout_joins_doclens_and_compaction_migrates(spark, tmp_path):
-    """A layout written before round 11 (no __dl on posting rows) must
-    keep scoring EXACTLY like a fresh build via the doclens join path,
-    and ONE ordinary compaction must migrate it to the denormalized
-    format — scores unchanged, doclens join gone from the plan. Merge
-    doubles as migration the same way."""
-    from vector_db_example_spark.functions.text import extract_tokens
-    from vector_db_example_spark.index.inverted import (
-        InvertedIndex,
-        _doc_postings,
-        _postings_carry_dl,
-        compact_inverted_index,
-        merge_inverted_indexes,
-    )
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    # forge a faithful pre-round-11 layout: postings without __dl,
-    # doclens/stats side-tables exactly as the old build wrote them
-    legacy_dir = str(tmp_path / "legacy")
-    lp = _doc_postings(docs, "doc_id", "text", 16).drop("__dl")
-    lp.write.mode("overwrite").partitionBy("bucket").parquet(
-        f"{legacy_dir}/postings"
-    )
-    docs.select(
-        "doc_id", F.size(extract_tokens(F.col("text"))).alias("__dl")
-    ).write.mode("overwrite").parquet(f"{legacy_dir}/doclens")
-    docs.select(
-        F.count(F.lit(1)).cast("double").alias("__n"),
-        F.coalesce(F.sum(F.size(extract_tokens(F.col("text")))), F.lit(0))
-        .cast("double")
-        .alias("__tot"),
-    ).write.mode("overwrite").parquet(f"{legacy_dir}/stats")
-    legacy = InvertedIndex(
-        path=legacy_dir, n_buckets=16, postings_schema=lp.schema.json()
-    )
-    legacy.save_meta()
-    assert not _postings_carry_dl(legacy)
-
-    fresh = build_inverted_index(docs, str(tmp_path / "fresh"), n_buckets=16)
-    terms = ("vector", "stream", "window")
-    want = [tuple(r) for r in bm25_search_inverted(spark, fresh, terms).collect()]
-
-    legacy_search = bm25_search_inverted(spark, legacy, terms)
-    assert "doclens" in _plan_of(legacy_search)  # the legacy join path
-    assert [tuple(r) for r in legacy_search.collect()] == want
-
-    migrated = compact_inverted_index(spark, legacy, str(tmp_path / "migrated"))
-    assert _postings_carry_dl(migrated)
-    mig_search = bm25_search_inverted(spark, migrated, terms)
-    assert "doclens" not in _plan_of(mig_search)
-    assert [tuple(r) for r in mig_search.collect()] == want
-
-    merged = merge_inverted_indexes(spark, [legacy], str(tmp_path / "merged"))
-    assert _postings_carry_dl(merged)
-    assert [
-        tuple(r) for r in bm25_search_inverted(spark, merged, terms).collect()
-    ] == want
 
 
 def test_partial_append_visibility_contract(spark, tmp_path):

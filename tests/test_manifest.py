@@ -53,10 +53,7 @@ def test_maintenance_cycle_through_manifest(spark, tmp_path):
     manifest.publish(root, "kb", idx_v1.path)
 
     def serve():
-        served = InvertedIndex(
-            path=manifest.current(root, "kb"),
-            n_buckets=16,
-        )
+        served = InvertedIndex.load(manifest.current(root, "kb"))
         return [tuple(r) for r in bm25_search_inverted(spark, served, terms, k=10).collect()]
 
     v1_answer = serve()

@@ -147,13 +147,8 @@ def _check_positional_delete(spark, tmp_path):
 def test_layout_kind_persisted_not_probed(spark, tmp_path):
     """Delete routing reads the PERSISTED layout kind, never a local
     os.path.isdir(doclens) probe (advisor finding, round 6 — the probe
-    silently misroutes layouts on s3://or hdfs://). Pins: (a) the flag
-    round-trips through save_meta/load for both layout kinds; (b) legacy
-    meta files without the key infer positional from the persisted
-    postings schema (positions array vs tf)."""
-    import json
-    import os
-
+    silently misroutes layouts on s3://or hdfs://). The flag
+    round-trips through save_meta/load for both layout kinds."""
     from vector_db_example_spark.index.inverted import (
         InvertedIndex,
         build_inverted_index,
@@ -165,20 +160,6 @@ def test_layout_kind_persisted_not_probed(spark, tmp_path):
     assert pos.positional and not bm25.positional
     assert InvertedIndex.load(pos.path).positional
     assert not InvertedIndex.load(bm25.path).positional
-
-    # Simulate the legacy meta through fsio (the layer any writer of
-    # this file uses) — a plain open() rewrite would strand the Hadoop
-    # .crc sidecar and fail the next read with a ChecksumException,
-    # which is checksum verification working, not the scenario under
-    # test (real pre-flag metas carry no stale sidecar).
-    from vector_db_example_spark import fsio
-
-    for idx, want in ((pos, True), (bm25, False)):
-        meta_path = os.path.join(idx.path, "_inverted_meta.json")
-        meta = json.loads(fsio.read_text(meta_path))
-        del meta["positional"]  # legacy meta written before the flag
-        fsio.write_text(meta_path, json.dumps(meta))
-        assert InvertedIndex.load(idx.path).positional is want
 
 
 def test_positional_compaction_folds_tombstones_and_heals_replay(spark, tmp_path):

@@ -20,9 +20,8 @@ table. Every hash is the binary form of the hex string the
 batch operators and the SQL oracles compute (``key = unhex(
 lsh_band_keys(...).key)``, ``sig[i] = unhex(minhash_signature(...)[i])``
 — a bijection, so every equality the layout tests is the hex one), at
-half the bytes. Layouts whose meta predates ``hash_format`` store the
-hex strings; reads unhex them, appends keep writing hex, and
-``dedup_index_compact`` rewrites them binary.
+half the bytes. This is the one stored format: ``DedupIndex.load``
+rejects a meta from before it (rebuild such a layout to upgrade).
 ``dedup_index_filter`` checks a batch with:
 
 1. one narrow scan of the layout reading just ``(band, key)`` (column
@@ -115,21 +114,8 @@ from . import deletes
 @dataclass
 class DedupIndex:
     """Band-partitioned dedup layout on disk (the dedup twin of
-    index/lsh.py::LSHIndex).
-
-    ``sig_buckets`` is 0 for every layout built or compacted now: the
-    signature side-car is one unpartitioned table, so an append lands
-    one file. A meta with ``sig_buckets`` > 0 is a legacy layout whose
-    side-car is partitioned by ``sig_bucket = pmod(id, sig_buckets)``:
-    reads go through the side-car root (the discovered partition column
-    is dropped), appends keep landing in its bucket directories (a flat
-    file under a partitioned root would break partition discovery), and
-    ``dedup_index_compact`` rewrites it flat. Metas written before the
-    field existed load as 0.
-
-    ``hash_format`` is how the hashes are stored: ``"binary"`` 16-byte
-    md5 digests, or ``"hex"`` 32-character strings — the format of
-    metas written before the field existed, which load as ``"hex"``."""
+    index/lsh.py::LSHIndex): 16-byte md5 digests, and an unpartitioned
+    signature side-car."""
 
     path: str
     shingle_k: int
@@ -137,8 +123,6 @@ class DedupIndex:
     bands: int
     id_col: str
     text_col: str
-    sig_buckets: int = 0
-    hash_format: str = "binary"
 
     @property
     def rows_per_band(self) -> int:
@@ -162,21 +146,28 @@ class DedupIndex:
             "bands": self.bands,
             "id_col": self.id_col,
             "text_col": self.text_col,
-            "sig_buckets": self.sig_buckets,
-            "hash_format": self.hash_format,
+            # Format stamp: a hex-digest meta is the one that lacks it.
+            "hash_format": "binary",
         }
         fsio.write_text(f"{self.path}/_dedup_meta.json", json.dumps(meta))
 
     @classmethod
     def load(cls, path: str) -> "DedupIndex":
+        """Reopen a layout from its meta. A meta of an earlier stored
+        format (hex digests, or a ``sig_bucket``-partitioned side-car)
+        raises ``ValueError``: rebuild the layout to upgrade it."""
         meta = json.loads(fsio.read_text(f"{path}/_dedup_meta.json"))
-        meta.setdefault("sig_buckets", 0)  # pre-round-11 metas: unpartitioned
-        meta.setdefault("hash_format", "hex")  # metas before binary digests
+        if meta.pop("hash_format", None) != "binary":
+            raise ValueError(
+                f"{path}: dedup meta has no hash_format 'binary' (a hex-digest "
+                "layout); rebuild it"
+            )
+        if meta.pop("sig_buckets", 0):
+            raise ValueError(
+                f"{path}: dedup meta has sig_buckets > 0 (a bucketed signature "
+                "side-car); rebuild it"
+            )
         return cls(path=path, **meta)
-
-
-def _hash_type(index: DedupIndex) -> T.DataType:
-    return T.BinaryType() if index.hash_format == "binary" else T.StringType()
 
 
 def _band_schema(index: DedupIndex) -> T.StructType:
@@ -185,7 +176,7 @@ def _band_schema(index: DedupIndex) -> T.StructType:
     return T.StructType(
         [
             T.StructField(index.id_col, T.LongType(), True),
-            T.StructField("key", _hash_type(index), True),
+            T.StructField("key", T.BinaryType(), True),
             T.StructField("band", T.IntegerType(), True),
         ]
     )
@@ -366,60 +357,26 @@ def _sig_schema(index: DedupIndex) -> T.StructType:
     return T.StructType(
         [
             T.StructField(index.id_col, T.LongType(), True),
-            T.StructField("sig", T.ArrayType(_hash_type(index)), True),
+            T.StructField("sig", T.ArrayType(T.BinaryType()), True),
         ]
     )
 
 
-def _sig_bucket_expr(index: DedupIndex, id_expr):
-    """The id → bucket mapping of a legacy bucketed side-car
-    (``sig_buckets`` > 0), which its appends keep writing."""
-    return F.pmod(id_expr.cast("long"), F.lit(index.sig_buckets)).cast("int")
-
-
-def _sig_elements(index: DedupIndex, fn):
-    """``sig`` with ``fn`` applied to each of its n_hashes elements —
-    unrolled, so no lambda is interpreted per element."""
-    return F.array(*[fn(F.col("sig")[i]) for i in range(index.n_hashes)])
-
-
 def _read_bands(spark: SparkSession, index: DedupIndex) -> DataFrame:
     """Read the band-partitioned root with the meta-derived schema, so a
-    declared-empty layout (zero parquet footers) stays well-typed. Keys
-    always read as digests: a hex layout unhexes them here."""
-    bands = (
+    declared-empty layout (zero parquet footers) stays well-typed."""
+    return (
         spark.read.schema(_band_schema(index))
         .option("basePath", index.path)
-        .parquet(index.path)
+        .parquet(fsio.glob_escape(index.path))
     )
-    if index.hash_format == "hex":
-        bands = bands.withColumn("key", F.unhex("key"))
-    return bands
 
 
 def _read_sigs(spark: SparkSession, index: DedupIndex) -> DataFrame:
-    """The signature side-car ``(id, sig)``, its elements always
-    digests. A legacy bucketed side-car reads through its root too: the
-    select drops the discovered ``sig_bucket`` partition column."""
-    sigs = spark.read.schema(_sig_schema(index)).parquet(index.sigs_path)
-    if index.hash_format == "hex":
-        sigs = sigs.withColumn("sig", _sig_elements(index, F.unhex))
-    return sigs.select(index.id_col, "sig")
-
-
-def _stored(index: DedupIndex, rows: DataFrame) -> DataFrame:
-    """Digest rows (``key`` and/or ``sig``) in the layout's stored
-    format: an append to a hex layout writes hex, so its files keep one
-    schema until compaction rewrites the layout binary."""
-    if index.hash_format == "binary":
-        return rows
-    if "key" in rows.columns:
-        rows = rows.withColumn("key", F.lower(F.hex("key")))
-    if "sig" in rows.columns:
-        rows = rows.withColumn(
-            "sig", _sig_elements(index, lambda d: F.lower(F.hex(d)))
-        )
-    return rows
+    """The signature side-car ``(id, sig)``."""
+    return spark.read.schema(_sig_schema(index)).parquet(
+        fsio.glob_escape(index.sigs_path)
+    )
 
 
 def _live(index: DedupIndex, df: DataFrame) -> DataFrame:
@@ -461,10 +418,9 @@ def build_dedup_index(
 ) -> DedupIndex:
     """Shingle+minhash the accepted corpus ONCE and persist its band
     keys partitioned by ``band`` plus the unpartitioned signature
-    side-car (the meta records ``sig_buckets: 0``). An empty ``docs``
-    declares an empty layout (first-crawl bootstrap) — the schema is
-    meta-derived, so reads and the first filter work before any
-    append."""
+    side-car. An empty ``docs`` declares an empty layout (first-crawl
+    bootstrap) — the schema is meta-derived, so reads and the first
+    filter work before any append."""
     if n_hashes % bands:
         raise ValueError(f"n_hashes={n_hashes} not divisible by bands={bands}")
     index = DedupIndex(
@@ -733,22 +689,15 @@ def dedup_index_append_rows(index: DedupIndex, sig_band_rows: DataFrame) -> None
 
     Both writes are size-gated collapses
     (sources/tables.py::append_repartition): a micro-batch append lands
-    ONE file in the unpartitioned side-car (one per touched
-    ``sig_bucket`` of a legacy bucketed layout, until a compaction
-    rewrites it flat) and one per ``band`` partition, instead of
-    (tasks × partitions) shards; a frame over the collapse ceiling
-    keeps full write parallelism (compaction owns its file hygiene)."""
+    ONE file in the unpartitioned side-car and one per ``band``
+    partition, instead of (tasks × partitions) shards; a frame over the
+    collapse ceiling keeps full write parallelism (compaction owns its
+    file hygiene)."""
     id_col = index.id_col
-    sigs = _stored(index, sig_band_rows.filter(F.col("band") == 0).select(id_col, "sig"))
-    if index.sig_buckets:
-        sigs = sigs.withColumn("sig_bucket", _sig_bucket_expr(index, F.col(id_col)))
-        append_repartition(sigs, "sig_bucket").write.partitionBy("sig_bucket").mode(
-            "append"
-        ).parquet(index.sigs_path)
-    else:
-        append_repartition(sigs).write.mode("append").parquet(index.sigs_path)
+    sigs = sig_band_rows.filter(F.col("band") == 0).select(id_col, "sig")
+    append_repartition(sigs).write.mode("append").parquet(index.sigs_path)
     append_repartition(
-        _stored(index, sig_band_rows.select(id_col, "band", "key")), "band"
+        sig_band_rows.select(id_col, "band", "key"), "band"
     ).write.partitionBy("band").mode("append").parquet(index.path)
 
 
@@ -819,15 +768,7 @@ def dedup_index_compact(
 
     Delete-to-empty is well-typed: a fully-tombstoned layout writes
     zero data files and reads back through the meta-derived schema, the
-    same declared-empty path the first-crawl bootstrap uses.
-
-    The new layout always has the unpartitioned side-car, so compacting
-    a legacy bucketed layout (``sig_buckets`` > 0) is its migration:
-    the signatures are already persisted, bucketing only changed WHERE
-    their rows lived, so the verdicts are unchanged. It also always
-    stores binary digests, so compacting a hex layout (a meta without
-    ``hash_format``) is its migration too — the reads unhex, the writes
-    are the compact form, verdicts unchanged."""
+    same declared-empty path the first-crawl bootstrap uses."""
     out = DedupIndex(
         path=new_path,
         shingle_k=index.shingle_k,

@@ -40,7 +40,9 @@ def tombstoned(df: DataFrame, tomb_path: str, id_col: str) -> DataFrame | None:
     spark = df.sparkSession
     if not fsio.exists(tomb_path, spark):
         return None
-    return spark.read.schema(T.StructType([df.schema[id_col]])).parquet(tomb_path)
+    return spark.read.schema(T.StructType([df.schema[id_col]])).parquet(
+        fsio.glob_escape(tomb_path)
+    )
 
 
 def live(df: DataFrame, tomb_path: str, id_col: str) -> DataFrame:

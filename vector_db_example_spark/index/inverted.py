@@ -36,11 +36,13 @@ carries everything scoring needs and the query plan has NO corpus-sized
 operand at all (plan-pinned in tests/test_inverted.py). ``doclens/``
 stays authoritative for maintenance — stats recomputes, delete's victim
 resolution and stats decrement, layout stats — none of which are on the
-query path. Layouts written before the field existed keep the legacy
-join path (routed on the persisted postings schema), and ONE ordinary
-compaction migrates them — the compactor enriches legacy rows from
-``doclens/`` (an offline corpus join, amortized across every future
-query) and writes the denormalized format.
+query path, and each reads it with a declared schema (the postings' id
+field plus ``__dl int``), so none pays a schema-inference job.
+
+One stored format per layout kind: ``InvertedIndex.load`` rejects a
+meta from before it (no ``positional`` flag, no persisted postings
+schema, or BM25 postings without ``__dl``) with a ``ValueError`` that
+names the field; rebuild such a layout to upgrade it.
 
 Determinism: `crc32` here is java.util.zip.CRC32 (Spark's `F.crc32`),
 the same polynomial as Python's `zlib.crc32` — the driver computes query
@@ -54,7 +56,7 @@ import zlib
 from collections.abc import Sequence
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .. import fsio
 from . import deletes
@@ -83,7 +85,8 @@ class InvertedIndex:
     #: a fully-tombstoned index, merging empty segments, or building over
     #: an empty corpus leaves a directory schema inference cannot read
     #: (doclens/stats are non-partitioned; an empty write still leaves a
-    #: schema footer). ``None`` falls back to inference.
+    #: schema footer). Every build, compaction and merge sets it, and
+    #: ``load`` rejects a meta without it.
     postings_schema: str | None = None
     #: True for POSITIONAL-ONLY layouts (build_positional_index): no
     #: doclens/stats side-tables exist, so deletes must not attempt the
@@ -124,14 +127,18 @@ class InvertedIndex:
     @classmethod
     def load(cls, path: str) -> "InvertedIndex":
         """Reopen a layout from its persisted meta — same cross-process
-        handle story as IVFIndex.load / LSHIndex.load."""
+        handle story as IVFIndex.load / LSHIndex.load. A meta of an
+        earlier stored format raises ``ValueError`` naming the field
+        (module docstring)."""
         meta = json.loads(fsio.read_text(f"{path}/_inverted_meta.json"))
-        if "positional" not in meta:
-            # Meta predating the flag: a positional layout is the one
-            # whose persisted postings schema carries the positions
-            # array (BM25 postings carry tf instead).
-            schema = meta.get("postings_schema") or ""
-            meta["positional"] = '"positions"' in schema
+        for field in ("positional", "postings_schema"):
+            if meta.get(field) is None:
+                raise ValueError(f"{path}: inverted meta has no {field}; rebuild it")
+        posts = T.StructType.fromJson(json.loads(meta["postings_schema"]))
+        if not meta["positional"] and "__dl" not in posts.fieldNames():
+            raise ValueError(
+                f"{path}: BM25 postings_schema has no __dl field; rebuild it"
+            )
         return cls(path=path, **meta)
 
 
@@ -152,20 +159,18 @@ def _query_buckets(index: InvertedIndex, terms) -> list[int]:
     return sorted({zlib.crc32(t.encode("utf-8")) % index.n_buckets for t in terms})
 
 
-def _postings_carry_dl(index: InvertedIndex) -> bool:
-    """True when the layout's posting rows carry the denormalized
-    per-doc token length ``__dl`` (post-round-11 builds) — the scorers
-    then skip the corpus-sized doclens join entirely. Routed on the
-    PERSISTED postings schema, same discipline as the ``positional``
-    flag: a filesystem or data probe would cost a read and could
-    misroute an empty layout."""
-    if not index.postings_schema:
-        return False
-    try:
-        fields = json.loads(index.postings_schema).get("fields", [])
-    except ValueError:
-        return False
-    return any(f.get("name") == "__dl" for f in fields)
+def _read_stats(spark: SparkSession, index: InvertedIndex) -> DataFrame:
+    return spark.read.schema(_STATS_SCHEMA).parquet(fsio.glob_escape(index.stats_path))
+
+
+def _read_doclens(spark: SparkSession, index: InvertedIndex) -> DataFrame:
+    """The ``doclens/`` table, read with a declared schema — the
+    postings' id field plus ``__dl int`` — instead of an inferred one."""
+    posts = T.StructType.fromJson(json.loads(index.postings_schema))
+    schema = T.StructType(
+        [posts[index.id_col], T.StructField("__dl", T.IntegerType(), True)]
+    )
+    return spark.read.schema(schema).parquet(fsio.glob_escape(index.doclens_path))
 
 
 def _doc_postings(
@@ -247,12 +252,9 @@ def bm25_search_inverted(
     integer-exact inputs) — which is what lets the driver oracle state
     exact parity with the full-scan SQL.
 
-    Plan shape: on denormalized layouts (``__dl`` on the posting rows)
-    the candidate's doc length comes out of the SAME pruned postings
-    read as its tf — no operand in the plan is corpus-sized (the
-    doclens join a legacy layout still takes re-shuffles the whole
-    per-doc length table per query at scale; module docstring, and one
-    compaction migrates)."""
+    Plan shape: the candidate's doc length (``__dl`` on the posting
+    rows) comes out of the SAME pruned postings read as its tf — no
+    operand in the plan is corpus-sized (module docstring)."""
     terms = list(dict.fromkeys(query_terms))
     if not terms:
         raise ValueError("query_terms must be non-empty")
@@ -264,18 +266,17 @@ def bm25_search_inverted(
         .filter(F.col("term").isin(terms)),  # within-bucket residual filter
     )
 
-    carry_dl = _postings_carry_dl(index)
-    tf_aggs = [
-        F.sum(F.when(F.col("term") == t, F.col("tf")).otherwise(0))
-        .cast("double")
-        .alias(f"__tf{i}")
-        for i, t in enumerate(terms)
-    ]
-    if carry_dl:
+    tf = posts.groupBy(id_col).agg(
+        *[
+            F.sum(F.when(F.col("term") == t, F.col("tf")).otherwise(0))
+            .cast("double")
+            .alias(f"__tf{i}")
+            for i, t in enumerate(terms)
+        ],
         # every posting row of a doc carries the same __dl; max picks it
         # without widening the groupBy key
-        tf_aggs.append(F.max("__dl").alias("__dl"))
-    tf = posts.groupBy(id_col).agg(*tf_aggs)
+        F.max("__dl").alias("__dl"),
+    )
     dfs = posts.groupBy().agg(
         *[
             F.count_distinct(F.when(F.col("term") == t, F.col(id_col)))
@@ -284,14 +285,8 @@ def bm25_search_inverted(
             for i, t in enumerate(terms)
         ]
     )
-    stats = spark.read.schema(_STATS_SCHEMA).parquet(index.stats_path)
-
-    base = (
-        tf
-        if carry_dl
-        else tf.join(spark.read.parquet(index.doclens_path), id_col)
-    )
-    scored = base.crossJoin(F.broadcast(dfs)).crossJoin(F.broadcast(stats))
+    stats = _read_stats(spark, index)
+    scored = tf.crossJoin(F.broadcast(dfs)).crossJoin(F.broadcast(stats))
     return (
         scored.select(
             F.col(id_col), F.round(bm25_score_expr(len(terms)), 6).alias("bm25")
@@ -313,14 +308,12 @@ def append_to_inverted_index(index: InvertedIndex, docs: DataFrame) -> None:
     Same single-writer assumption as the IVF append path: concurrent
     appends to one layout need a transactional table format underneath.
 
-    Partial-append visibility (denormalized layouts — advisor note,
-    round 11): with ``__dl`` on the posting rows, a document becomes
-    searchable as soon as its postings land — BEFORE the doclens and
-    stats writes below complete — so in the crash/replay window a
-    reader can score it against the pre-append ``__n``/``__tot``
-    (slightly stale idf/avgdl; the doc's own length is already exact
-    on its rows). Legacy layouts hid such docs via the doclens inner
-    join until the whole append finished. The window is narrow
+    Partial-append visibility (advisor note, round 11): with ``__dl``
+    on the posting rows, a document becomes searchable as soon as its
+    postings land — BEFORE the doclens and stats writes below complete
+    — so in the crash/replay window a reader can score it against the
+    pre-append ``__n``/``__tot`` (slightly stale idf/avgdl; the doc's
+    own length is already exact on its rows). The window is narrow
     (single-writer, three tiny writes — postings and doclens
     overlapped, stats after both), the scores involved are
     marginally-stale corpus constants rather than wrong per-doc
@@ -336,12 +329,6 @@ def append_to_inverted_index(index: InvertedIndex, docs: DataFrame) -> None:
     spark = docs.sparkSession
     id_col, text_col = index.id_col, index.text_col
     new_posts = _doc_postings(docs, id_col, text_col, index.n_buckets)
-    if not _postings_carry_dl(index):
-        # Legacy layout: match its persisted row shape — mixing
-        # denormalized rows into an un-migrated layout would leave the
-        # __dl column null on the old rows when schema-merged. One
-        # compaction migrates the whole layout instead.
-        new_posts = new_posts.drop("__dl")
 
     def _append_postings() -> None:
         (
@@ -384,7 +371,7 @@ def append_to_inverted_index(index: InvertedIndex, docs: DataFrame) -> None:
             .cast("double")
             .alias("_inc_tot"),
         )
-        .crossJoin(spark.read.schema(_STATS_SCHEMA).parquet(index.stats_path))
+        .crossJoin(_read_stats(spark, index))
         .select(
             (F.col("_inc_n") + F.col("__n")).alias("__n"),
             (F.col("_inc_tot") + F.col("__tot")).alias("__tot"),
@@ -456,43 +443,17 @@ def compact_inverted_index(
     max(__dl) per doc (identical rows, so max == the true value) and
     RECOMPUTES the stats row from the deduplicated doclens instead of
     copying the possibly double-bumped one. After compaction, BM25
-    scores are exactly those of a clean build on the live docs.
-
-    Compaction is also the MIGRATION step for layouts written before
-    the denormalized ``__dl`` (module docstring): legacy posting rows
-    are enriched from the deduplicated doclens — one offline corpus
-    join, amortized across every future query — and the fresh layout
-    always writes the denormalized format, so its searches drop the
-    per-query doclens join."""
+    scores are exactly those of a clean build on the live docs."""
     doclens = (
-        _live(index, spark.read.parquet(index.doclens_path))
+        _live(index, _read_doclens(spark, index))
         .groupBy(index.id_col)
         .agg(F.max("__dl").alias("__dl"))
     )
-    live = _live(index, _read_postings(spark, index))
-    if not _postings_carry_dl(index):
-        live = live.select("term", index.id_col, "tf", "bucket").join(
-            doclens, index.id_col
-        )
     posts = (
-        live.groupBy("term", index.id_col, "bucket")
+        _live(index, _read_postings(spark, index))
+        .groupBy("term", index.id_col, "bucket")
         .agg(F.max("tf").alias("tf"), F.max("__dl").alias("__dl"))
         .select("term", index.id_col, "tf", "__dl", "bucket")
-    )
-    posts.write.mode("overwrite").partitionBy("bucket").parquet(
-        f"{new_path}/postings"
-    )
-    doclens.write.mode("overwrite").parquet(f"{new_path}/doclens")
-    # stats from the deduped doclens (integer-exact counts cast to double,
-    # same math as the build path) — heals any replayed stats bumps
-    (
-        spark.read.parquet(f"{new_path}/doclens")
-        .select(
-            F.count(F.lit(1)).cast("double").alias("__n"),
-            F.coalesce(F.sum("__dl"), F.lit(0)).cast("double").alias("__tot"),
-        )
-        .write.mode("overwrite")
-        .parquet(f"{new_path}/stats")
     )
     out = InvertedIndex(
         path=new_path,
@@ -500,6 +461,19 @@ def compact_inverted_index(
         id_col=index.id_col,
         text_col=index.text_col,
         postings_schema=posts.schema.json(),
+    )
+    posts.write.mode("overwrite").partitionBy("bucket").parquet(out.postings_path)
+    doclens.write.mode("overwrite").parquet(out.doclens_path)
+    # stats from the deduped doclens (integer-exact counts cast to double,
+    # same math as the build path) — heals any replayed stats bumps
+    (
+        _read_doclens(spark, out)
+        .select(
+            F.count(F.lit(1)).cast("double").alias("__n"),
+            F.coalesce(F.sum("__dl"), F.lit(0)).cast("double").alias("__tot"),
+        )
+        .write.mode("overwrite")
+        .parquet(out.stats_path)
     )
     out.save_meta()
     return out
@@ -539,7 +513,7 @@ def delete_from_inverted_index(index: InvertedIndex, ids) -> int:
     ids = [int(i) for i in ids]
     if not ids:
         return 0
-    doclens = _live(index, spark.read.parquet(index.doclens_path))
+    doclens = _live(index, _read_doclens(spark, index))
     victims = deletes.matching(doclens, ids, index.id_col)
     # The decremented stats row is aggregated AND materialized (one job:
     # the victims' decrement cross-joined with the old 1-row table, no
@@ -552,7 +526,7 @@ def delete_from_inverted_index(index: InvertedIndex, ids) -> int:
             F.count(F.lit(1)).cast("double").alias("_dn"),
             F.coalesce(F.sum("__dl"), F.lit(0)).cast("double").alias("_dtot"),
         )
-        .crossJoin(spark.read.schema(_STATS_SCHEMA).parquet(index.stats_path))
+        .crossJoin(_read_stats(spark, index))
         .select(
             (F.col("__n") - F.col("_dn")).alias("__n"),
             (F.col("__tot") - F.col("_dtot")).alias("__tot"),
@@ -759,16 +733,15 @@ def bm25_search_inverted_batch(
         _read_postings(spark, index, _query_buckets(index, all_terms))
         .filter(F.col("term").isin(all_terms)),
     )
-    carry_dl = _postings_carry_dl(index)
-    tf_aggs = [
-        F.sum(F.when(F.col("term") == t, F.col("tf")).otherwise(0))
-        .cast("double")
-        .alias(f"__tf{tcol[t]}")
-        for t in all_terms
-    ]
-    if carry_dl:
-        tf_aggs.append(F.max("__dl").alias("__dl"))
-    tf = posts.groupBy(id_col).agg(*tf_aggs)
+    tf = posts.groupBy(id_col).agg(
+        *[
+            F.sum(F.when(F.col("term") == t, F.col("tf")).otherwise(0))
+            .cast("double")
+            .alias(f"__tf{tcol[t]}")
+            for t in all_terms
+        ],
+        F.max("__dl").alias("__dl"),
+    )
     dfs = posts.groupBy().agg(
         *[
             F.count_distinct(F.when(F.col("term") == t, F.col(id_col)))
@@ -777,16 +750,8 @@ def bm25_search_inverted_batch(
             for t in all_terms
         ]
     )
-    base = (
-        (
-            tf
-            if carry_dl
-            else tf.join(spark.read.parquet(index.doclens_path), id_col)
-        )
-        .crossJoin(F.broadcast(dfs))
-        .crossJoin(
-            F.broadcast(spark.read.schema(_STATS_SCHEMA).parquet(index.stats_path))
-        )
+    base = tf.crossJoin(F.broadcast(dfs)).crossJoin(
+        F.broadcast(_read_stats(spark, index))
     )
     scored = base.select(
         F.col(id_col),
@@ -863,49 +828,12 @@ def merge_inverted_indexes(
 
     posts = None
     for seg in segments:
-        p = _live(seg, _read_postings(spark, seg))
-        if _postings_carry_dl(seg):
-            p = p.select("term", id_col, "tf", "__dl")
-        else:
-            # Legacy segment: enrich from its deduplicated doclens so
-            # the merged layout is always denormalized (merge doubles
-            # as migration, same as compaction).
-            seg_lens = (
-                _live(seg, spark.read.parquet(seg.doclens_path))
-                .groupBy(id_col)
-                .agg(F.max("__dl").alias("__dl"))
-            )
-            p = p.select("term", id_col, "tf").join(seg_lens, id_col)
+        p = _live(seg, _read_postings(spark, seg)).select("term", id_col, "tf", "__dl")
         posts = p if posts is None else posts.unionByName(p)
     merged_posts = (
         posts.groupBy("term", id_col)
         .agg(F.max("tf").alias("tf"), F.max("__dl").alias("__dl"))
         .withColumn("bucket", F.crc32(F.col("term").cast("binary")) % out_buckets)
-    )
-    (
-        merged_posts.write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{new_path}/postings")
-    )
-
-    lens = None
-    for seg in segments:
-        d = _live(seg, spark.read.parquet(seg.doclens_path))
-        lens = d if lens is None else lens.unionByName(d)
-    (
-        lens.groupBy(id_col)
-        .agg(F.max("__dl").alias("__dl"))
-        .write.mode("overwrite")
-        .parquet(f"{new_path}/doclens")
-    )
-    (
-        spark.read.parquet(f"{new_path}/doclens")
-        .select(
-            F.count(F.lit(1)).cast("double").alias("__n"),
-            F.coalesce(F.sum("__dl"), F.lit(0)).cast("double").alias("__tot"),
-        )
-        .write.mode("overwrite")
-        .parquet(f"{new_path}/stats")
     )
     out = InvertedIndex(
         path=new_path,
@@ -913,6 +841,29 @@ def merge_inverted_indexes(
         id_col=id_col,
         text_col=first.text_col,
         postings_schema=merged_posts.schema.json(),
+    )
+    merged_posts.write.mode("overwrite").partitionBy("bucket").parquet(
+        out.postings_path
+    )
+
+    lens = None
+    for seg in segments:
+        d = _live(seg, _read_doclens(spark, seg))
+        lens = d if lens is None else lens.unionByName(d)
+    (
+        lens.groupBy(id_col)
+        .agg(F.max("__dl").alias("__dl"))
+        .write.mode("overwrite")
+        .parquet(out.doclens_path)
+    )
+    (
+        _read_doclens(spark, out)
+        .select(
+            F.count(F.lit(1)).cast("double").alias("__n"),
+            F.coalesce(F.sum("__dl"), F.lit(0)).cast("double").alias("__tot"),
+        )
+        .write.mode("overwrite")
+        .parquet(out.stats_path)
     )
     out.save_meta()
     return out

@@ -58,8 +58,8 @@ class IVFIndex:
     #: stay well-defined after a delete empties every cell partition —
     #: schema inference over an empty partitioned directory raises
     #: UNABLE_TO_INFER_SCHEMA (found by the lifecycle property sweep in
-    #: tests/test_properties.py). ``None`` only for handles predating
-    #: the field; those fall back to inference.
+    #: tests/test_properties.py). Every build and compaction sets it,
+    #: and ``load`` rejects a meta without it.
     schema_json: str | None = None
 
     @property
@@ -87,12 +87,14 @@ class IVFIndex:
     @classmethod
     def load(cls, path: str) -> "IVFIndex":
         meta = json.loads(fsio.read_text(f"{path}/_ivf_meta.json"))
+        if meta.get("schema") is None:
+            raise ValueError(f"{path}: IVF meta has no schema; rebuild it")
         return cls(
             path=path,
             centroids=np.asarray(meta["centroids"], dtype=np.float64),
             vector_col=meta["vector_col"],
             id_col=meta["id_col"],
-            schema_json=meta.get("schema"),
+            schema_json=meta["schema"],
         )
 
 
@@ -438,7 +440,7 @@ def compact_ivf_index(
             centroids=index.centroids,
             vector_col=index.vector_col,
             id_col=index.id_col,
-            schema_json=index.schema_json or assigned.schema.json(),
+            schema_json=index.schema_json,
         )
         out.save_meta()
         return out

@@ -127,8 +127,8 @@ class LSHIndex:
     #: Layout schema (StructType JSON) persisted at build time — the
     #: IVF twin of index/ivf.py::IVFIndex.schema_json: a delete that
     #: empties every ``bucket=`` directory must leave reads well-typed
-    #: instead of raising UNABLE_TO_INFER_SCHEMA. ``None`` only for
-    #: handles predating the field (falls back to inference).
+    #: instead of raising UNABLE_TO_INFER_SCHEMA. Every build and
+    #: compaction sets it, and ``load`` rejects a meta without it.
     schema_json: str | None = None
 
     @property
@@ -149,12 +149,14 @@ class LSHIndex:
     @classmethod
     def load(cls, path: str) -> "LSHIndex":
         meta = json.loads(fsio.read_text(f"{path}/_lsh_meta.json"))
+        if meta.get("schema") is None:
+            raise ValueError(f"{path}: LSH meta has no schema; rebuild it")
         return cls(
             path=path,
             planes=np.asarray(meta["planes"], dtype=np.float64),
             vector_col=meta["vector_col"],
             id_col=meta["id_col"],
-            schema_json=meta.get("schema"),
+            schema_json=meta["schema"],
         )
 
 

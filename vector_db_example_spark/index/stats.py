@@ -99,7 +99,7 @@ def inverted_layout_stats(spark: SparkSession, index) -> DataFrame:
     ``avg_doclen`` as an exact integer-sum quotient, the same number
     BM25's stored stats should agree with after any append/delete
     sequence."""
-    from .inverted import _live, _read_postings
+    from .inverted import _live, _read_doclens, _read_postings
 
     postings = _read_postings(spark, index)
     live_posts = _live(index, postings)
@@ -122,7 +122,7 @@ def inverted_layout_stats(spark: SparkSession, index) -> DataFrame:
             .alias("total_tokens"),
         )
     else:
-        doclens = _live(index, spark.read.parquet(index.doclens_path))
+        doclens = _live(index, _read_doclens(spark, index))
         dl = doclens.agg(
             F.countDistinct(index.id_col).cast("double").alias("docs_live"),
             F.coalesce(F.sum("__dl"), F.lit(0)).cast("double").alias("total_tokens"),

@@ -208,7 +208,7 @@ def overlapped(spark: SparkSession):
 def read_layout(
     spark: SparkSession,
     root: str,
-    schema_json: str | None,
+    schema_json: str,
     part_col: str | None = None,
     values=None,
 ) -> DataFrame:
@@ -239,28 +239,20 @@ def read_layout(
     layout schema. Nothing is cached: each call globs afresh, so appends
     are visible at once.
 
-    Layout handles predating the persisted schema keep the inferred
-    root read (plus the filter).
-
     ``spark.read`` globs every path it is given, so each read path goes
     through ``fsio.glob_escape``: a root holding ``[``, ``{``, ``*`` or
     ``?`` reads itself, not the siblings its name matches as a pattern."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    reader = spark.read
-    if schema_json:
-        reader = reader.schema(StructType.fromJson(json.loads(schema_json)))
+    reader = spark.read.schema(StructType.fromJson(json.loads(schema_json)))
     if values is None:
         return reader.parquet(fsio.glob_escape(root))
     values = [int(v) for v in values]
-    if schema_json:
-        names = fsio.existing_children(root, (f"{part_col}={v}" for v in values), spark)
-        dirs = [fsio.glob_escape(f"{root}/{n}") for n in names]
-        # no probed directory: zero paths read as an empty frame of the schema
-        df = reader.option("basePath", root).parquet(*dirs)
-    else:
-        df = reader.parquet(fsio.glob_escape(root))
+    names = fsio.existing_children(root, (f"{part_col}={v}" for v in values), spark)
+    dirs = [fsio.glob_escape(f"{root}/{n}") for n in names]
+    # no probed directory: zero paths read as an empty frame of the schema
+    df = reader.option("basePath", root).parquet(*dirs)
     return df.filter(F.col(part_col).isin(values))
 
 
